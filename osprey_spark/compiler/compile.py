@@ -77,14 +77,6 @@ ENUM_CONSTANTS: dict[str, dict[str, object]] = {
 }
 
 
-def _state_bucket_count() -> int:
-    # lazy: streaming/__init__ imports pipeline which imports this
-    # module, so a top-level import here would be circular
-    from ..streaming.buckets import state_bucket_count
-
-    return state_bucket_count()
-
-
 def register_enum(name: str, members: dict[str, object]) -> None:
     ENUM_CONSTANTS[name] = dict(members)
 TIMESTAMP = "__timestamp"
@@ -934,8 +926,6 @@ class CompiledRuleset:
 
         name = spec["name"]
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        if df.isStreaming:
-            return self._join_cache_streaming(df, spec, sec)
         rid = "__cache_rid"
         if rid not in df.columns:
             # the rid must be IDENTICAL in every branch that re-reads
@@ -1003,201 +993,30 @@ class CompiledRuleset:
             )
         )
         df = df.join(looked_up, df[rid] == looked_up["_crid"], "left").drop("_crid")
-        result = F.coalesce(F.col("_cval"), spec["default_col"])
-        if spec["gate"] is not None:
-            result = F.when(
-                F.coalesce(spec["gate"], F.lit(False)), result
-            ).otherwise(spec["default_col"])
-        return df.select("*", result.alias(name)).drop("_cval")
+        return df.select(
+            "*", self._cache_result(F.col("_cval"), spec).alias(name)
+        ).drop("_cval")
 
     def _join_window_count(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one IncrementWindow/GetWindowCount. Batch frames:
+        """Resolve one IncrementWindow/GetWindowCount on a BATCH frame:
         event-time range window (one shuffle on the key, whole-stage
-        codegen). Streaming frames: applyInPandasWithState keyed by
-        the key value — the state is the deque of in-window increment
+        codegen). Streaming frames route through the fused state pass,
+        whose window fold carries the deque of in-window increment
         timestamps (the Redis zset, ref example_plugins/src/udfs/
-        cache.py:161-227), carried across micro-batches; every input
-        column passes through, so no stream-stream join-back is
-        needed. Late rows within a batch are handled by sorting on
-        event time; cross-batch late data follows watermark limits
-        (counts are judged against the retained deque)."""
-        name = spec["name"]
+        cache.py:161-227) per key."""
+        from pyspark.sql import Window as W
+
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
         win = int(spec["window_seconds"])
         cap = int(spec["cap"])
         gate = spec["gate"]
-        if not df.isStreaming:
-            from pyspark.sql import Window as W
-
-            w = W.partitionBy(spec["key_col"]).orderBy(sec).rangeBetween(-(win - 1), 0)
-            count = F.sum(F.when(spec["incremented"], 1).otherwise(0)).over(w)
-            if cap:
-                count = F.least(count, F.lit(cap))
-            if gate is not None:
-                count = F.when(F.coalesce(gate, F.lit(False)), count).otherwise(F.lit(0))
-            return df.select("*", F.coalesce(count, F.lit(0)).cast("long").alias(name))
-
-        import json as _json
-        import os as _os
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        # KEY COALESCING: the state op groups by hash-BUCKET of the key,
-        # not the key itself, and keeps a {key: deque} map per bucket.
-        # applyInPandasWithState pays a fixed per-GROUP cost (Arrow
-        # slicing + state round-trip, measured ~0.4 ms); with millions
-        # of conversations that per-group tax IS the throughput ceiling
-        # (benched 2.6x: ~20k -> ~52k turns/s on the window-counter
-        # rule at 40k convs). Bucketing amortizes it ~(keys/buckets)x
-        # while per-key semantics stay bit-identical: rows sort
-        # (key, sec) and each key's segment folds against its own
-        # deque, exactly as the per-key grouping did. State per bucket
-        # is the sum of its keys' in-window deques — same total bytes,
-        # fewer state-store rows. Skew: xxhash64 spreads keys
-        # uniformly; a hot KEY still serializes (inherent), but a hot
-        # key no longer adds a per-group tax to every other key.
-        n_buckets = _state_bucket_count()
-        aug = df.select(
-            "*",
-            spec["key_col"].cast("string").alias("__wc_key"),
-            sec.alias("__wc_sec"),
-            F.coalesce(spec["incremented"], F.lit(False)).alias("__wc_inc"),
-            (
-                F.coalesce(gate, F.lit(False)) if gate is not None else F.lit(True)
-            ).alias("__wc_gate"),
-            F.pmod(
-                F.xxhash64(spec["key_col"].cast("string")), F.lit(n_buckets)
-            ).cast("int").alias("__wc_bkt"),
-        )
-        out_schema = T.StructType(
-            [f for f in aug.schema.fields if not f.name.startswith("__wc_")]
-            + [T.StructField(name, T.LongType())]
-        )
-        passthrough_cols = [f.name for f in aug.schema.fields if not f.name.startswith("__wc_")]
-        _NULL_KEY = "\x00"  # JSON map slot for a null key value
-
-        def fold(pdf, smap):
-            """One micro-batch's worth of one bucket: sort, fold each
-            key segment against its carried deque, mutate ``smap`` in
-            place, return the output frame. Shared VERBATIM by both
-            state engines (applyInPandasWithState and the
-            transformWithStateInPandas port below), so their outputs
-            are identical by construction."""
-            import numpy as np
-
-            pdf = pdf.sort_values(["__wc_key", "__wc_sec"], kind="stable", na_position="last")
-            keys = pdf["__wc_key"].to_numpy(dtype=object)
-            sec_a = pdf["__wc_sec"].to_numpy(dtype="int64")
-            inc_a = pdf["__wc_inc"].to_numpy(dtype=bool)
-            gate_a = pdf["__wc_gate"].to_numpy(dtype=bool)
-            counts = np.empty(len(sec_a), dtype="int64")
-            # contiguous per-key segments of the (key, sec)-sorted batch
-            change = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(keys)]))
-            for s, e in zip(starts, ends):
-                mk = keys[s] if keys[s] is not None else _NULL_KEY
-                entries = smap.get(mk, ())
-                seg_sec = sec_a[s:e]
-                # all increment timestamps visible this batch for this
-                # key: carried deque + this batch's gated rows, sorted
-                inc_ts = np.sort(
-                    np.concatenate(
-                        [np.asarray(entries, dtype="int64"), seg_sec[inc_a[s:e]]]
-                    )
-                )
-                # count at row i = increments in [sec_i - win + 1,
-                # sec_i]; a row's own increment sorts <= sec_i so it is
-                # included, later rows' (> sec_i) are not — exactly the
-                # sequential zadd-then-zcard semantics, vectorized
-                hi = np.searchsorted(inc_ts, seg_sec, side="right")
-                lo = np.searchsorted(inc_ts, seg_sec - win + 1, side="left")
-                counts[s:e] = hi - lo
-                keep = int(seg_sec.max()) - win + 1
-                kept = inc_ts[np.searchsorted(inc_ts, keep, side="left"):]
-                if len(kept):
-                    smap[mk] = [int(x) for x in kept]
-                elif mk in smap:
-                    del smap[mk]  # empty deque = evict the slot
-            if cap:
-                counts = np.minimum(counts, cap)
-            counts = np.where(gate_a, counts, 0)
-            out = pdf[passthrough_cols].copy()
-            out[name] = counts.astype("int64")
-            return out
-
-        def fn(key, pdf_iter, state):
-            smap = _json.loads(state.get[0]) if state.exists else {}
-            # Materialize the WHOLE group before sorting: pdf_iter
-            # yields ~maxRecordsPerBatch-row Arrow chunks and a later
-            # chunk may hold earlier timestamps — per-chunk sorting
-            # with per-chunk state folds would make counts depend on
-            # chunk boundaries and diverge from the batch path. One
-            # bucket's micro-batch volume bounds the concat.
-            chunks = [c for c in pdf_iter if len(c)]
-            if not chunks:
-                state.update((_json.dumps(smap),))
-                return
-            pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            out = fold(pdf, smap)
-            state.update((_json.dumps(smap),))
-            yield out
-
-        # OSPREY_STATE_ENGINE=tws: the Spark 4 transformWithState
-        # port of this family (survey §1.5's forward path — typed
-        # state handles, TTL, RocksDB changelog checkpointing on a
-        # real cluster). Same bucket grouping, same `fold`, state in
-        # a named ValueState instead of the applyInPandasWithState
-        # tuple; outputs are identical by construction and pinned by
-        # tests/test_tws_window_counter.py. The TWS state-server
-        # protocol needs the `protobuf` package (absent from this
-        # container, like the Kafka jars) — on a standard cluster
-        # image the flag works as-is.
-        if _os.environ.get("OSPREY_STATE_ENGINE", "apply") == "tws":
-            from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-            state_schema = T.StructType(
-                [T.StructField("entries_json", T.StringType())]
-            )
-
-            class _WcProc(StatefulProcessor):
-                def init(self, handle):
-                    self._st = handle.getValueState("wc_entries", state_schema)
-
-                def handleInputRows(self, key, rows, timerValues):
-                    got = self._st.get() if self._st.exists() else None
-                    smap = _json.loads(got[0]) if got is not None else {}
-                    chunks = [c for c in rows if len(c)]
-                    if chunks:
-                        pdf = (
-                            pd.concat(chunks, ignore_index=True)
-                            if len(chunks) > 1
-                            else chunks[0]
-                        )
-                        out = fold(pdf, smap)
-                        self._st.update((_json.dumps(smap),))
-                        yield out
-                    else:
-                        self._st.update((_json.dumps(smap),))
-
-                def close(self):
-                    pass
-
-            return aug.groupBy("__wc_bkt").transformWithStateInPandas(
-                _WcProc(),
-                outputStructType=out_schema,
-                outputMode="append",
-                timeMode="None",
-            )
-
-        return aug.groupBy("__wc_bkt").applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=T.StructType([T.StructField("entries_json", T.StringType())]),
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+        w = W.partitionBy(spec["key_col"]).orderBy(sec).rangeBetween(-(win - 1), 0)
+        count = F.sum(F.when(spec["incremented"], 1).otherwise(0)).over(w)
+        if cap:
+            count = F.least(count, F.lit(cap))
+        if gate is not None:
+            count = F.when(F.coalesce(gate, F.lit(False)), count).otherwise(F.lit(0))
+        return df.select("*", F.coalesce(count, F.lit(0)).cast("long").alias(spec["name"]))
 
     def _join_window_distinct(self, df: DataFrame, spec: dict) -> DataFrame:
         """Resolve one GetWindowDistinct on a BATCH frame: distinct
@@ -1205,9 +1024,7 @@ class CompiledRuleset:
         size(collect_set) over a range window — one shuffle on the
         key, set state bounded by in-window distinct values. Gated-off
         and NULL values never enter the set (collect_set drops
-        nulls). Streaming frames route through the fused state pass
-        (apply() pending machinery) — there is deliberately no
-        standalone streaming resolver to maintain."""
+        nulls). Streaming frames route through the fused state pass."""
         from pyspark.sql import Window as W
 
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
@@ -1247,8 +1064,7 @@ class CompiledRuleset:
         registered long amounts per key in the trailing event-time
         window = sum over a range window — one shuffle on the key.
         Gated-off events contribute 0; the empty window coalesces to
-        0. Streaming frames route through the fused state pass — no
-        standalone streaming resolver."""
+        0. Streaming frames route through the fused state pass."""
         from pyspark.sql import Window as W
 
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
@@ -1406,7 +1222,7 @@ class CompiledRuleset:
         on the key. Gated-off and NULL values never register; an
         empty window yields NULL (not 0 — a real 0 must stay
         distinguishable). Streaming frames route through the fused
-        state pass — no standalone streaming resolver."""
+        state pass."""
         from pyspark.sql import Window as W
 
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
@@ -1430,19 +1246,15 @@ class CompiledRuleset:
         the Arrow boundary — the wide feature frame stays JVM-side.
         Streaming frames route through the fused state pass carrying
         [tokens_units, last_sec] per key."""
-        import os as _os
-
         import pandas as pd
         from pyspark.sql import types as T
 
+        # lazy: streaming/__init__ imports pipeline, which imports this
+        # module, so a top-level import would be circular
+        from ..streaming.keyed_state import bucket_column
+
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        if df.isStreaming:  # pragma: no cover — apply() routes to fused
-            raise SmlValidationError(
-                "RateLimit on a streaming frame must resolve through the "
-                "fused state pass"
-            )
         rid = "__rl_rid"
-        n_buckets = _state_bucket_count()
         # same rid discipline as _join_cache: pin one materialization
         df = df.withColumn(rid, F.monotonically_increasing_id()).persist()
         if not hasattr(self, "_cache_persists"):
@@ -1458,9 +1270,7 @@ class CompiledRuleset:
             spec["key_col"].cast("string").alias("_rlk"),
             sec.alias("_rls"),
             ord_col.alias("_rlo"),
-            F.pmod(F.xxhash64(spec["key_col"].cast("string")), F.lit(n_buckets))
-            .cast("int")
-            .alias("_rlb"),
+            bucket_column([spec["key_col"].cast("string")]).alias("_rlb"),
         )
         rate, cap, cost = spec["rate"], spec["cap"], spec["cost"]
 
@@ -1575,7 +1385,7 @@ class CompiledRuleset:
         one sort. Tie rows (equal sec) always land in one session and
         RANGE counts the full tie group, so the result is independent
         of Spark's tie order. Streaming frames route through the
-        fused state pass — no standalone streaming resolver."""
+        fused state pass."""
         from pyspark.sql import Window as W
 
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
@@ -1624,108 +1434,29 @@ class CompiledRuleset:
         )
 
     def _join_seq_match(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one SequenceMatches. Batch frames: collect the
+        """Resolve one SequenceMatches on a BATCH frame: collect the
         rolling last-K symbol window with a rows-between window (one
         shuffle on the key, whole-stage codegen, JVM `rlike`).
-        Streaming frames: key-coalesced applyInPandasWithState whose
+        Streaming frames route through the fused state pass, whose
         per-key state is the ≤K-char symbol suffix — the reference's
-        tool_seq shape — carried across micro-batches, so a pattern
-        completed by a later batch's event matches when that event
-        arrives. Within a batch rows apply in (event time, order)
-        order; the suffix semantics make streaming == batch whenever
-        (event time, order) is a total order per key (equivalence- and
-        restart-tested)."""
-        name = spec["name"]
-        k = int(spec["last_k"])
-        pattern = spec["pattern"]
+        tool_seq shape — so a pattern completed by a later batch's
+        event matches when that event arrives. The suffix semantics
+        make streaming == batch whenever (event time, order) is a
+        total order per key (equivalence- and restart-tested)."""
+        from pyspark.sql import Window as W
+
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
         order_cols = [sec] + (
             [spec["order_col"]] if spec["order_col"] is not None else []
         )
-        if not df.isStreaming:
-            from pyspark.sql import Window as W
-
-            w = (
-                W.partitionBy(spec["key_col"])
-                .orderBy(*order_cols)
-                .rowsBetween(-(k - 1), 0)
-            )
-            suffix = F.array_join(F.collect_list(spec["symbol_col"]).over(w), "")
-            matched = F.coalesce(suffix.rlike(pattern), F.lit(False))
-            return df.select("*", matched.alias(name))
-
-        import json as _json
-        import os as _os
-        import re as _re
-
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        rx = _re.compile(pattern)
-        n_buckets = _state_bucket_count()
-        aug = df.select(
-            "*",
-            spec["key_col"].cast("string").alias("__sq_key"),
-            sec.alias("__sq_sec"),
-            (
-                spec["order_col"].cast("double")
-                if spec["order_col"] is not None
-                else F.lit(0.0)
-            ).alias("__sq_ord"),
-            spec["symbol_col"].alias("__sq_sym"),
-            F.pmod(F.xxhash64(spec["key_col"].cast("string")), F.lit(n_buckets))
-            .cast("int")
-            .alias("__sq_bkt"),
+        w = (
+            W.partitionBy(spec["key_col"])
+            .orderBy(*order_cols)
+            .rowsBetween(-(int(spec["last_k"]) - 1), 0)
         )
-        out_schema = T.StructType(
-            [f for f in aug.schema.fields if not f.name.startswith("__sq_")]
-            + [T.StructField(name, T.BooleanType())]
-        )
-        passthrough_cols = [
-            f.name for f in aug.schema.fields if not f.name.startswith("__sq_")
-        ]
-        _NULL_KEY = "\x00"
-
-        def fn(key, pdf_iter, state):
-            smap = _json.loads(state.get[0]) if state.exists else {}
-            chunks = [c for c in pdf_iter if len(c)]
-            if not chunks:
-                state.update((_json.dumps(smap),))
-                return
-            pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values(
-                ["__sq_key", "__sq_sec", "__sq_ord"], kind="stable", na_position="last"
-            )
-            keys = pdf["__sq_key"].to_numpy(dtype=object)
-            syms = pdf["__sq_sym"].to_numpy(dtype=object)
-            matched = [False] * len(keys)
-            prev = None
-            suffix = ""
-            for i, (mk_raw, ch) in enumerate(zip(keys, syms)):
-                mk = mk_raw if mk_raw is not None else _NULL_KEY
-                if mk != prev:
-                    if prev is not None:
-                        smap[prev] = suffix
-                    suffix = smap.get(mk, "")
-                    prev = mk
-                suffix = (suffix + ch)[-k:]
-                matched[i] = rx.search(suffix) is not None
-            if prev is not None:
-                smap[prev] = suffix
-            out = pdf[passthrough_cols].copy()
-            out[name] = matched
-            state.update((_json.dumps(smap),))
-            yield out
-
-        return aug.groupBy("__sq_bkt").applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=T.StructType(
-                [T.StructField("suffix_json", T.StringType())]
-            ),
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+        suffix = F.array_join(F.collect_list(spec["symbol_col"]).over(w), "")
+        matched = F.coalesce(suffix.rlike(spec["pattern"]), F.lit(False))
+        return df.select("*", matched.alias(spec["name"]))
 
     def _join_fused_state(
         self, df: DataFrame, fspecs: list[tuple[str, dict]]
@@ -1733,7 +1464,8 @@ class CompiledRuleset:
         """Resolve a RUN of streaming state ops that share one key
         expression in a SINGLE applyInPandasWithState pass — N
         stateful mechanisms, ONE shuffle and ONE state-store
-        round-trip per micro-batch instead of N of each.
+        round-trip per micro-batch instead of N of each. A single op
+        is a run of one: every family streams through this pass.
 
         This is not merely an optimization: Spark permits exactly ONE
         applyInPandasWithState per streaming query
@@ -1742,978 +1474,133 @@ class CompiledRuleset:
         pattern — all keyed by the same conversation entity, the
         common transcript shape — could not stream at all as
         sequential passes. Fusion folds all per-key mechanisms
-        against one composite state (``[state_op0, state_op1, ...]``
-        per bucket) inside one sorted pass over the group, making
-        multi-mechanism stateful rules streamable AND paying one
-        exchange + one store pass where a hypothetical chain would
-        pay N. Groups fusion cannot merge (different keys, inter-op
-        dependencies, cache ops) fail compile with an actionable
-        split, not a deep Spark error.
+        against one composite state per bucket inside one sorted pass
+        over the group. Groups fusion cannot merge (different keys,
+        inter-op dependencies, cross-keyed cache writes) fail compile
+        with an actionable split, not a deep Spark error.
 
-        Semantics are pinned to the standalone resolvers: the fused
-        sort key (key, sec, ord) refines the window counter's
-        (key, sec) only among equal-timestamp rows, which cannot
-        change a range-window count (counts compare ``sec`` values,
-        not row positions); the sequence suffix fold sees the exact
-        standalone order. Equivalence is regression-tested against
-        the sequential (unfused) outputs AND the batch plans.
+        Rows sort by (key, sec[, ord]); each family's fold
+        (``families.py``) is pinned to its batch resolver by the
+        stream==batch suites. The composite state maps each op's
+        identity (family + parameters + input expressions) to its
+        ``{key: entry}`` map, so a ruleset hot-swap keeps unchanged
+        ops' state, starts new ops empty and drops removed ones
+        (``families.op_states`` also reads the older layouts).
 
         Callers guarantee: every spec's key has the same column-node
-        string, all seq specs share one order expression, and no
+        string, all ordered specs share one order expression, and no
         spec's inputs reference another fused op's output (the run
         detector in apply() flushes otherwise).
         """
-        import json as _json
-        import os as _os
-        import re as _re
-
-        import pandas as pd
+        import numpy as np
         from pyspark.sql import types as T
 
+        from ..streaming.keyed_state import run_keyed_state
+        from .families import FAMILIES, op_identities, op_states
+
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        n_buckets = _state_bucket_count()
         key_col = fspecs[0][1]["key_col"]
-
-        ord_expr = F.lit(0.0)
-        for fam, sp in fspecs:
-            if fam in ("seq", "last", "rl", "tent") and sp["order_col"] is not None:
-                ord_expr = sp["order_col"].cast("double")
-                break
-
-        proj: list = [
-            "*",
-            key_col.cast("string").alias("__fs_key"),
-            sec.alias("__fs_sec"),
-            ord_expr.alias("__fs_ord"),
-            F.pmod(F.xxhash64(key_col.cast("string")), F.lit(n_buckets))
-            .cast("int")
-            .alias("__fs_bkt"),
-        ]
-        metas: list[dict] = []
+        proj: list = ["*", key_col.cast("string").alias("__fs_key"), sec.alias("__fs_sec")]
+        sort_cols = ["__fs_key", "__fs_sec"]
+        ord_col = next(
+            (sp["order_col"] for _, sp in fspecs if sp.get("order_col") is not None), None
+        )
+        if ord_col is not None:
+            proj.append(ord_col.cast("double").alias("__fs_ord"))
+            sort_cols.append("__fs_ord")
+        ops: list = []  # ({field: (column, dtype)}, out dtype, fold)
+        out_cols: list = []
         out_fields: list = []
         for i, (fam, sp) in enumerate(fspecs):
-            if fam == "window":
-                gate = sp["gate"]
-                proj.append(
-                    F.coalesce(sp["incremented"], F.lit(False)).alias(f"__fs{i}_inc")
-                )
-                proj.append(
-                    (
-                        F.coalesce(gate, F.lit(False)) if gate is not None else F.lit(True)
-                    ).alias(f"__fs{i}_gate")
-                )
-                metas.append(
-                    {
-                        "fam": "window",
-                        "name": sp["name"],
-                        "win": int(sp["window_seconds"]),
-                        "cap": int(sp["cap"]),
-                        "i": i,
-                    }
-                )
-                out_fields.append(T.StructField(sp["name"], T.LongType()))
-            elif fam == "seq":
-                proj.append(sp["symbol_col"].alias(f"__fs{i}_sym"))
-                metas.append(
-                    {
-                        "fam": "seq",
-                        "name": sp["name"],
-                        "k": int(sp["last_k"]),
-                        "rx": _re.compile(sp["pattern"]),
-                        "i": i,
-                    }
-                )
-                out_fields.append(T.StructField(sp["name"], T.BooleanType()))
-            elif fam == "wdistinct":
-                gate = sp["gate"]
-                proj.append(sp["value_col"].alias(f"__fs{i}_val"))
-                proj.append(
-                    (
-                        F.coalesce(gate, F.lit(False)) if gate is not None else F.lit(True)
-                    ).alias(f"__fs{i}_vg")
-                )
-                metas.append(
-                    {
-                        "fam": "wdistinct",
-                        "name": sp["name"],
-                        "win": int(sp["window_seconds"]),
-                        "i": i,
-                    }
-                )
-                out_fields.append(T.StructField(sp["name"], T.LongType()))
-            elif fam == "seen":
-                gate = sp["gate"]
-                proj.append(sp["value_col"].alias(f"__fs{i}_sv"))
-                proj.append(
-                    (
-                        F.coalesce(gate, F.lit(False)) if gate is not None else F.lit(True)
-                    ).alias(f"__fs{i}_sg")
-                )
-                metas.append({"fam": "seen", "name": sp["name"], "i": i})
-                out_fields.append(T.StructField(sp["name"], T.BooleanType()))
-            elif fam == "wminmax":
-                gate = sp["gate"]
-                proj.append(sp["value_col"].alias(f"__fs{i}_mv"))
-                proj.append(
-                    (
-                        F.coalesce(gate, F.lit(False)) if gate is not None else F.lit(True)
-                    ).alias(f"__fs{i}_mg")
-                )
-                metas.append(
-                    {
-                        "fam": "wminmax",
-                        "name": sp["name"],
-                        "win": int(sp["window_seconds"]),
-                        "mode": int(sp["mode"]),
-                        "i": i,
-                    }
-                )
-                out_fields.append(T.StructField(sp["name"], T.LongType()))
-            elif fam == "unique":
-                gate = sp["gate"]
-                proj.append(sp["value_col"].alias(f"__fs{i}_uv"))
-                proj.append(
-                    (
-                        F.coalesce(gate, F.lit(False)) if gate is not None else F.lit(True)
-                    ).alias(f"__fs{i}_ug")
-                )
-                metas.append(
-                    {
-                        "fam": "unique",
-                        "name": sp["name"],
-                        "cap": int(sp["cap"]),
-                        "i": i,
-                    }
-                )
-                out_fields.append(T.StructField(sp["name"], T.LongType()))
-            elif fam == "sess":
-                metas.append(
-                    {
-                        "fam": "sess",
-                        "name": sp["name"],
-                        "gap": int(sp["gap_seconds"]),
-                        "i": i,
-                    }
-                )
-                out_fields.append(T.StructField(sp["name"], T.LongType()))
-            elif fam == "last":
-                proj.append(sp["value_col"].alias(f"__fs{i}_lv"))
-                metas.append({"fam": "last", "name": sp["name"], "i": i})
-                out_fields.append(T.StructField(sp["name"], T.StringType()))
-            elif fam == "age":
-                metas.append({"fam": "age", "name": sp["name"], "i": i})
-                out_fields.append(T.StructField(sp["name"], T.LongType()))
-            elif fam == "burst":
-                metas.append({"fam": "burst", "name": sp["name"], "i": i})
-                out_fields.append(T.StructField(sp["name"], T.DoubleType()))
-            elif fam == "rl":
-                metas.append(
-                    {
-                        "fam": "rl",
-                        "name": sp["name"],
-                        "rate": int(sp["rate"]),
-                        "cap": int(sp["cap"]),
-                        "cost": int(sp["cost"]),
-                        "i": i,
-                    }
-                )
-                out_fields.append(T.StructField(sp["name"], T.BooleanType()))
-            elif fam == "wsum":
-                gate = sp["gate"]
-                amt = sp["value_col"]
-                if gate is not None:
-                    amt = F.when(F.coalesce(gate, F.lit(False)), amt).otherwise(
-                        F.lit(0)
-                    )
-                proj.append(amt.cast("long").alias(f"__fs{i}_amt"))
-                metas.append(
-                    {
-                        "fam": "wsum",
-                        "name": sp["name"],
-                        "win": int(sp["window_seconds"]),
-                        "i": i,
-                    }
-                )
-                out_fields.append(T.StructField(sp["name"], T.LongType()))
-            elif fam == "tent":
-                proj.append(sp["state_col"].alias(f"__fs{i}_tsym"))
-                metas.append({"fam": "tent", "name": sp["name"], "i": i})
-                out_fields.append(T.StructField(sp["name"], T.DoubleType()))
-            elif fam == "decay":
-                gate = sp["gate"]
-                amt = sp["value_col"]
-                if gate is not None:
-                    amt = F.when(F.coalesce(gate, F.lit(False)), amt).otherwise(
-                        F.lit(0)
-                    )
-                proj.append(amt.cast("long").alias(f"__fs{i}_dam"))
-                metas.append(
-                    {
-                        "fam": "decay",
-                        "name": sp["name"],
-                        "h": int(sp["halflife_s"]),
-                        "i": i,
-                    }
-                )
-                out_fields.append(T.StructField(sp["name"], T.LongType()))
-            else:  # cache — emits a RAW lookup column "__fcv_{i}";
-                # default/gate post-processing happens JVM-side in the
-                # caller (mirrors _join_cache_streaming's tail)
-                sets_meta = []
-                for j, s in enumerate(sp["sets"]):
-                    set_gate = (
-                        F.coalesce(s["gate"], F.lit(False))
-                        if s["gate"] is not None
-                        else F.lit(True)
-                    )
-                    proj.append(set_gate.alias(f"__fs{i}s{j}_g"))
-                    proj.append(
-                        s["value_col"].cast(sp["cast"]).alias(f"__fs{i}s{j}_v")
-                    )
-                    sets_meta.append(
-                        {"j": j, "idx": int(s["idx"]), "ttl": round(s["ttl"])}
-                    )
-                metas.append(
-                    {"fam": "cache", "name": sp["name"], "sets": sets_meta, "i": i}
-                )
-                out_fields.append(
-                    T.StructField(f"__fcv_{i}", T._parse_datatype_string(sp["cast"]))
-                )
-
+            st = FAMILIES[fam].stream(sp)
+            inputs = {}
+            for field, (col, dtype) in st.cols.items():
+                proj.append(col.alias(f"__fs{i}_{field}"))
+                inputs[field] = (f"__fs{i}_{field}", dtype)
+            # cache entries come back as a RAW lookup column; the
+            # default/gate tail runs JVM-side below
+            out_col = f"__fcv_{i}" if fam == "cache" else sp["name"]
+            out_cols.append(out_col)
+            out_fields.append(T.StructField(out_col, st.out_type))
+            ops.append((inputs, st.out_np, st.fold))
         aug = df.select(*proj)
         passthrough_cols = [
             f.name for f in aug.schema.fields if not f.name.startswith("__fs")
         ]
         out_schema = T.StructType(
-            [f for f in aug.schema.fields if not f.name.startswith("__fs")] + out_fields
+            [aug.schema[c] for c in passthrough_cols] + out_fields
         )
+        idents = op_identities(fspecs)
+        fams = [fam for fam, _ in fspecs]
         _NULL_KEY = "\x00"
-        n_ops = len(metas)
 
-        def fn(key, pdf_iter, state):
-            import numpy as np
-
-            states = _json.loads(state.get[0]) if state.exists else [{} for _ in range(n_ops)]
-            chunks = [c for c in pdf_iter if len(c)]
-            if not chunks:
-                state.update((_json.dumps(states),))
-                return
-            pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            pdf = pdf.sort_values(
-                ["__fs_key", "__fs_sec", "__fs_ord"], kind="stable", na_position="last"
-            )
+        def fold(pdf, stored):
+            smaps = op_states(stored, idents, fams)
+            pdf = pdf.sort_values(sort_cols, kind="stable", na_position="last")
             n = len(pdf)
             keys = pdf["__fs_key"].to_numpy(dtype=object)
             sec_a = pdf["__fs_sec"].to_numpy(dtype="int64")
-            op_in: list[dict] = []
-            outs: list = []
-            for m in metas:
-                if m["fam"] == "window":
-                    op_in.append(
-                        {
-                            "inc": pdf[f"__fs{m['i']}_inc"].to_numpy(dtype=bool),
-                            "gate": pdf[f"__fs{m['i']}_gate"].to_numpy(dtype=bool),
-                        }
-                    )
-                    outs.append(np.empty(n, dtype="int64"))
-                elif m["fam"] == "seq":
-                    op_in.append({"sym": pdf[f"__fs{m['i']}_sym"].to_numpy(dtype=object)})
-                    outs.append(np.zeros(n, dtype=bool))
-                elif m["fam"] == "wdistinct":
-                    op_in.append(
-                        {
-                            "val": pdf[f"__fs{m['i']}_val"].to_numpy(dtype=object),
-                            "vg": pdf[f"__fs{m['i']}_vg"].to_numpy(dtype=bool),
-                        }
-                    )
-                    outs.append(np.empty(n, dtype="int64"))
-                elif m["fam"] == "unique":
-                    op_in.append(
-                        {
-                            "val": pdf[f"__fs{m['i']}_uv"].to_numpy(dtype=object),
-                            "vg": pdf[f"__fs{m['i']}_ug"].to_numpy(dtype=bool),
-                        }
-                    )
-                    outs.append(np.empty(n, dtype="int64"))
-                elif m["fam"] == "wminmax":
-                    op_in.append(
-                        {
-                            # object dtype keeps NULL values visible
-                            "val": pdf[f"__fs{m['i']}_mv"].to_numpy(dtype=object),
-                            "vg": pdf[f"__fs{m['i']}_mg"].to_numpy(dtype=bool),
-                        }
-                    )
-                    outs.append(np.full(n, None, dtype=object))
-                elif m["fam"] == "seen":
-                    op_in.append(
-                        {
-                            "val": pdf[f"__fs{m['i']}_sv"].to_numpy(dtype=object),
-                            "vg": pdf[f"__fs{m['i']}_sg"].to_numpy(dtype=bool),
-                        }
-                    )
-                    outs.append(np.zeros(n, dtype=bool))
-                elif m["fam"] == "sess":
-                    op_in.append({})  # only needs (key, sec), already shared
-                    outs.append(np.empty(n, dtype="int64"))
-                elif m["fam"] == "last":
-                    op_in.append(
-                        {"val": pdf[f"__fs{m['i']}_lv"].to_numpy(dtype=object)}
-                    )
-                    outs.append(np.full(n, None, dtype=object))
-                elif m["fam"] == "age":
-                    op_in.append({})  # only needs (key, sec), already shared
-                    outs.append(np.empty(n, dtype="int64"))
-                elif m["fam"] == "burst":
-                    op_in.append({})  # only needs (key, sec), already shared
-                    outs.append(np.empty(n, dtype="float64"))
-                elif m["fam"] == "rl":
-                    op_in.append({})  # only needs (key, sec), already shared
-                    outs.append(np.zeros(n, dtype=bool))
-                elif m["fam"] == "wsum":
-                    op_in.append(
-                        {"amt": pdf[f"__fs{m['i']}_amt"].to_numpy(dtype="int64")}
-                    )
-                    outs.append(np.empty(n, dtype="int64"))
-                elif m["fam"] == "tent":
-                    op_in.append(
-                        {"sym": pdf[f"__fs{m['i']}_tsym"].to_numpy(dtype=object)}
-                    )
-                    outs.append(np.empty(n, dtype="float64"))
-                elif m["fam"] == "decay":
-                    op_in.append(
-                        {"amt": pdf[f"__fs{m['i']}_dam"].to_numpy(dtype="int64")}
-                    )
-                    outs.append(np.empty(n, dtype="int64"))
-                else:  # cache
-                    op_in.append(
-                        {
-                            "g": [
-                                pdf[f"__fs{m['i']}s{s['j']}_g"].to_numpy(dtype=bool)
-                                for s in m["sets"]
-                            ],
-                            "v": [
-                                pdf[f"__fs{m['i']}s{s['j']}_v"].to_numpy(dtype=object)
-                                for s in m["sets"]
-                            ],
-                        }
-                    )
-                    outs.append(np.full(n, None, dtype=object))
+            runs = []
+            for (inputs, out_np, op_fold), smap in zip(ops, smaps):
+                inp = {f: pdf[c].to_numpy(dtype=dt) for f, (c, dt) in inputs.items()}
+                out_a = (
+                    np.full(n, None, dtype=object)
+                    if out_np == "object"
+                    else np.zeros(n, dtype=out_np)
+                )
+                runs.append((op_fold, smap, inp, out_a))
             change = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [n]))
-            for s, e in zip(starts, ends):
+            for s, e in zip(np.concatenate(([0], change)), np.concatenate((change, [n]))):
                 mk = keys[s] if keys[s] is not None else _NULL_KEY
                 seg_sec = sec_a[s:e]
-                for m, inp, out_a, smap in zip(metas, op_in, outs, states):
-                    if m["fam"] == "window":
-                        win = m["win"]
-                        entries = smap.get(mk, ())
-                        inc_ts = np.sort(
-                            np.concatenate(
-                                [
-                                    np.asarray(entries, dtype="int64"),
-                                    seg_sec[inp["inc"][s:e]],
-                                ]
-                            )
-                        )
-                        hi = np.searchsorted(inc_ts, seg_sec, side="right")
-                        lo = np.searchsorted(inc_ts, seg_sec - win + 1, side="left")
-                        counts = hi - lo
-                        if m["cap"]:
-                            counts = np.minimum(counts, m["cap"])
-                        out_a[s:e] = np.where(inp["gate"][s:e], counts, 0)
-                        keep = int(seg_sec.max()) - win + 1
-                        kept = inc_ts[np.searchsorted(inc_ts, keep, side="left"):]
-                        if len(kept):
-                            smap[mk] = [int(x) for x in kept]
-                        elif mk in smap:
-                            del smap[mk]
-                    elif m["fam"] == "wdistinct":
-                        # distinct registered values in the trailing
-                        # window, judged like the batch range window:
-                        # ALL visible same-key occurrences (carried
-                        # deque + this whole segment) with ts in
-                        # [sec_r - win + 1, sec_r] — including
-                        # equal-timestamp occurrences from later rows,
-                        # exactly what collect_set over RANGE sees.
-                        win = m["win"]
-                        occ = [tuple(o) for o in smap.get(mk, ())]
-                        seg_sec = sec_a[s:e]
-                        vals = inp["val"][s:e]
-                        vgs = inp["vg"][s:e]
-                        for j in range(e - s):
-                            v = vals[j]
-                            if vgs[j] and v is not None and not pd.isna(v):
-                                occ.append((int(seg_sec[j]), v))
-                        occ.sort(key=lambda o: o[0])
-                        counts: dict = {}
-                        distinct = 0
-                        lo = hi = 0
-                        seg_out = out_a[s:e]
-                        for j in range(e - s):
-                            t = int(seg_sec[j])
-                            while hi < len(occ) and occ[hi][0] <= t:
-                                v = occ[hi][1]
-                                c = counts.get(v, 0)
-                                if c == 0:
-                                    distinct += 1
-                                counts[v] = c + 1
-                                hi += 1
-                            floor_t = t - win + 1
-                            while lo < hi and occ[lo][0] < floor_t:
-                                v = occ[lo][1]
-                                counts[v] -= 1
-                                if counts[v] == 0:
-                                    distinct -= 1
-                                lo += 1
-                            seg_out[j] = distinct
-                        keep = int(seg_sec.max()) - win + 1
-                        kept = [[t, v] for t, v in occ if t >= keep]
-                        if kept:
-                            smap[mk] = kept
-                        elif mk in smap:
-                            del smap[mk]
-                    elif m["fam"] == "seen":
-                        # repeated-content membership: per value, the
-                        # TWO SMALLEST registration seconds (carried +
-                        # this segment, min-merged — exact under late
-                        # data). Row at t with value v: registrations
-                        # of v with sec <= t, capped at 2; a
-                        # registering row needs 2 (itself included), a
-                        # reader 1 — tie-group inclusive either way.
-                        pair = {
-                            v: list(ss) for v, ss in smap.get(mk, ())
-                        }  # value -> [s1] or [s1, s2], ascending
-                        vals = inp["val"][s:e]
-                        vgs = inp["vg"][s:e]
-                        n_seg = e - s
-                        events_s = []
-                        for v, ss in pair.items():
-                            for t0 in ss:
-                                events_s.append((int(t0), v))
-                        for j in range(n_seg):
-                            v = vals[j]
-                            if vgs[j] and v is not None and not pd.isna(v):
-                                events_s.append((int(seg_sec[j]), str(v)))
-                        events_s.sort()
-                        # rebuild the two-smallest pairs from ALL events
-                        merged: dict = {}
-                        for t0, v in events_s:
-                            lst = merged.setdefault(v, [])
-                            if len(lst) < 2:
-                                lst.append(t0)
-                        counts_at: dict = {}
-                        seg_out = out_a[s:e]
-                        hi = 0
-                        for j in range(n_seg):
-                            t = int(seg_sec[j])
-                            while hi < len(events_s) and events_s[hi][0] <= t:
-                                v = events_s[hi][1]
-                                c = counts_at.get(v, 0)
-                                if c < 2:
-                                    # only the two smallest count; later
-                                    # duplicates of carried secs double-
-                                    # count a registration, so consume
-                                    # events from the MERGED pairs only
-                                    if events_s[hi][0] in merged.get(v, ()):
-                                        counts_at[v] = c + 1
-                                        merged[v].remove(events_s[hi][0])
-                                hi += 1
-                            v = vals[j]
-                            if v is None or pd.isna(v):
-                                seg_out[j] = False
-                            else:
-                                sv = str(v)
-                                reg = bool(vgs[j])
-                                need = 2 if reg else 1
-                                seg_out[j] = counts_at.get(sv, 0) >= need
-                        # state: two smallest secs per value across
-                        # carried + segment registrations
-                        final_pairs: dict = {}
-                        for t0, v in events_s:
-                            lst = final_pairs.setdefault(v, [])
-                            if len(lst) < 2:
-                                lst.append(t0)
-                        if final_pairs:
-                            smap[mk] = sorted(
-                                [v, ss] for v, ss in final_pairs.items()
-                            )
-                        elif mk in smap:
-                            del smap[mk]
-                    elif m["fam"] == "wminmax":
-                        # trailing-window MAX/MIN, judged like the
-                        # batch RANGE window: all visible same-key
-                        # registrations with ts in [sec - win + 1,
-                        # sec], equal-ts registrations from later rows
-                        # included. Carried state is ALL in-window
-                        # (sec, val) entries — an envelope prune is
-                        # unsafe across batches (a late row's window
-                        # may exclude the dominating later entry), so
-                        # the monotonic deque is rebuilt per segment
-                        # (O(n) amortized: each entry enters/leaves
-                        # once) and only the time-expired entries drop
-                        # from state, exactly like wsum.
-                        win = m["win"]
-                        mode = m["mode"]
-                        entries = [tuple(o) for o in smap.get(mk, ())]
-                        vals = inp["val"][s:e]
-                        vgs = inp["vg"][s:e]
-                        for j in range(e - s):
-                            v = vals[j]
-                            if vgs[j] and v is not None and not pd.isna(v):
-                                entries.append((int(seg_sec[j]), int(v)))
-                        entries.sort(key=lambda o: o[0])
-                        dq: list = []  # (sec, mode*val), vals decreasing
-                        head = 0
-                        hi = 0
-                        seg_out = out_a[s:e]
-                        for j in range(e - s):
-                            t = int(seg_sec[j])
-                            while hi < len(entries) and entries[hi][0] <= t:
-                                sv = mode * entries[hi][1]
-                                while len(dq) > head and dq[-1][1] <= sv:
-                                    dq.pop()
-                                dq.append((entries[hi][0], sv))
-                                hi += 1
-                            floor_t = t - win + 1
-                            while len(dq) > head and dq[head][0] < floor_t:
-                                head += 1
-                            seg_out[j] = (
-                                mode * dq[head][1] if len(dq) > head else None
-                            )
-                        keep = int(seg_sec.max()) - win + 1
-                        kept = [[t, v] for t, v in entries if t >= keep]
-                        if kept:
-                            smap[mk] = kept
-                        elif mk in smap:
-                            del smap[mk]
-                    elif m["fam"] == "unique":
-                        # lifetime distinct registered values, judged
-                        # like the batch UNBOUNDED range window: every
-                        # visible same-key registration with ts <= this
-                        # row's second counts, INCLUDING equal-second
-                        # later rows (tie-group inclusive, so the fold
-                        # is tie-order independent). State carries each
-                        # value's FIRST-SEEN second — a bare value set
-                        # would overcount for LATE rows whose sec
-                        # precedes a carried value's registration.
-                        # cap>0 stops TRACKING once reached — exact for
-                        # the clamped output: past cap both engines
-                        # report cap forever (the count is monotone).
-                        cap = m["cap"]
-                        first = {v: int(t0) for v, t0 in smap.get(mk, ())}
-                        vals = inp["val"][s:e]
-                        vgs = inp["vg"][s:e]
-                        n_seg = e - s
-                        # merge carried first-seens with this segment's
-                        # registrations into one sec-ordered event list
-                        events_u = [(t0, v) for v, t0 in first.items()]
-                        for j in range(n_seg):
-                            v = vals[j]
-                            if vgs[j] and v is not None and not pd.isna(v):
-                                sv = str(v)
-                                t_j = int(seg_sec[j])
-                                if sv not in first or t_j < first[sv]:
-                                    first[sv] = t_j
-                                    events_u.append((t_j, sv))
-                        events_u.sort()  # (sec, value): tie-deterministic
-                        seen: set = set()
-                        seg_out = out_a[s:e]
-                        hi = 0
-                        j = 0
-                        while j < n_seg:
-                            t = int(seg_sec[j])
-                            while hi < len(events_u) and events_u[hi][0] <= t:
-                                v = events_u[hi][1]
-                                # count only the value's FIRST event
-                                # (duplicates from a lowered first-seen
-                                # are filtered by the dict check above)
-                                if first.get(v) == events_u[hi][0] and (
-                                    cap == 0 or len(seen) < cap
-                                ):
-                                    seen.add(v)
-                                hi += 1
-                            g = j
-                            while g + 1 < n_seg and seg_sec[g + 1] == t:
-                                g += 1
-                            seg_out[j : g + 1] = len(seen)
-                            j = g + 1
-                        if cap:
-                            # keep only the tracked (counted) values —
-                            # the clamp makes extras irrelevant forever
-                            kept_first = sorted(
-                                first.items(), key=lambda kv: (kv[1], kv[0])
-                            )[:cap]
-                        else:
-                            kept_first = sorted(first.items())
-                        if kept_first:
-                            smap[mk] = [[v, t0] for v, t0 in kept_first]
-                        elif mk in smap:
-                            del smap[mk]
-                    elif m["fam"] == "sess":
-                        # events in the current session, judged like
-                        # the batch (key, session) RANGE count: a tie
-                        # group (equal sec) shares a session and each
-                        # tie row counts the whole group. Carried
-                        # state [last_sec, open_count] continues the
-                        # session when the segment's first event is
-                        # within the gap.
-                        gap = m["gap"]
-                        st = smap.get(mk)  # [last_sec, open_count]
-                        n_seg = e - s
-                        seg_out = out_a[s:e]
-                        starts_ses = [0]
-                        bases = [
-                            st[1]
-                            if st is not None and int(seg_sec[0]) - st[0] <= gap
-                            else 0
-                        ]
-                        for j in range(1, n_seg):
-                            if int(seg_sec[j]) - int(seg_sec[j - 1]) > gap:
-                                starts_ses.append(j)
-                                bases.append(0)
-                        si = 0
-                        j = 0
-                        while j < n_seg:
-                            # advance to this row's session
-                            while (
-                                si + 1 < len(starts_ses)
-                                and starts_ses[si + 1] <= j
-                            ):
-                                si += 1
-                            hi = j
-                            while hi + 1 < n_seg and seg_sec[hi + 1] == seg_sec[j]:
-                                hi += 1
-                            cnt = bases[si] + (hi - starts_ses[si] + 1)
-                            seg_out[j : hi + 1] = cnt
-                            j = hi + 1
-                        smap[mk] = [
-                            int(seg_sec[-1]),
-                            int(bases[-1] + (n_seg - starts_ses[-1])),
-                        ]
-                    elif m["fam"] == "last":
-                        # lag(value): first row of the segment sees
-                        # the carried value (or None if the key is
-                        # new), later rows the prior row's value;
-                        # carry the final value forward. State is ONE
-                        # JSON-safe string (or None) per key.
-                        vals = inp["val"][s:e]
-                        seg_out = out_a[s:e]
-                        st = smap.get(mk)
-                        seg_out[0] = st[0] if st is not None else None
-                        if e - s > 1:
-                            seg_out[1:] = vals[:-1]
-                        v_last = vals[-1]
-                        if v_last is not None and not (
-                            isinstance(v_last, float) and pd.isna(v_last)
-                        ):
-                            v_last = str(v_last)
-                        else:
-                            v_last = None
-                        smap[mk] = [v_last]
-                    elif m["fam"] == "rl":
-                        # token bucket: state [tokens_units, last_sec];
-                        # a NEW key starts FULL. The fold is the exact
-                        # recurrence the batch resolver runs — integer
-                        # units throughout, denials consume nothing.
-                        rate, cap, cost = m["rate"], m["cap"], m["cost"]
-                        st = smap.get(mk)
-                        tokens, last = (
-                            (cap, int(seg_sec[0])) if st is None else st
-                        )
-                        seg_out = out_a[s:e]
-                        for j in range(e - s):
-                            t = int(seg_sec[j])
-                            if t > last:  # cross-batch late rows refill 0
-                                tokens = min(cap, tokens + rate * (t - last))
-                                last = t
-                            if tokens >= cost:
-                                tokens -= cost
-                                seg_out[j] = True
-                        smap[mk] = [tokens, last]
-                    elif m["fam"] == "age":
-                        # seconds since the key's first-seen second.
-                        # State is ONE long; min-fold makes a late
-                        # out-of-order first event lower the carried
-                        # floor (it reports age 0 itself because the
-                        # segment is sec-sorted: seg_sec[0] <= all).
-                        st = smap.get(mk)  # [first_sec]
-                        first = int(seg_sec[0]) if st is None else min(
-                            int(st[0]), int(seg_sec[0])
-                        )
-                        out_a[s:e] = seg_sec - first
-                        smap[mk] = [first]
-                    elif m["fam"] == "burst":
-                        # Goh-Barabasi B over the key's inter-event
-                        # gaps so far, judged like the batch RANGE
-                        # window: a tie group (equal sec) folds ALL
-                        # its gaps (first row sec-last, rest 0)
-                        # before any row reads B, so every tie row
-                        # reports the same value. State is four ints
-                        # [last_sec, n_gaps, S, Q]; moments exact,
-                        # B = (sigma-mu)/(sigma+mu) in IEEE doubles
-                        # identical to the JVM expression, rounded 6
-                        # half-away (the tent output contract).
-                        # Cross-batch LATE rows clamp gap to 0 (batch
-                        # would re-sort history; documented
-                        # watermark-respecting equivalence).
-                        import math as _math
-
-                        st = smap.get(mk) or [None, 0, 0, 0]
-                        last, ng, sg, qg = st[0], st[1], st[2], st[3]
-                        seg_out = out_a[s:e]
-                        n_seg = e - s
-                        j = 0
-                        while j < n_seg:
-                            hi = j
-                            while (
-                                hi + 1 < n_seg
-                                and seg_sec[hi + 1] == seg_sec[j]
-                            ):
-                                hi += 1
-                            t = int(seg_sec[j])
-                            g_sz = hi - j + 1
-                            if last is None:
-                                ng += g_sz - 1
-                            else:
-                                gap = t - last
-                                if gap < 0:
-                                    gap = 0
-                                ng += g_sz
-                                sg += gap
-                                qg += gap * gap
-                            last = t
-                            if ng >= 1:
-                                mu = sg / ng
-                                var = qg / ng - mu * mu
-                                if var < 0.0:
-                                    var = 0.0
-                                sig = _math.sqrt(var)
-                                den = sig + mu
-                                b = (sig - mu) / den if den > 0 else 0.0
-                            else:
-                                b = 0.0
-                            rb = _math.floor(abs(b) * 1e6 + 0.5) / 1e6
-                            if b < 0:
-                                rb = -rb
-                            seg_out[j : hi + 1] = rb
-                            j = hi + 1
-                        smap[mk] = [last, ng, sg, qg]
-                    elif m["fam"] == "wsum":
-                        # trailing-window SUM, judged like the batch
-                        # RANGE window: all visible same-key amounts
-                        # (carried entries + this whole segment) with
-                        # ts in [sec_r - win + 1, sec_r] — equal-ts
-                        # amounts from later rows included. Carried
-                        # state is the in-window non-zero (sec, amt)
-                        # entries, re-sorted because late data may
-                        # put carried entries after segment rows.
-                        win = m["win"]
-                        entries = smap.get(mk, ())
-                        prev = np.asarray(entries, dtype="int64").reshape(-1, 2)
-                        all_sec = np.concatenate([prev[:, 0], seg_sec])
-                        all_amt = np.concatenate([prev[:, 1], inp["amt"][s:e]])
-                        order = np.argsort(all_sec, kind="stable")
-                        all_sec = all_sec[order]
-                        all_amt = all_amt[order]
-                        csum = np.concatenate(([0], np.cumsum(all_amt)))
-                        hi = np.searchsorted(all_sec, seg_sec, side="right")
-                        lo = np.searchsorted(all_sec, seg_sec - win + 1, side="left")
-                        out_a[s:e] = csum[hi] - csum[lo]
-                        keep = int(seg_sec.max()) - win + 1
-                        kidx = np.searchsorted(all_sec, keep, side="left")
-                        kept = [
-                            [int(t), int(a)]
-                            for t, a in zip(all_sec[kidx:], all_amt[kidx:])
-                            if a != 0
-                        ]
-                        if kept:
-                            smap[mk] = kept
-                        elif mk in smap:
-                            del smap[mk]
-                    elif m["fam"] == "decay":
-                        # decayed registration sum, judged like the
-                        # batch UNBOUNDED range window: every visible
-                        # same-key amount with ts <= this row's second
-                        # (equal-ts later rows included), weighted
-                        # 2^20 >> halflife_bucket_age (zero beyond
-                        # 20). State carries per-SECOND merged
-                        # (sec, amt) entries within the 21-bucket
-                        # horizon behind the key's newest event —
-                        # older entries weigh 0 for every future row
-                        # (bounded-lateness contract, like wsum).
-                        h = m["h"]
-                        entries = smap.get(mk, ())
-                        prev = np.asarray(entries, dtype="int64").reshape(-1, 2)
-                        all_sec = np.concatenate([prev[:, 0], seg_sec])
-                        all_amt = np.concatenate([prev[:, 1], inp["amt"][s:e]])
-                        order = np.argsort(all_sec, kind="stable")
-                        all_sec = all_sec[order]
-                        all_amt = all_amt[order]
-                        # merge equal seconds (RANGE ties share the
-                        # whole tie group, so per-sec sums are exact)
-                        u_sec, inv = np.unique(all_sec, return_inverse=True)
-                        u_amt = np.bincount(
-                            inv, weights=all_amt.astype("float64")
-                        ).astype("int64")
-                        u_b = u_sec // h
-                        csum = np.concatenate(([0], np.cumsum(u_amt)))
-                        row_b = seg_sec // h
-                        # same-bucket partial: sec <= row sec
-                        lo0 = np.searchsorted(u_b, row_b, side="left")
-                        hi0 = np.searchsorted(u_sec, seg_sec, side="right")
-                        score = (csum[hi0] - csum[lo0]) * (1 << 20)
-                        for dd in range(1, 21):
-                            lb = np.searchsorted(u_b, row_b - dd, side="left")
-                            rb2 = np.searchsorted(u_b, row_b - dd, side="right")
-                            score += (csum[rb2] - csum[lb]) * ((1 << 20) >> dd)
-                        out_a[s:e] = score
-                        keep_b = int(seg_sec.max() // h) - 20
-                        kidx = np.searchsorted(u_b, keep_b, side="left")
-                        kept = [
-                            [int(t), int(a)]
-                            for t, a in zip(u_sec[kidx:], u_amt[kidx:])
-                            if a != 0
-                        ]
-                        if kept:
-                            smap[mk] = kept
-                        elif mk in smap:
-                            del smap[mk]
-                    elif m["fam"] == "tent":
-                        # running transition entropy: state =
-                        # [last_symbol, n, sq, {pair: count}]; the
-                        # quantized c*ln(c) deltas telescope exactly,
-                        # matching the batch two-window formulation
-                        # bit-for-bit under the same (sec, ord) order.
-                        # c*ln(c) >= 0, so floor(x + 0.5) == the JVM
-                        # HALF_UP round the batch path uses.
-                        import math as _math
-
-                        st = smap.get(mk) or [None, 0, 0, {}]
-                        last, ncnt, sq, cnts = st[0], st[1], st[2], st[3]
-                        syms = inp["sym"][s:e]
-                        seg_out = out_a[s:e]
-                        for j, ch in enumerate(syms):
-                            if last is not None:
-                                pr = last + "\x01" + ch
-                                cc = cnts.get(pr, 0) + 1
-                                cnts[pr] = cc
-                                r1 = _math.floor(cc * _math.log(cc) * 1e9 + 0.5)
-                                r0 = (
-                                    _math.floor(
-                                        (cc - 1) * _math.log(cc - 1) * 1e9 + 0.5
-                                    )
-                                    if cc >= 2
-                                    else 0
-                                )
-                                sq += r1 - r0
-                                ncnt += 1
-                                h = _math.log(ncnt) - sq / (1e9 * ncnt)
-                                # half-away round to 6, the batch
-                                # path's output contract
-                                seg_out[j] = (
-                                    _math.floor(h * 1e6 + 0.5) / 1e6
-                                )
-                            else:
-                                seg_out[j] = 0.0
-                            last = ch
-                        smap[mk] = [last, ncnt, sq, cnts]
-                    elif m["fam"] == "seq":
-                        k_len = m["k"]
-                        rx = m["rx"]
-                        suffix = smap.get(mk, "")
-                        syms = inp["sym"][s:e]
-                        seg_out = out_a[s:e]
-                        for j, ch in enumerate(syms):
-                            suffix = (suffix + ch)[-k_len:]
-                            seg_out[j] = rx.search(suffix) is not None
-                        if suffix:
-                            smap[mk] = suffix
-                        elif mk in smap:
-                            del smap[mk]
-                    else:
-                        # cache: rebuild the standalone resolver's
-                        # event stream for this segment — per row, its
-                        # gated Set writes then its probe, globally
-                        # sorted (sec, writes-first, stmt idx) — and
-                        # fold the Redis overwrite state through it.
-                        # events: (sec, kind 0=write/1=probe, idx, payload)
-                        key_is_null = keys[s] is None
-                        events = []
-                        for r in range(s, e):
-                            if not key_is_null:
-                                for sm, g_a, v_a in zip(
-                                    m["sets"], inp["g"], inp["v"]
-                                ):
-                                    if g_a[r]:
-                                        v = v_a[r]
-                                        events.append(
-                                            (
-                                                int(sec_a[r]),
-                                                0,
-                                                sm["idx"],
-                                                None if pd.isna(v) else (
-                                                    v.item() if hasattr(v, "item") else v
-                                                ),
-                                                int(sec_a[r]) + sm["ttl"] - 1,
-                                            )
-                                        )
-                            events.append((int(sec_a[r]), 1, 0, r, 0))
-                        events.sort(key=lambda ev: (ev[0], ev[1], ev[2]))
-                        latest = smap.get(mk)  # [ts, idx, exp, val]
-                        for ev in events:
-                            if ev[1] == 0:
-                                ts_w, _, idx_w, val_w, exp_w = ev
-                                if latest is None or [ts_w, idx_w] >= latest[:2]:
-                                    latest = [ts_w, idx_w, exp_w, val_w]
-                            else:
-                                r = ev[3]
-                                if latest is not None and latest[2] >= ev[0]:
-                                    out_a[r] = latest[3]
-                        if latest is not None:
-                            smap[mk] = latest
-                        elif mk in smap:
-                            del smap[mk]
+                for op_fold, smap, inp, out_a in runs:
+                    op_fold(smap, mk, seg_sec, s, e, inp, out_a)
             out = pdf[passthrough_cols].copy()
-            for m, out_a in zip(metas, outs):
-                col = f"__fcv_{m['i']}" if m["fam"] == "cache" else m["name"]
-                out[col] = out_a
-            state.update((_json.dumps(states),))
-            yield out
+            for out_col, (*_, out_a) in zip(out_cols, runs):
+                out[out_col] = out_a
+            return out, dict(zip(idents, smaps))
 
-        return aug.groupBy("__fs_bkt").applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=T.StructType(
-                [T.StructField("states_json", T.StringType())]
-            ),
-            outputMode="append",
-            timeoutConf="NoTimeout",
+        frame = run_keyed_state(
+            aug, fold, out_schema, "states_json",
+            bucket=("__fs_bkt", [F.col("__fs_key")]),
         )
+        for i, (fam, sp) in enumerate(fspecs):
+            if fam == "cache":
+                frame = frame.select(
+                    "*", self._cache_result(F.col(f"__fcv_{i}"), sp).alias(sp["name"])
+                ).drop(f"__fcv_{i}")
+        return frame
 
-    def _join_cache_streaming(self, df: DataFrame, spec: dict, sec: Column) -> DataFrame:
-        """Streaming strategy for a CacheGet: each event row explodes
-        into its Set-write pieces (narrow: key, ts, stmt idx, value,
-        expiry) and one probe piece carrying every input column; the
-        union groups by key value into applyInPandasWithState, whose
-        state is just the LATEST write (Redis overwrite semantics
-        makes the state O(1) per key). Probes re-emerge with the
-        looked-up value — no stream-stream join-back. Within a key,
-        pieces process in (ts, writes-before-reads) order; cross-batch
-        late writes follow watermark limits.
+    @staticmethod
+    def _cache_result(looked_up: Column, spec: dict) -> Column:
+        """A CacheGet's value from its raw lookup: the default when
+        nothing live was found or the Get's gate is off."""
+        result = F.coalesce(looked_up, spec["default_col"])
+        if spec["gate"] is not None:
+            result = F.when(
+                F.coalesce(spec["gate"], F.lit(False)), result
+            ).otherwise(spec["default_col"])
+        return result
 
-        Groups by hash-BUCKET of the key with a {key: latest-write}
-        map per bucket (same key-coalescing as the window counter:
-        applyInPandasWithState's fixed per-group cost dominates at
-        high key cardinality; per-key semantics are preserved by
-        per-key segment folds within the (key, ts)-sorted bucket)."""
-        import json as _json
-        import os as _os
-
+    def _join_cache_streaming(self, df: DataFrame, spec: dict) -> DataFrame:
+        """Streaming strategy for a CacheGet whose Set statements key
+        differently from the Get — the one case the fused pass cannot
+        route, since it groups every row by the Get's key. Each event
+        row explodes into its Set-write pieces (narrow: key, ts, stmt
+        idx, value, expiry) and one probe piece carrying every input
+        column; the union groups by a hash bucket of the key value,
+        with a per-bucket {key: latest write} map (Redis overwrite
+        semantics makes the state O(1) per key). Probes re-emerge with
+        the looked-up value — no stream-stream join-back. Within a
+        key, pieces process in (ts, writes-before-reads) order;
+        cross-batch late writes follow watermark limits."""
+        import numpy as np
         import pandas as pd
         from pyspark.sql import types as T
 
-        n_buckets = _state_bucket_count()
+        from ..streaming.keyed_state import run_keyed_state
+
+        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
         cast = spec["cast"]
         probe = df.select(
             "*",
@@ -2750,19 +1637,7 @@ class CompiledRuleset:
 
         _NULL_KEY = "\x00"
 
-        def fn(key, pdf_iter, state):
-            import numpy as np
-
-            smap = _json.loads(state.get[0]) if state.exists else {}
-            # Materialize the whole group first — Arrow chunking is not
-            # time-ordered, so per-chunk sorting + state folding would
-            # let a chunk-1 write shadow a chunk-2 probe that precedes
-            # it in event time (chunk-boundary-dependent lookups).
-            chunks = [c for c in pdf_iter if len(c)]
-            if not chunks:
-                state.update((_json.dumps(smap),))
-                return
-            pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+        def fold(pdf, smap):
             # per key: writes before probes at equal ts; among same-ts
             # writes, statement idx ascending so "last position"
             # = max (ts, idx) — the batch window's struct max
@@ -2834,25 +1709,15 @@ class CompiledRuleset:
             probes = ~is_set_all
             out = pdf[probes][passthrough_cols].copy()
             out["__cval"] = cval[probes]
-            state.update((_json.dumps(smap),))
-            yield out
+            return out, smap
 
-        looked = rel.withColumn(
-            "__cbkt",
-            F.pmod(F.xxhash64(F.col("__ck")), F.lit(n_buckets)).cast("int"),
-        ).groupBy("__cbkt").applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=T.StructType([T.StructField("latest_json", T.StringType())]),
-            outputMode="append",
-            timeoutConf="NoTimeout",
+        looked = run_keyed_state(
+            rel, fold, out_schema, "latest_json",
+            bucket=("__cbkt", [F.col("__ck")]),
         )
-        result = F.coalesce(F.col("__cval"), spec["default_col"])
-        if spec["gate"] is not None:
-            result = F.when(
-                F.coalesce(spec["gate"], F.lit(False)), result
-            ).otherwise(spec["default_col"])
-        return looked.select("*", result.alias(spec["name"])).drop("__cval")
+        return looked.select(
+            "*", self._cache_result(F.col("__cval"), spec).alias(spec["name"])
+        ).drop("__cval")
 
     def release_cache_state(self) -> None:
         """Unpersist the pinned row-id frames cache lookups created —
@@ -2862,27 +1727,13 @@ class CompiledRuleset:
         self._cache_persists = []
 
     def _hoisted_feature_order(
-        self,
-        window_specs: dict,
-        cache_specs: dict,
-        seq_specs: dict | None = None,
-        distinct_specs: dict | None = None,
-        session_specs: dict | None = None,
-        last_specs: dict | None = None,
-        wsum_specs: dict | None = None,
-        age_specs: dict | None = None,
-        rl_specs: dict | None = None,
-        unique_specs: dict | None = None,
-        wminmax_specs: dict | None = None,
-        seen_specs: dict | None = None,
-        decay_specs: dict | None = None,
-        tent_specs: dict | None = None,
-        burst_specs: dict | None = None,
+        self, state_specs: dict[str, tuple[str, dict]]
     ) -> list[tuple[str, Optional[Column]]]:
         """Feature materialization order with STATE OPS HOISTED as
-        early as their dependencies allow.
+        early as their dependencies allow. ``state_specs`` maps each
+        state op's mangled name to its (family, spec).
 
-        Why: the streaming window/cache ops ship every column of their
+        Why: the streaming state ops ship every column of their
         input frame through Arrow (python state fn) and back. In
         source order a state op defined after N features carries all N
         through that boundary — measured 5x throughput loss on the
@@ -2898,13 +1749,15 @@ class CompiledRuleset:
         an op earlier past non-dependencies cannot break any earlier
         entry, and dependents compiled after it stay after it (their
         relative order is unchanged). Dependencies are extracted from
-        the op's spec columns (key/increment/gate/default + paired
-        cache writes) via the unresolved column tree, with a raw
-        mangled-token scan as a conservative superset for columns
-        built from SQL strings; unknown names are ignored. Batch
-        frames get the same order — feature columns are pure
-        expressions, so materialization order is semantics-free there.
+        the op's input columns (``families.spec_columns``) via the
+        unresolved column tree, with a raw mangled-token scan as a
+        conservative superset for columns built from SQL strings;
+        unknown names are ignored. Batch frames get the same order —
+        feature columns are pure expressions, so materialization order
+        is semantics-free there.
         """
+        from .families import spec_columns
+
         # pure function of compile-time state — memoize so repeated
         # apply() calls skip the per-column py4j node().toString()
         # round trips (the compiled-ruleset session cache otherwise
@@ -2912,134 +1765,20 @@ class CompiledRuleset:
         cached = getattr(self, "_hoisted_order_cache", None)
         if cached is not None:
             return cached
-        seq_specs = seq_specs or {}
-        distinct_specs = distinct_specs or {}
-        session_specs = session_specs or {}
-        last_specs = last_specs or {}
-        wsum_specs = wsum_specs or {}
-        age_specs = age_specs or {}
-        rl_specs = rl_specs or {}
-        unique_specs = unique_specs or {}
-        wminmax_specs = wminmax_specs or {}
-        seen_specs = seen_specs or {}
-        decay_specs = decay_specs or {}
-        tent_specs = tent_specs or {}
-        burst_specs = burst_specs or {}
         entries = list(self.ctx.feature_exprs)
         pos = {name: i for i, (name, _) in enumerate(entries)}
         label_specs = {s["name"]: s for s in self.ctx.label_lookups}
 
-        def spec_cols(mangled: str) -> list[Column]:
-            if mangled in session_specs:
-                return [session_specs[mangled]["key_col"]]
-            if mangled in last_specs:
-                s = last_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["order_col"] is not None:
-                    cols.append(s["order_col"])
-                return cols
-            if mangled in wsum_specs:
-                s = wsum_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in decay_specs:
-                s = decay_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in tent_specs:
-                s = tent_specs[mangled]
-                cols = [s["key_col"], s["state_col"]]
-                if s["order_col"] is not None:
-                    cols.append(s["order_col"])
-                return cols
-            if mangled in age_specs:
-                return [age_specs[mangled]["key_col"]]
-            if mangled in burst_specs:
-                return [burst_specs[mangled]["key_col"]]
-            if mangled in rl_specs:
-                s = rl_specs[mangled]
-                cols = [s["key_col"]]
-                if s["order_col"] is not None:
-                    cols.append(s["order_col"])
-                return cols
-            if mangled in distinct_specs:
-                s = distinct_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in unique_specs:
-                s = unique_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in wminmax_specs:
-                s = wminmax_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in seen_specs:
-                s = seen_specs[mangled]
-                cols = [s["key_col"], s["value_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in seq_specs:
-                s = seq_specs[mangled]
-                cols = [s["key_col"], s["symbol_col"]]
-                if s["order_col"] is not None:
-                    cols.append(s["order_col"])
-                return cols
-            if mangled in window_specs:
-                s = window_specs[mangled]
-                cols = [s["key_col"], s["incremented"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                return cols
-            if mangled in cache_specs:
-                s = cache_specs[mangled]
-                cols = [s["key_col"], s["default_col"]]
-                if s["gate"] is not None:
-                    cols.append(s["gate"])
-                for st in s["sets"]:
-                    cols.append(st["key_col"])
-                    cols.append(st["value_col"])
-                    if st["gate"] is not None:
-                        cols.append(st["gate"])
-                return cols
-            return [label_specs[mangled]["entity_col"]]
-
         refs_of: dict[str, set] = {}
         state_ops: list[str] = []
         for name, defn in entries:
-            if defn is None:
-                cols = spec_cols(name)
-                if (
-                    name in window_specs
-                    or name in cache_specs
-                    or name in seq_specs
-                    or name in distinct_specs
-                    or name in session_specs
-                    or name in last_specs
-                    or name in wsum_specs
-                    or name in age_specs
-                    or name in rl_specs
-                    or name in unique_specs
-                    or name in wminmax_specs
-                    or name in seen_specs
-                    or name in decay_specs
-                    or name in tent_specs
-                    or name in burst_specs
-                ):
-                    state_ops.append(name)
-            else:
+            if defn is not None:
                 cols = [defn]
+            elif name in state_specs:
+                cols = spec_columns(*state_specs[name])
+                state_ops.append(name)
+            else:
+                cols = [label_specs[name]["entity_col"]]
             deps: set = set()
             for c in cols:
                 deps |= _column_refs(c)
@@ -3105,60 +1844,33 @@ class CompiledRuleset:
         # collapses single-use chains and keeps multi-use expressions
         # shared (collapseProjectAlwaysInline=false), so the optimized
         # plan stays linear in ruleset size.
-        cache_specs = {s["name"]: s for s in getattr(self.ctx, "cache_lookups", [])}
-        window_specs = {s["name"]: s for s in getattr(self.ctx, "window_lookups", [])}
-        seq_specs = {s["name"]: s for s in getattr(self.ctx, "seq_lookups", [])}
-        distinct_specs = {
-            s["name"]: s for s in getattr(self.ctx, "distinct_lookups", [])
-        }
-        session_specs = {
-            s["name"]: s for s in getattr(self.ctx, "session_lookups", [])
-        }
-        last_specs = {s["name"]: s for s in getattr(self.ctx, "last_lookups", [])}
-        wsum_specs = {s["name"]: s for s in getattr(self.ctx, "wsum_lookups", [])}
-        age_specs = {s["name"]: s for s in getattr(self.ctx, "age_lookups", [])}
-        rl_specs = {
-            s["name"]: s for s in getattr(self.ctx, "ratelimit_lookups", [])
-        }
-        unique_specs = {
-            s["name"]: s for s in getattr(self.ctx, "unique_lookups", [])
-        }
-        wminmax_specs = {
-            s["name"]: s for s in getattr(self.ctx, "wminmax_lookups", [])
-        }
-        seen_specs = {s["name"]: s for s in getattr(self.ctx, "seen_lookups", [])}
-        decay_specs = {s["name"]: s for s in getattr(self.ctx, "decay_lookups", [])}
-        tent_specs = {s["name"]: s for s in getattr(self.ctx, "tent_lookups", [])}
-        burst_specs = {
-            s["name"]: s for s in getattr(self.ctx, "burst_lookups", [])
+        from .families import FAMILIES, spec_columns, stable_node
+
+        state_specs = {
+            sp["name"]: (fam, sp)
+            for fam, f in FAMILIES.items()
+            for sp in getattr(self.ctx, f.lookups, [])
         }
         # STATE-OP FUSION (streaming only): a maximal run of
-        # consecutive window/seq state ops sharing one key expression
-        # resolves through a single applyInPandasWithState — one
-        # exchange + one state-store pass for N mechanisms. Runs break
-        # on: a non-window/seq entry, a different key node, a second
-        # seq order expression, or an op whose inputs reference a
-        # fused op's output (it must see that column materialized).
+        # consecutive state ops sharing one key expression resolves
+        # through a single applyInPandasWithState — one exchange + one
+        # state-store pass for N mechanisms. Runs break on: a
+        # non-state entry, a different key node, a second order
+        # expression, or an op whose inputs reference a fused op's
+        # output (it must see that column materialized).
         streaming = df.isStreaming
-
-        def _node(col) -> str:
-            try:
-                return col._jc.node().toString()
-            except Exception:  # pragma: no cover - defensive
-                return repr(col)
-
         pending: list[tuple[str, dict]] = []
         state_passes: list[list[str]] = []
 
         def _register_pass(names: list[str]) -> None:
             # Spark allows ONE applyInPandasWithState per streaming
-            # query; fusion collapses same-key window/seq runs into
-            # one, but groups split by key changes, inter-op
-            # dependencies, or cache ops cannot share a pass. Fail
-            # here with the split, not deep inside Spark's
+            # query; fusion collapses same-key runs into one, but
+            # groups split by key changes, inter-op dependencies, or
+            # cross-keyed cache writes cannot share a pass. Fail here
+            # with the split, not deep inside Spark's
             # UnsupportedOperationChecker (or a scratch-column
             # resolution error) when the second pass builds.
-            if streaming and state_passes:
+            if state_passes:
                 groups = "; ".join(
                     "{" + ", ".join(g) + "}" for g in state_passes + [names]
                 )
@@ -3177,272 +1889,61 @@ class CompiledRuleset:
             if not pending:
                 return frame
             _register_pass([sp["name"] for _, sp in pending])
-            if len(pending) == 1 and pending[0][0] not in (
-                "wdistinct",
-                "sess",
-                "last",
-                "wsum",
-                "age",
-                "rl",
-                "unique",
-                "wminmax",
-                "seen",
-                "decay",
-                "tent",
-                "burst",
-            ):
-                fam, sp = pending[0]
-                if fam == "window":
-                    frame = self._join_window_count(frame, sp)
-                elif fam == "seq":
-                    frame = self._join_seq_match(frame, sp)
-                else:
-                    frame = self._join_cache(frame, sp)
-            else:
-                group = list(pending)
-                frame = self._join_fused_state(frame, group)
-                # cache entries come back as raw "__fcv_{i}" lookup
-                # columns; apply default/gate JVM-side exactly like
-                # the standalone resolver's tail
-                for i, (fam, sp) in enumerate(group):
-                    if fam != "cache":
-                        continue
-                    result = F.coalesce(F.col(f"__fcv_{i}"), sp["default_col"])
-                    if sp["gate"] is not None:
-                        result = F.when(
-                            F.coalesce(sp["gate"], F.lit(False)), result
-                        ).otherwise(sp["default_col"])
-                    frame = frame.select("*", result.alias(sp["name"])).drop(
-                        f"__fcv_{i}"
-                    )
+            frame = self._join_fused_state(frame, list(pending))
             pending.clear()
             return frame
-
-        def _spec_refs(fam: str, sp: dict) -> set:
-            cols = [sp["key_col"]]
-            if fam == "window":
-                cols.append(sp["incremented"])
-                if sp["gate"] is not None:
-                    cols.append(sp["gate"])
-            elif fam == "seq":
-                cols.append(sp["symbol_col"])
-                if sp["order_col"] is not None:
-                    cols.append(sp["order_col"])
-            elif fam in ("wdistinct", "unique", "wminmax", "seen"):
-                cols.append(sp["value_col"])
-                if sp["gate"] is not None:
-                    cols.append(sp["gate"])
-            elif fam in ("sess", "age", "burst"):
-                pass  # only the key
-            elif fam == "rl":
-                if sp["order_col"] is not None:
-                    cols.append(sp["order_col"])
-            elif fam == "last":
-                cols.append(sp["value_col"])
-                if sp["order_col"] is not None:
-                    cols.append(sp["order_col"])
-            elif fam in ("wsum", "decay"):
-                cols.append(sp["value_col"])
-                if sp["gate"] is not None:
-                    cols.append(sp["gate"])
-            elif fam == "tent":
-                cols.append(sp["state_col"])
-                if sp["order_col"] is not None:
-                    cols.append(sp["order_col"])
-            else:  # cache
-                if sp["gate"] is not None:
-                    cols.append(sp["gate"])
-                cols.append(sp["default_col"])
-                for s in sp["sets"]:
-                    cols.append(s["key_col"])
-                    cols.append(s["value_col"])
-                    if s["gate"] is not None:
-                        cols.append(s["gate"])
-            refs: set = set()
-            for c in cols:
-                refs |= _column_refs(c)
-            return refs
 
         def _fusable(fam: str, sp: dict) -> bool:
             if not pending:
                 return True
-            key_node = _node(pending[0][1]["key_col"])
-            if _node(sp["key_col"]) != key_node:
+            key_node = stable_node(pending[0][1]["key_col"])
+            if stable_node(sp["key_col"]) != key_node:
                 return False
             if fam == "cache":
                 # every Set statement must write through the SAME key
                 # the fused pass groups by, or its writes would land
                 # in the wrong bucket
                 for s in sp["sets"]:
-                    if _node(s["key_col"]) != key_node:
+                    if stable_node(s["key_col"]) != key_node:
                         return False
-            if fam in ("seq", "last", "rl", "tent") and sp["order_col"] is not None:
-                for pf, psp in pending:
-                    if (
-                        pf in ("seq", "last", "rl", "tent")
-                        and psp["order_col"] is not None
-                        and _node(psp["order_col"]) != _node(sp["order_col"])
-                    ):
+            if sp.get("order_col") is not None:
+                for _, psp in pending:
+                    if psp.get("order_col") is not None and stable_node(
+                        psp["order_col"]
+                    ) != stable_node(sp["order_col"]):
                         return False
             emitted = {psp["name"] for _, psp in pending}
-            return not (_spec_refs(fam, sp) & emitted)
+            refs: set = set()
+            for c in spec_columns(fam, sp):
+                refs |= _column_refs(c)
+            return not (refs & emitted)
 
-        for mangled, defn in self._hoisted_feature_order(
-            window_specs,
-            cache_specs,
-            seq_specs,
-            distinct_specs,
-            session_specs,
-            last_specs,
-            wsum_specs,
-            age_specs,
-            rl_specs,
-            unique_specs,
-            wminmax_specs,
-            seen_specs,
-            decay_specs,
-            tent_specs,
-            burst_specs,
-        ):
-            if defn is None:
-                if streaming and mangled in rl_specs:
-                    sp = rl_specs[mangled]
-                    if not _fusable("rl", sp):
-                        df = _flush(df)
-                    pending.append(("rl", sp))
-                    continue
-                if streaming and mangled in unique_specs:
-                    sp = unique_specs[mangled]
-                    if not _fusable("unique", sp):
-                        df = _flush(df)
-                    pending.append(("unique", sp))
-                    continue
-                if streaming and mangled in wminmax_specs:
-                    sp = wminmax_specs[mangled]
-                    if not _fusable("wminmax", sp):
-                        df = _flush(df)
-                    pending.append(("wminmax", sp))
-                    continue
-                if streaming and mangled in seen_specs:
-                    sp = seen_specs[mangled]
-                    if not _fusable("seen", sp):
-                        df = _flush(df)
-                    pending.append(("seen", sp))
-                    continue
-                if streaming and mangled in age_specs:
-                    sp = age_specs[mangled]
-                    if not _fusable("age", sp):
-                        df = _flush(df)
-                    pending.append(("age", sp))
-                    continue
-                if streaming and mangled in wsum_specs:
-                    sp = wsum_specs[mangled]
-                    if not _fusable("wsum", sp):
-                        df = _flush(df)
-                    pending.append(("wsum", sp))
-                    continue
-                if streaming and mangled in decay_specs:
-                    sp = decay_specs[mangled]
-                    if not _fusable("decay", sp):
-                        df = _flush(df)
-                    pending.append(("decay", sp))
-                    continue
-                if streaming and mangled in tent_specs:
-                    sp = tent_specs[mangled]
-                    if not _fusable("tent", sp):
-                        df = _flush(df)
-                    pending.append(("tent", sp))
-                    continue
-                if streaming and mangled in burst_specs:
-                    sp = burst_specs[mangled]
-                    if not _fusable("burst", sp):
-                        df = _flush(df)
-                    pending.append(("burst", sp))
-                    continue
-                if streaming and mangled in last_specs:
-                    sp = last_specs[mangled]
-                    if not _fusable("last", sp):
-                        df = _flush(df)
-                    pending.append(("last", sp))
-                    continue
-                if streaming and mangled in session_specs:
-                    sp = session_specs[mangled]
-                    if not _fusable("sess", sp):
-                        df = _flush(df)
-                    pending.append(("sess", sp))
-                    continue
-                if streaming and mangled in distinct_specs:
-                    sp = distinct_specs[mangled]
-                    if not _fusable("wdistinct", sp):
-                        df = _flush(df)
-                    pending.append(("wdistinct", sp))
-                    continue
-                if streaming and mangled in window_specs:
-                    sp = window_specs[mangled]
-                    if not _fusable("window", sp):
-                        df = _flush(df)
-                    pending.append(("window", sp))
-                    continue
-                if streaming and mangled in seq_specs:
-                    sp = seq_specs[mangled]
-                    if not _fusable("seq", sp):
-                        df = _flush(df)
-                    pending.append(("seq", sp))
-                    continue
-                if streaming and mangled in cache_specs:
-                    sp = cache_specs[mangled]
-                    key_node = _node(sp["key_col"])
-                    internal_ok = all(
-                        _node(s["key_col"]) == key_node for s in sp["sets"]
-                    )
-                    if not internal_ok:
-                        # writes keyed differently from the reads:
-                        # only the standalone union resolver can
-                        # route them — force a singleton pass
-                        df = _flush(df)
-                        pending.append(("cache", sp))
-                        df = _flush(df)
-                        continue
-                    if not _fusable("cache", sp):
-                        df = _flush(df)
-                    pending.append(("cache", sp))
-                    continue
-                df = _flush(df)
-                if mangled in cache_specs:
-                    df = self._join_cache(df, cache_specs[mangled])
-                elif mangled in window_specs:
-                    df = self._join_window_count(df, window_specs[mangled])
-                elif mangled in seq_specs:
-                    df = self._join_seq_match(df, seq_specs[mangled])
-                elif mangled in distinct_specs:
-                    df = self._join_window_distinct(df, distinct_specs[mangled])
-                elif mangled in session_specs:
-                    df = self._join_session_count(df, session_specs[mangled])
-                elif mangled in last_specs:
-                    df = self._join_last_value(df, last_specs[mangled])
-                elif mangled in wsum_specs:
-                    df = self._join_window_sum(df, wsum_specs[mangled])
-                elif mangled in age_specs:
-                    df = self._join_key_age(df, age_specs[mangled])
-                elif mangled in burst_specs:
-                    df = self._join_burstiness(df, burst_specs[mangled])
-                elif mangled in rl_specs:
-                    df = self._join_rate_limit(df, rl_specs[mangled])
-                elif mangled in unique_specs:
-                    df = self._join_unique_count(df, unique_specs[mangled])
-                elif mangled in wminmax_specs:
-                    df = self._join_window_minmax(df, wminmax_specs[mangled])
-                elif mangled in seen_specs:
-                    df = self._join_seen_before(df, seen_specs[mangled])
-                elif mangled in decay_specs:
-                    df = self._join_decay_score(df, decay_specs[mangled])
-                elif mangled in tent_specs:
-                    df = self._join_transition_entropy(df, tent_specs[mangled])
-                else:
-                    df = self._join_label(df, labels_df, specs[mangled])
-            else:
+        for mangled, defn in self._hoisted_feature_order(state_specs):
+            if defn is not None:
                 df = _flush(df)
                 df = df.select("*", defn.alias(mangled))
+                continue
+            if mangled not in state_specs:
+                df = _flush(df)
+                df = self._join_label(df, labels_df, specs[mangled])
+                continue
+            fam, sp = state_specs[mangled]
+            if not streaming:
+                df = getattr(self, FAMILIES[fam].batch)(df, sp)
+                continue
+            if fam == "cache" and any(
+                stable_node(s["key_col"]) != stable_node(sp["key_col"])
+                for s in sp["sets"]
+            ):
+                # writes keyed differently from the reads: only the
+                # union resolver can route them — a pass of its own
+                df = _flush(df)
+                _register_pass([mangled])
+                df = self._join_cache_streaming(df, sp)
+                continue
+            if not _fusable(fam, sp):
+                df = _flush(df)
+            pending.append((fam, sp))
         df = _flush(df)
         # Output-name collision guard: the result frame must be usable
         # under Spark's DEFAULT case-insensitive resolution, not just

@@ -143,24 +143,13 @@ def stream_latest_snapshot(
     import json
 
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from ..streaming.keyed_state import run_keyed_state
 
     keys = list(key_cols)
     pays = list(payload_cols)
-    src = changelog.select(
-        *keys, version_col, *pays
-    ).withColumn(
-        "_bkt",
-        F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(int(n_buckets))).cast(
-            "int"
-        ),
-    )
+    src = changelog.select(*keys, version_col, *pays)
     in_fields = {f.name: f for f in src.schema.fields}
     out_schema = StructType(
         [in_fields[c] for c in keys]
@@ -168,22 +157,10 @@ def stream_latest_snapshot(
         + [in_fields[c] for c in pays]
         + [StructField("upd_seq", LongType())]
     )
-    state_schema = StructType([StructField("best_json", StringType())])
 
-    def fn(key, pdf_iter, state):
-        best, seq = (
-            json.loads(state.get[0]) if state.exists else ({}, 0)
-        )
-        chunks = [c for c in pdf_iter if len(c)]
-        if not chunks:
-            if state.exists:
-                state.update((json.dumps([best, seq]),))
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
+    def fold(pdf, st):
+        best, seq = st
+
         def _py(x):
             return x.item() if hasattr(x, "item") else x
 
@@ -200,21 +177,23 @@ def stream_latest_snapshot(
                 best[sk] = cand
             touched[sk] = kt
         seq += 1
-        state.update((json.dumps([best, seq]),))
         out_rows = []
         for sk, kt in touched.items():
             v = best[sk]
             out_rows.append(kt + v + [seq])
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             out_rows, columns=keys + [version_col] + pays + ["upd_seq"]
         )
+        return out, [best, seq]
 
-    return src.groupBy("_bkt").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return run_keyed_state(
+        src,
+        fold,
+        out_schema,
+        "best_json",
+        bucket=("_bkt", [F.col(k) for k in keys]),
+        n_buckets=n_buckets,
+        initial=lambda: [{}, 0],
     )
 
 

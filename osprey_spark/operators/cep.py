@@ -299,15 +299,12 @@ def stream_sequence_match(
     plausible match span, not the conversation length). Anchors are
     rejected — prefix consumption would change their meaning.
 
-    Key coalescing as in ``streaming/state.py``: grouped by a hash
+    Key coalescing as in ``streaming/keyed_state.py``: grouped by a hash
     bucket of the key (OSPREY_WC_STATE_BUCKETS) with a per-bucket
     {key: state} map; per-key segments of the (key, order)-sorted batch
     fold independently, so semantics equal per-key grouping while the
     fixed per-group Arrow cost amortizes across keys.
     """
-    import json
-    import os
-
     import pandas as pd
     from pyspark.sql.types import (
         LongType,
@@ -316,11 +313,12 @@ def stream_sequence_match(
         StructType,
     )
 
+    from ..streaming.keyed_state import run_keyed_state
+
     _validate_pattern(pattern)
     if "^" in pattern or "$" in pattern:
         raise ValueError("anchors are not supported in the streaming form")
     rx = re.compile(pattern)
-    n_buckets = state_bucket_count()
 
     out_schema = StructType(
         [
@@ -332,13 +330,7 @@ def stream_sequence_match(
         ]
     )
 
-    def fn(key_tuple, pdf_iter, state):
-        smap = json.loads(state.get[0]) if state.exists else {}
-        chunks = [c for c in pdf_iter if len(c)]
-        if not chunks:
-            state.update((json.dumps(smap),))
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    def fold(pdf, smap):
         pdf = pdf.sort_values([key_col, order_col], kind="stable")
         out_keys, out_sess, out_len, out_n, out_first = [], [], [], [], []
 
@@ -388,8 +380,7 @@ def stream_sequence_match(
                 base += drop
             smap[mk] = [sess, seq_len, n_matches, first_idx, base, buf, last_sec]
             emit(conv, sess, seq_len, n_matches, first_idx)
-        state.update((json.dumps(smap),))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 key_col: out_keys,
                 "session_id": out_sess,
@@ -398,26 +389,20 @@ def stream_sequence_match(
                 "first_match_idx": pd.array(out_first, dtype="Int64"),
             }
         )
+        return out, smap
 
-    src = (
-        turns.withWatermark(ts_col, watermark)
-        .select(
-            F.col(key_col).cast("string").alias(key_col),
-            F.col(order_col),
-            F.col(ts_col),
-            symbol.alias("_sym"),
-            F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-            .cast("int")
-            .alias("__cep_bkt"),
-        )
-        .groupBy("__cep_bkt")
+    src = turns.withWatermark(ts_col, watermark).select(
+        F.col(key_col).cast("string").alias(key_col),
+        F.col(order_col),
+        F.col(ts_col),
+        symbol.alias("_sym"),
     )
-    return src.applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=StructType([StructField("state_json", StringType())]),
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return run_keyed_state(
+        src,
+        fold,
+        out_schema,
+        "state_json",
+        bucket=("__cep_bkt", [F.col(key_col).cast("string")]),
     )
 
 

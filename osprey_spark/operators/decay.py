@@ -128,7 +128,6 @@ def stream_decay_counters(
     import json
 
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -136,16 +135,11 @@ def stream_decay_counters(
         StructType,
     )
 
+    from ..streaming.keyed_state import run_keyed_state
+
     keys = list(key_cols)
     sec = F.col(ts_col).cast("timestamp").cast("long")
-    src = turns.select(
-        *keys, _bucket_col(sec, halflife_s).alias("_b")
-    ).withColumn(
-        "_bkt",
-        F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(int(n_buckets))).cast(
-            "int"
-        ),
-    )
+    src = turns.select(*keys, _bucket_col(sec, halflife_s).alias("_b"))
     in_fields = {f.name: f for f in src.schema.fields}
     out_schema = StructType(
         [in_fields[k] for k in keys]
@@ -156,21 +150,9 @@ def stream_decay_counters(
             StructField("upd_seq", LongType()),
         ]
     )
-    state_schema = StructType([StructField("state_json", StringType())])
-
-    def fn(key, pdf_iter, state):
+    def fold(pdf, state):
         # per logical key: [n_events, {bucket: count}]
-        st, seq = json.loads(state.get[0]) if state.exists else ({}, 0)
-        chunks = [c for c in pdf_iter if len(c)]
-        if not chunks:
-            if state.exists:
-                state.update((json.dumps([st, seq]),))
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
+        st, seq = state
         touched = {}
         part = pdf.groupby(keys + ["_b"]).size()
         for kt, n in part.items():
@@ -191,7 +173,6 @@ def stream_decay_counters(
                 b: c for b, c in counts.items() if int(b) >= mb - MAX_SHIFT
             }
         seq += 1
-        state.update((json.dumps([st, seq]),))
         rows = []
         for sk, klist in touched.items():
             n_ev, counts = st[sk]
@@ -204,17 +185,20 @@ def stream_decay_counters(
                     seq,
                 ]
             )
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             rows,
             columns=keys + ["n_events", "max_bucket", "counts_json", "upd_seq"],
         )
+        return out, [st, seq]
 
-    return src.groupBy("_bkt").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return run_keyed_state(
+        src,
+        fold,
+        out_schema,
+        "state_json",
+        bucket=("_bkt", [F.col(k) for k in keys]),
+        n_buckets=n_buckets,
+        initial=lambda: [{}, 0],
     )
 
 

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from ..streaming.buckets import state_bucket_count
 
 from ..functions.text import tokenize_col
 
@@ -166,14 +165,12 @@ def stream_turn_repetition(
     Tokenization uses ``re.ASCII`` so Python's ``\\w`` matches the JVM
     regex default the batch column expression compiles to.
 
-    Key coalescing as in ``streaming/state.py``: grouped by a hash
+    Key coalescing as in ``streaming/keyed_state.py``: grouped by a hash
     bucket of conv_id (OSPREY_WC_STATE_BUCKETS) with a per-bucket
     {conv: state} map, per-conv segments of the (conv, turn_idx)-sorted
     batch folding independently — per-key semantics at a fixed
     per-group Arrow cost amortized across keys.
     """
-    import json
-    import os
     import re as _re
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -186,7 +183,8 @@ def stream_turn_repetition(
         StructType,
     )
 
-    n_buckets = state_bucket_count()
+    from ..streaming.keyed_state import run_keyed_state
+
     split_rx = _re.compile(r"[\W_]+", _re.ASCII)
     _q = Decimal("0.000001")
 
@@ -206,13 +204,7 @@ def stream_turn_repetition(
         ]
     )
 
-    def fn(key_tuple, pdf_iter, state):
-        smap = json.loads(state.get[0]) if state.exists else {}
-        chunks = [c for c in pdf_iter if len(c)]
-        if not chunks:
-            state.update((json.dumps(smap),))
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    def fold(pdf, smap):
         pdf = pdf.sort_values([conv_col, idx_col], kind="stable")
         out_conv, out_np, out_nr, out_mean = [], [], [], []
         for conv, grp in pdf.groupby(conv_col, sort=False):
@@ -240,8 +232,7 @@ def stream_turn_repetition(
                 out_np.append(n_pairs)
                 out_nr.append(n_rep)
                 out_mean.append(_round6(sum_j / n_pairs))
-        state.update((json.dumps(smap),))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 conv_col: out_conv,
                 "n_pairs": pd.array(out_np, dtype="int64"),
@@ -249,26 +240,20 @@ def stream_turn_repetition(
                 "mean_jaccard": pd.array(out_mean, dtype="float64"),
             }
         )
+        return out, smap
 
-    src = (
-        turns.withWatermark(ts_col, watermark)
-        .select(
-            F.col(conv_col).cast("string").alias(conv_col),
-            F.col(idx_col),
-            F.col(ts_col),
-            F.col(text_col),
-            F.pmod(F.xxhash64(F.col(conv_col).cast("string")), F.lit(n_buckets))
-            .cast("int")
-            .alias("__rep_bkt"),
-        )
-        .groupBy("__rep_bkt")
+    src = turns.withWatermark(ts_col, watermark).select(
+        F.col(conv_col).cast("string").alias(conv_col),
+        F.col(idx_col),
+        F.col(ts_col),
+        F.col(text_col),
     )
-    return src.applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=StructType([StructField("state_json", StringType())]),
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return run_keyed_state(
+        src,
+        fold,
+        out_schema,
+        "state_json",
+        bucket=("__rep_bkt", [F.col(conv_col).cast("string")]),
     )
 
 
@@ -409,10 +394,7 @@ def stream_transition_counts(
     before emission. Duplicate (conv, turn_idx) deliveries keep the
     FIRST symbol (at-least-once upstream tolerated).
     """
-    import json
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -420,13 +402,13 @@ def stream_transition_counts(
         StructType,
     )
 
+    from ..streaming.keyed_state import run_keyed_state
+
     sym = F.coalesce(F.col(tool_col), F.col(role_col))
     src = turns.select(
         F.col(conv_col).cast("string").alias("_conv"),
         F.col(idx_col).cast("long").alias("_idx"),
         sym.cast("string").alias("_sym"),
-    ).withColumn(
-        "_bkt", F.pmod(F.xxhash64("_conv"), F.lit(int(n_buckets))).cast("int")
     )
     out_schema = StructType(
         [
@@ -435,7 +417,6 @@ def stream_transition_counts(
             StructField("delta", LongType()),
         ]
     )
-    state_schema = StructType([StructField("seqs_json", StringType())])
 
     def _pairs(seq_map):
         # seq_map: {idx(str): sym}; ordered adjacency pairs
@@ -445,18 +426,7 @@ def stream_transition_counts(
             out[(a, b)] = out.get((a, b), 0) + 1
         return out
 
-    def fn(key, pdf_iter, state):
-        seqs = json.loads(state.get[0]) if state.exists else {}
-        chunks = [c for c in pdf_iter if len(c)]
-        if not chunks:
-            if state.exists:
-                state.update((json.dumps(seqs),))
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
+    def fold(pdf, seqs):
         deltas: dict = {}
         for conv, grp in pdf.groupby("_conv"):
             cur = seqs.get(conv, {})
@@ -471,18 +441,18 @@ def stream_transition_counts(
                 d = after.get(p, 0) - before.get(p, 0)
                 if d:
                     deltas[p] = deltas.get(p, 0) + d
-        state.update((json.dumps(seqs),))
         if not deltas:
-            return
+            return None, seqs
         rows = [[a, b, d] for (a, b), d in deltas.items()]
-        yield pd.DataFrame(rows, columns=["src", "dst", "delta"])
+        return pd.DataFrame(rows, columns=["src", "dst", "delta"]), seqs
 
-    return src.groupBy("_bkt").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return run_keyed_state(
+        src,
+        fold,
+        out_schema,
+        "seqs_json",
+        bucket=("_bkt", [F.col("_conv")]),
+        n_buckets=n_buckets,
     )
 
 

@@ -81,11 +81,20 @@ def state_bucket_count(n_keys: Optional[int] = None) -> int:
 def record_bucket_count(checkpoint_dir: str, n: Optional[int] = None) -> int:
     """Persist the resolved count next to ``checkpoint_dir`` (first
     call wins — later calls return the recorded value, so a restart on
-    a resized cluster keeps the original bucketing)."""
+    a resized cluster keeps the original bucketing).
+
+    A checkpoint that has already run (``offsets/`` or ``commits/``)
+    but has no sidecar predates it: its state was bucketed by the
+    rounds 1-4 rule, the env pin or 1024, so that is what gets
+    recorded rather than the current resolution."""
     existing = recorded_bucket_count(checkpoint_dir)
     if existing is not None:
         return existing
-    n = n if n is not None else state_bucket_count()
+    if n is None:
+        if any(os.path.isdir(os.path.join(checkpoint_dir, d)) for d in ("offsets", "commits")):
+            n = int(os.environ.get("OSPREY_WC_STATE_BUCKETS") or _FALLBACK_BUCKETS)
+        else:
+            n = state_bucket_count()
     os.makedirs(checkpoint_dir, exist_ok=True)
     path = os.path.join(checkpoint_dir, _SIDECAR)
     tmp = path + ".tmp"

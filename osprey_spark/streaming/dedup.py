@@ -35,11 +35,12 @@ or over the drained changelog).
 
 from __future__ import annotations
 
-import json
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .keyed_state import run_keyed_state
 
 
 def stream_near_dup_bands(
@@ -56,7 +57,6 @@ def stream_near_dup_bands(
     docstring for the contract. NULL texts are dropped from the band
     path (the batch twin emits them unflagged)."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     from ..operators.dedup import (
@@ -95,31 +95,15 @@ def stream_near_dup_bands(
         F.explode(
             F.array(*minhash_bands(F.col("_sig"), n_bands, rows_per_band))
         ).alias("_band"),
-    ).withColumn(
-        "_bkt", F.pmod(F.xxhash64("_band"), F.lit(int(n_buckets))).cast("int")
     )
     in_fields = {f.name: f for f in src.schema.fields}
     out_schema = StructType(
         [in_fields[c] for c in id_cols]
         + [StructField("band_flagged", BooleanType())]
     )
-    state_schema = StructType(
-        [StructField("mins_json", in_fields["_okey"].dataType)]
-    )
     ids = list(id_cols)
 
-    def fn(key, pdf_iter, state):
-        mins = json.loads(state.get[0]) if state.exists else {}
-        chunks = [c for c in pdf_iter if len(c)]
-        if not chunks:
-            if state.exists:
-                state.update((json.dumps(mins),))
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
+    def fold(pdf, mins):
         # fold in canonical order so intra-batch "strictly earlier"
         # matches the batch window exactly
         pdf = pdf.sort_values("_okey", kind="stable")
@@ -134,15 +118,15 @@ def stream_near_dup_bands(
                 mins[band] = ok
         out = pdf[ids].copy()
         out["band_flagged"] = pd.array(flags, dtype="bool")
-        state.update((json.dumps(mins),))
-        yield out
+        return out, mins
 
-    return src.groupBy("_bkt").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return run_keyed_state(
+        src,
+        fold,
+        out_schema,
+        "mins_json",
+        bucket=("_bkt", [F.col("_band")]),
+        n_buckets=n_buckets,
     )
 
 

@@ -20,13 +20,14 @@ Built on Spark 4's state data sources (public API):
   state's own time travel, complementing the sink's
   ``read_snapshot``).
 
-The engine's stateful ops (window counters, caches, CEP, the fused
-multi-mechanism pass, streaming sketches) all keep state as ONE
-string column holding a JSON dict keyed by the real entity (the group
-key is a hash BUCKET — the key-coalescing trade documented in
-compile.py). :func:`decode_json_dict_state` re-exposes those
-per-entity entries as rows, so "list every conversation's carried
-state" is a query, not a debugger session.
+The engine's stateful ops (the fused rule pass, caches, CEP,
+transcript folds, streaming sketches) all keep state as ONE string
+column holding a JSON dict (the group key is a hash BUCKET — the
+key-coalescing trade documented in ``keyed_state.py``), keyed by the
+real entity — or, for the fused rule pass, by op identity with each
+op's entity map as the value. :func:`decode_json_dict_state`
+re-exposes those entries as rows, so "list every conversation's
+carried state" is a query, not a debugger session.
 
 No reference counterpart: roostorg/osprey's state lives in external
 Redis/BigTable and is inspected with external tooling; here the state
@@ -116,8 +117,9 @@ def decode_json_dict_state(state_df: DataFrame) -> DataFrame:
 
     Works for every single-string-column state this engine writes
     (states_json / entries_json / mins_json / latest_json /
-    suffix_json / bins_json ...). Raises on multi-column or
-    non-string state — those are not the coalesced-dict shape.
+    state_json / labels_json / seqs_json / best_json / bins_json ...).
+    Raises on multi-column or non-string state — those are not the
+    coalesced-dict shape.
     """
     vfields = state_df.schema["value"].dataType.fields
     prefix = "value"

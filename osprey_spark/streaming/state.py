@@ -13,10 +13,6 @@ is read-your-writes (matching osprey's cross-event visibility).
 from __future__ import annotations
 
 import json
-import os
-from typing import Iterator, Tuple
-
-from .buckets import state_bucket_count
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -31,13 +27,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-CONV_STATE_SCHEMA = StructType(
-    [
-        StructField("n_turns", LongType()),
-        StructField("n_flagged", LongType()),
-        StructField("tool_seq", StringType()),  # comma-joined last K tools
-    ]
-)
+from .keyed_state import run_keyed_state
 
 CONV_OUTPUT_SCHEMA = StructType(
     [
@@ -54,22 +44,14 @@ CONV_OUTPUT_SCHEMA = StructType(
 TOOL_SEQ_K = 8
 
 
-def _conv_state_fn(escalate_after: int):
-    """Bucketed state fn: the group key is a hash BUCKET of conv_id
-    (key coalescing — see the compiler's window-counter op), state is
-    a JSON map {conv_id: [n_turns, n_flagged, tool_seq]}; each conv's
-    segment of the (conv_id, turn_idx)-sorted batch folds against its
-    own entry, so per-conversation semantics are identical to the
-    per-key grouping (and to the per-key TWS variant, which the
-    equivalence test pins)."""
+def _conv_state_fold(escalate_after: int):
+    """Bucketed fold: the group key is a hash BUCKET of conv_id (key
+    coalescing — see ``keyed_state.py``), state is a JSON map
+    {conv_id: [n_turns, n_flagged, tool_seq]}; each conv's segment of
+    the (conv_id, turn_idx)-sorted batch folds against its own entry,
+    so per-conversation semantics are identical to per-key grouping."""
 
-    def fn(key: Tuple[int], pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        smap = json.loads(state.get[0]) if state.exists else {}
-        chunks = [c for c in pdf_iter if len(c)]
-        if not chunks:
-            state.update((json.dumps(smap),))
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    def fold(pdf: pd.DataFrame, smap: dict):
         pdf = pdf.sort_values(["conv_id", "turn_idx"], kind="stable")
         out_turns = []
         out_flagged = []
@@ -100,8 +82,7 @@ def _conv_state_fn(escalate_after: int):
             out_esc.append(n_flagged >= escalate_after)
         if prev_conv is not None:
             smap[prev_conv] = [n_turns, n_flagged, ",".join(tools)]
-        state.update((json.dumps(smap),))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "conv_id": pdf["conv_id"].values,
                 "turn_idx": pdf["turn_idx"].values,
@@ -112,8 +93,9 @@ def _conv_state_fn(escalate_after: int):
                 "escalated": out_esc,
             }
         )
+        return out, smap
 
-    return fn
+    return fold
 
 
 def conversation_state(
@@ -136,102 +118,23 @@ def conversation_state(
     bucketing salts downstream, and upstream rule evaluation is
     stateless so AQE balances it.
     """
-    n_buckets = state_bucket_count()
-    src = (
-        turns.withWatermark("ts", watermark)
-        .select(
-            "conv_id",
-            "turn_idx",
-            "ts",
-            F.col("tool").cast("string").alias("tool"),
-            F.coalesce(F.col(flagged_col), F.lit(False)).alias("flagged"),
-            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int").alias("__cs_bkt"),
-        )
-        .groupBy("__cs_bkt")
+    src = turns.withWatermark("ts", watermark).select(
+        "conv_id",
+        "turn_idx",
+        "ts",
+        F.col("tool").cast("string").alias("tool"),
+        F.coalesce(F.col(flagged_col), F.lit(False)).alias("flagged"),
     )
-    return src.applyInPandasWithState(
-        _conv_state_fn(escalate_after),
-        outputStructType=CONV_OUTPUT_SCHEMA,
-        stateStructType=StructType([StructField("state_json", StringType())]),
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-
-
-def conversation_state_tws(
-    turns: DataFrame,
-    flagged_col: str,
-    escalate_after: int = 3,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """conversation_state on the Spark 4 transformWithStateInPandas
-    API: same semantics/output schema as the applyInPandasWithState
-    version (equivalence-tested), with state in a named ValueState of
-    the new state-store API — typed handles, TTL support, RocksDB
-    changelog checkpointing on a real cluster: the forward path for
-    10^12-turn state. NOTE: the TWS state-server protocol requires
-    the ``protobuf`` package, which this container lacks — the test
-    is importorskip-gated; on a normal cluster image it runs as-is."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class Proc(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("conv", CONV_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (conv_id,) = key
-            got = self._state.get() if self._state.exists() else None
-            n_turns, n_flagged, tool_seq = got if got is not None else (0, 0, "")
-            tools = tool_seq.split(",") if tool_seq else []
-            for pdf in rows:
-                pdf = pdf.sort_values("turn_idx")
-                out_turns, out_flagged, out_seq, out_esc = [], [], [], []
-                for flagged, tool in zip(pdf["flagged"].values, pdf["tool"].values):
-                    n_turns += 1
-                    if flagged:
-                        n_flagged += 1
-                    if isinstance(tool, str) and tool:
-                        tools.append(tool)
-                        tools = tools[-TOOL_SEQ_K:]
-                    out_turns.append(n_turns)
-                    out_flagged.append(n_flagged)
-                    out_seq.append(",".join(tools))
-                    out_esc.append(n_flagged >= escalate_after)
-                yield pd.DataFrame(
-                    {
-                        "conv_id": conv_id,
-                        "turn_idx": pdf["turn_idx"].values,
-                        "ts": pdf["ts"].values,
-                        "turns_so_far": out_turns,
-                        "flagged_so_far": out_flagged,
-                        "tool_seq": out_seq,
-                        "escalated": out_esc,
-                    }
-                )
-            self._state.update((n_turns, n_flagged, ",".join(tools)))
-
-        def close(self):
-            pass
-
-    src = (
-        turns.withWatermark("ts", watermark)
-        .select(
-            "conv_id",
-            "turn_idx",
-            "ts",
-            F.col("tool").cast("string").alias("tool"),
-            F.coalesce(F.col(flagged_col), F.lit(False)).alias("flagged"),
-        )
-        .groupBy("conv_id")
-    )
-    return src.transformWithStateInPandas(
-        Proc(), outputStructType=CONV_OUTPUT_SCHEMA, outputMode="append", timeMode="None"
+    return run_keyed_state(
+        src,
+        _conv_state_fold(escalate_after),
+        CONV_OUTPUT_SCHEMA,
+        "state_json",
+        bucket=("__cs_bkt", [F.col("conv_id")]),
     )
 
 
 # --- label store -------------------------------------------------------------
-
-LABEL_STATE_SCHEMA = StructType([StructField("labels_json", StringType())])
 
 LABEL_OUTPUT_SCHEMA = StructType(
     [
@@ -245,7 +148,7 @@ LABEL_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _label_state_fn(key, pdf_iter, state):
+def _label_state_fold(pdf: pd.DataFrame, labels: dict):
     """Apply LabelEffect mutations to the per-entity label map
     (semantics of worker LabelOutputSink + HasLabel expiry,
     ref: stdlib/udfs/labels.py:168-224): ADDED wins over expired,
@@ -259,59 +162,43 @@ def _label_state_fn(key, pdf_iter, state):
     groupby-last. No per-row Python in the batch path."""
     import numpy as np
 
-    entity_type, entity_id = key
-    labels = json.loads(state.get[0]) if state.exists else {}
-    frames = []
-    for pdf in pdf_iter:
-        if not len(pdf):
-            continue
-        pdf = pdf.sort_values("ts", kind="stable")
-        ts = pd.to_datetime(pdf["ts"])
-        ts_unix = np.where(ts.isna(), 0.0, ts.astype("int64") / 1e9)
-        ea = pd.to_numeric(pdf["expires_after"], errors="coerce").to_numpy(dtype="float64", na_value=0.0)
-        added = pdf["status"].eq("added").to_numpy()
-        expires = np.where(added & (ea != 0.0), (ts_unix + ea).astype("int64"), 0)
-        frames.append(
-            pd.DataFrame(
-                {
-                    "entity_type": entity_type,
-                    "entity_id": entity_id,
-                    "label": pdf["label"].to_numpy(),
-                    "status": pdf["status"].to_numpy(),
-                    "expires_at_unix": expires,
-                    "mutation_ts": pdf["ts"].to_numpy(),
-                }
-            )
-        )
-    if frames:
-        out = pd.concat(frames, ignore_index=True)
-        last = out.groupby("label", sort=False).tail(1)
-        for label, status, exp in zip(
-            last["label"].to_numpy(), last["status"].to_numpy(), last["expires_at_unix"].to_numpy()
-        ):
-            labels[label] = {
-                "status": status,
-                "expires_at": int(exp) if (status == "added" and exp) else None,
-            }
-    state.update((json.dumps(labels),))
-    if frames:
-        yield out
+    pdf = pdf.sort_values("ts", kind="stable")
+    ts = pd.to_datetime(pdf["ts"])
+    ts_unix = np.where(ts.isna(), 0.0, ts.astype("int64") / 1e9)
+    ea = pd.to_numeric(pdf["expires_after"], errors="coerce").to_numpy(dtype="float64", na_value=0.0)
+    added = pdf["status"].eq("added").to_numpy()
+    expires = np.where(added & (ea != 0.0), (ts_unix + ea).astype("int64"), 0)
+    out = pd.DataFrame(
+        {
+            "entity_type": pdf["entity_type"].to_numpy(),
+            "entity_id": pdf["entity_id"].to_numpy(),
+            "label": pdf["label"].to_numpy(),
+            "status": pdf["status"].to_numpy(),
+            "expires_at_unix": expires,
+            "mutation_ts": pdf["ts"].to_numpy(),
+        }
+    )
+    last = out.groupby("label", sort=False).tail(1)
+    for label, status, exp in zip(
+        last["label"].to_numpy(), last["status"].to_numpy(), last["expires_at_unix"].to_numpy()
+    ):
+        labels[label] = {
+            "status": status,
+            "expires_at": int(exp) if (status == "added" and exp) else None,
+        }
+    return out, labels
 
 
 def label_store(effects: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Maintain per-entity label state from the ``__label_effects``
     stream (exploded). Input columns: entity_type, entity_id, label,
     status, expires_after, ts. Output: label changelog rows."""
-    return (
-        effects.withWatermark("ts", watermark)
-        .groupBy("entity_type", "entity_id")
-        .applyInPandasWithState(
-            _label_state_fn,
-            outputStructType=LABEL_OUTPUT_SCHEMA,
-            stateStructType=LABEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+    return run_keyed_state(
+        effects.withWatermark("ts", watermark),
+        _label_state_fold,
+        LABEL_OUTPUT_SCHEMA,
+        "labels_json",
+        group_cols=("entity_type", "entity_id"),
     )
 
 
@@ -356,9 +243,6 @@ def explode_label_effects(rules_out: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # streaming as-of enrichment
 # ---------------------------------------------------------------------------
-
-_ASOF_STATE_SCHEMA = StructType([StructField("entries_json", StringType())])
-
 
 def stream_asof_enrich(
     left: DataFrame,
@@ -450,20 +334,11 @@ def stream_asof_enrich(
         ]
     )
 
-    # same key-coalescing as the compiler's window-counter / cache
-    # state ops: group by a hash BUCKET of the key with a per-bucket
-    # {key: entries} map, amortizing applyInPandasWithState's fixed
-    # per-group cost; per-key segment folds keep semantics identical.
-    n_buckets = state_bucket_count()
+    # key-coalesced like every keyed state op (keyed_state.py): a
+    # per-bucket {key: entries} map, per-key segment folds
     _NULL_KEY = "\x00"
 
-    def fn(key_tuple, pdf_iter, state):
-        smap = json.loads(state.get[0]) if state.exists else {}
-        chunks = [c for c in pdf_iter if len(c)]
-        if not chunks:
-            state.update((json.dumps(smap),))
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    def fold(pdf, smap):
         # per key: event-time order, right rows before left at equal
         # ts — the batch operator's inclusive-backward tie rule
         pdf = pdf.sort_values(
@@ -522,23 +397,16 @@ def stream_asof_enrich(
                 smap[mk] = [
                     [float(r_ts_arr[i]), r_pj[i]] for i in range(start, len(r_ts_arr))
                 ]
-        state.update((json.dumps(smap),))
-        if outs:
-            yield pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+        if not outs:
+            return None, smap
+        return (pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]), smap
 
-    enriched = (
-        u.withColumn(
-            "__bkt",
-            F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast("int"),
-        )
-        .groupBy("__bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=_ASOF_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+    enriched = run_keyed_state(
+        u,
+        fold,
+        out_schema,
+        "entries_json",
+        bucket=("__bkt", [F.col(key).cast("string")]),
     )
     proj = [F.col(c) for c in passthrough]
     proj.append(

@@ -44,6 +44,21 @@ def test_sidecar_records_once(tmp_path):
     assert recorded_bucket_count(ck) == 512
 
 
+def test_pre_sidecar_checkpoint_records_historical_count(spark, tmp_path, monkeypatch):
+    """A checkpoint that already ran before the sidecar existed was
+    bucketed by the historical 1024 constant: that is what gets
+    recorded, not the current per-core resolution."""
+    monkeypatch.delenv("OSPREY_WC_STATE_BUCKETS", raising=False)
+    assert state_bucket_count() != 1024  # the session resolves per core
+    for marker in ("offsets", "commits"):
+        ck = tmp_path / marker
+        (ck / marker).mkdir(parents=True)
+        assert record_bucket_count(str(ck)) == 1024
+        assert recorded_bucket_count(str(ck)) == 1024
+    # a fresh checkpoint dir records the current resolution
+    assert record_bucket_count(str(tmp_path / "fresh")) == state_bucket_count()
+
+
 def test_engine_refuses_resized_restart(spark, tmp_path, monkeypatch):
     """Resuming a checkpoint under a different resolved bucket count
     must fail loudly, not silently strand state."""

@@ -11,7 +11,9 @@ key change or a dependency on a fused op's output.
 from __future__ import annotations
 
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from osprey_spark.compiler import compile_ruleset
@@ -22,6 +24,15 @@ from osprey_spark.turns import TURN_BINDINGS, generate_turns, with_envelope
 def _n_state_nodes(df) -> int:
     plan = df._jdf.queryExecution().analyzed().toString()
     return plan.count("FlatMapGroupsInPandasWithState")
+
+
+def _n_fused_passes(df) -> int:
+    """State nodes in the plan, asserting each groups by the fused
+    pass's bucket column."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    nodes = [ln for ln in plan.splitlines() if "FlatMapGroupsInPandasWithState" in ln]
+    assert all("__fs_bkt" in ln for ln in nodes), nodes
+    return len(nodes)
 
 
 def _stream_vs_batch(spark, tmp_path, sml, feature_cols):
@@ -214,15 +225,15 @@ LastUserText = CacheGetStr(key=K, default='none')
 """
 
 
-def test_single_cache_still_uses_standalone_resolver(spark, tmp_path):
-    """A lone cache op keeps the vectorized union resolver (no fused
-    wrapper) and still matches batch."""
+def test_single_cache_streams_through_fused_pass(spark, tmp_path):
+    """A lone same-key cache op is a fused pass of one and matches
+    batch."""
     rs, in_dir = _stream_vs_batch(spark, tmp_path, CACHE_ALONE_SML, ["LastUserText"])
     stream = spark.readStream.schema(
         spark.read.parquet(in_dir).schema
     ).parquet(in_dir)
     out = rs().apply(with_envelope(stream), passthrough=["conv_id", "turn_idx"])
-    assert _n_state_nodes(out) == 1
+    assert _n_fused_passes(out) == 1
 
 
 CACHE_CROSS_KEY_SML = """
@@ -426,3 +437,236 @@ def test_burstiness_survives_restart(spark, tmp_path):
         for r in batch.collect()
     }
     assert got == want and len(want) == 32
+
+
+# --------------------------------------------------------------------------
+# singleton window / sequence ops: a fused pass of one
+# --------------------------------------------------------------------------
+
+SINGLE_WINDOW_SML = """
+K: str = JsonData(path='$.conv_id')
+N = IncrementWindow(key=K, window_seconds=3600.0)
+"""
+
+SINGLE_SEQ_SML = """
+K: str = JsonData(path='$.conv_id')
+Role: str = JsonData(path='$.role')
+Ti: int = JsonData(path='$.turn_idx')
+ToolSeq = SequenceMatches(key=K, symbol=Role, pattern='at', last_k=4, order=Ti)
+"""
+
+SINGLETONS = pytest.mark.parametrize(
+    "sml,col",
+    [(SINGLE_WINDOW_SML, "N"), (SINGLE_SEQ_SML, "ToolSeq")],
+    ids=["window", "seq"],
+)
+
+_TURN_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, tool string, ts_str string"
+)
+
+ROWS1 = [
+    ("c1", 0, "user", "a", None, "2024-01-01 10:00:00"),
+    ("c1", 1, "assistant", "b", None, "2024-01-01 10:05:00"),
+    ("c2", 0, "user", "e", None, "2024-01-01 10:06:00"),
+]
+ROWS2 = [
+    ("c1", 2, "tool", "c", "exec", "2024-01-01 10:10:00"),
+    ("c2", 1, "user", "d", None, "2024-01-01 10:11:00"),
+]
+
+
+def _write_rows(spark, in_dir, rows):
+    (
+        spark.createDataFrame(rows, _TURN_SCHEMA)
+        .select(
+            "conv_id", "turn_idx", "role", "text", "tool",
+            F.to_timestamp("ts_str").alias("ts"),
+        )
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(in_dir)
+    )
+
+
+@SINGLETONS
+def test_singleton_stream_equals_batch(spark, tmp_path, sml, col):
+    """A lone IncrementWindow / SequenceMatches streams through the
+    fused pass (one state node, grouped by the fused bucket column)
+    and equals batch across two micro-batches."""
+    rs, in_dir = _stream_vs_batch(spark, tmp_path, sml, [col])
+    stream = spark.readStream.schema(
+        spark.read.parquet(in_dir).schema
+    ).parquet(in_dir)
+    out = rs().apply(with_envelope(stream), passthrough=["conv_id", "turn_idx"])
+    assert _n_fused_passes(out) == 1
+
+
+@SINGLETONS
+def test_singleton_survives_checkpoint_restart(spark, tmp_path, sml, col):
+    """Kill after batch 1, restart a new engine on the same
+    checkpoint: the singleton's state resumes and the post-restart
+    rows equal batch."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+
+    def run():
+        eng = StreamingRuleEngine(
+            spark,
+            compile_ruleset({"main.sml": sml}, bindings=TURN_BINDINGS),
+            in_dir,
+            out_dir,
+            passthrough=("conv_id", "turn_idx"),
+        )
+        eng.run_to_completion()
+        return eng
+
+    _write_rows(spark, in_dir, ROWS1)
+    run()
+    _write_rows(spark, in_dir, ROWS2)
+    got = {(r["conv_id"], r["turn_idx"]): r[col] for r in run().results().collect()}
+    batch = compile_ruleset({"main.sml": sml}, bindings=TURN_BINDINGS).apply(
+        with_envelope(spark.read.parquet(in_dir)), passthrough=["conv_id", "turn_idx"]
+    )
+    want = {(r["conv_id"], r["turn_idx"]): r[col] for r in batch.collect()}
+    assert got == want and len(want) == 5
+    if col == "N":
+        assert got == {("c1", 0): 1, ("c1", 1): 2, ("c1", 2): 3, ("c2", 0): 1, ("c2", 1): 2}
+    else:
+        assert got[("c1", 2)] is True  # 'a' then 't' across the restart
+
+
+# tests/fixtures/singleton_window_ckpt: a checkpoint (``ckpt/``) written
+# by the former standalone streaming IncrementWindow resolver — state
+# grouped by ``__wc_bkt`` in ``entries_json`` as a {key: deque} map —
+# with SINGLE_WINDOW_SML, 8 state buckets and 4 shuffle partitions over
+# one batch of ROWS1's three turns (``in/``: c1 at 10:00 and 10:05, c2
+# at 10:06). Its source log names the input as
+# file:///fixture/in/...; the test points that at its own copy.
+LEGACY_SINGLETON_CKPT = os.path.join(
+    os.path.dirname(__file__), "fixtures", "singleton_window_ckpt"
+)
+
+
+def test_legacy_singleton_window_checkpoint_resumes_exactly(spark, tmp_path, monkeypatch):
+    """Upgrade safety: the standalone resolver's checkpoint resumes on
+    the fused pass with exact counts, never with empty state."""
+    import json
+
+    monkeypatch.setenv("OSPREY_WC_STATE_BUCKETS", "8")
+    shutil.copytree(LEGACY_SINGLETON_CKPT, tmp_path, dirs_exist_ok=True)
+    log = tmp_path / "ckpt" / "sources" / "0" / "0"
+    log.write_text(log.read_text().replace("file:///fixture/", f"file://{tmp_path}/"))
+    # the logged file keeps its logged mtime, so the source never
+    # mistakes it for a new file
+    entry = json.loads(log.read_text().splitlines()[1])
+    seen = entry["path"][len("file://"):]
+    os.utime(seen, (entry["timestamp"] / 1000, entry["timestamp"] / 1000))
+    in_dir = str(tmp_path / "in")
+    _write_rows(spark, in_dir, ROWS2)
+    eng = StreamingRuleEngine(
+        spark,
+        compile_ruleset({"main.sml": SINGLE_WINDOW_SML}, bindings=TURN_BINDINGS),
+        in_dir,
+        str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        passthrough=("conv_id", "turn_idx"),
+    )
+    eng.run_to_completion()
+    got = {(r["conv_id"], r["turn_idx"]): r["N"] for r in eng.results().collect()}
+    assert got == {("c1", 2): 3, ("c2", 1): 2}
+
+
+# --------------------------------------------------------------------------
+# ruleset hot-swap: the composite state is keyed by op identity
+# --------------------------------------------------------------------------
+
+_SWAP_KEY = "K: str = JsonData(path='$.conv_id')\n"
+_N1 = "N1 = IncrementWindow(key=K, window_seconds=600.0)\n"
+_N2 = "N2 = IncrementWindow(key=K, window_seconds=3600.0)\n"
+_N3 = "N3 = IncrementWindow(key=K, window_seconds=86400.0)\n"
+
+
+def test_hot_swap_keeps_unchanged_op_state(spark, tmp_path):
+    """Restart the same checkpoint with an op added, then with an op
+    removed: unchanged ops keep their state (equal to batch over the
+    whole stream), the added op starts empty (equal to batch over the
+    rows since it was added), and nothing reads another op's state."""
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    t = generate_turns(spark, n_convs=4, turns_per_conv=9, hot_convs=0, late_fraction=0.0)
+
+    def rs(sml):
+        return compile_ruleset({"main.sml": _SWAP_KEY + sml}, bindings=TURN_BINDINGS)
+
+    def stream(sml, era, lo):
+        t.filter((F.col("turn_idx") >= lo) & (F.col("turn_idx") < lo + 3)).coalesce(
+            1
+        ).write.mode("append").parquet(in_dir)
+        eng = StreamingRuleEngine(
+            spark, rs(sml), in_dir, str(tmp_path / f"out{era}"),
+            checkpoint_dir=ckpt, passthrough=("conv_id", "turn_idx"),
+        )
+        eng.run_to_completion()
+        return {(r["conv_id"], r["turn_idx"]): r.asDict() for r in eng.results().collect()}
+
+    def batch(sml, since):
+        rows = spark.read.parquet(in_dir).filter(F.col("turn_idx") >= since)
+        out = rs(sml).apply(with_envelope(rows), passthrough=["conv_id", "turn_idx"])
+        return {(r["conv_id"], r["turn_idx"]): r.asDict() for r in out.collect()}
+
+    stream(_N1 + _N2, 1, 0)
+    era2 = stream(_N1 + _N2 + _N3, 2, 3)
+    full, fresh = batch(_N1 + _N2 + _N3, 0), batch(_N3, 3)
+    assert len(era2) == 12
+    for k, row in era2.items():
+        assert (row["N1"], row["N2"]) == (full[k]["N1"], full[k]["N2"])
+        assert row["N3"] == fresh[k]["N3"]
+    era3 = stream(_N2 + _N3, 3, 6)
+    full, since_added = batch(_N2, 0), batch(_N3, 3)
+    assert len(era3) == 12 and "N1" not in next(iter(era3.values()))
+    for k, row in era3.items():
+        assert row["N2"] == full[k]["N2"] and row["N3"] == since_added[k]["N3"]
+
+
+def test_composite_state_layouts():
+    """The stored composite state resolves per op by identity; the two
+    older layouts resume only where they are unambiguous."""
+    from osprey_spark.compiler.families import op_states
+
+    ids, fams = ["window:a", "seq:b"], ["window", "seq"]
+    assert op_states({}, ids, fams) == [{}, {}]
+    assert op_states({"seq:b": {"k": "at"}, "gone:c": {"k": [1]}}, ids, fams) == [
+        {}, {"k": "at"}
+    ]
+    # positional list: only at the same op count
+    assert op_states([{"k": [5]}, {}], ids, fams) == [{"k": [5]}, {}]
+    with pytest.raises(ValueError, match="positional list layout"):
+        op_states([{"k": [5]}], ids, fams)
+    # single-op {key: entry} map of the former standalone resolvers
+    assert op_states({"k": [5, 6]}, ["window:a"], ["window"]) == [{"k": [5, 6]}]
+    with pytest.raises(ValueError, match="single-op"):
+        op_states({"k": [5, 6]}, ids, fams)
+    with pytest.raises(ValueError, match="single-op"):
+        op_states({"k": [5, 6]}, ["seq:b"], ["seq"])
+
+
+def test_keyed_state_runner_owns_the_state_calls():
+    """``applyInPandasWithState`` is called only by the keyed-state
+    runner, the windowed sketch ops and CEP's response-absence timeout
+    op: every other state op supplies a fold to the runner."""
+    import ast
+    import pathlib
+
+    import osprey_spark
+
+    root = pathlib.Path(osprey_spark.__file__).parent
+    sites: dict = {}
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "applyInPandasWithState":
+                rel = path.relative_to(root).as_posix()
+                sites[rel] = sites.get(rel, 0) + 1
+    assert sites == {
+        "streaming/keyed_state.py": 1,
+        "streaming/sketches.py": 7,
+        "operators/cep.py": 1,
+    }

@@ -394,7 +394,7 @@ def main() -> None:
         "sf": sf,
         "throughput": streaming,
         "backpressure": backpressure,
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": len(os.sched_getaffinity(0)),
     }
     scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALING.json")
     if os.path.exists(scaling_path):

@@ -1459,7 +1459,7 @@ class CompiledRuleset:
         return df.select("*", matched.alias(spec["name"]))
 
     def _join_fused_state(
-        self, df: DataFrame, fspecs: list[tuple[str, dict]]
+        self, df: DataFrame, fspecs: list[tuple[str, dict]], drop: tuple = ()
     ) -> DataFrame:
         """Resolve a RUN of streaming state ops that share one key
         expression in a SINGLE applyInPandasWithState pass — N
@@ -1479,13 +1479,20 @@ class CompiledRuleset:
         inter-op dependencies, cross-keyed cache writes) fail compile
         with an actionable split, not a deep Spark error.
 
-        Rows sort by (key, sec[, ord]); each family's fold
-        (``families.py``) is pinned to its batch resolver by the
-        stream==batch suites. The composite state maps each op's
-        identity (family + parameters + input expressions) to its
-        ``{key: entry}`` map, so a ruleset hot-swap keeps unchanged
-        ops' state, starts new ops empty and drops removed ones
-        (``families.op_states`` also reads the older layouts).
+        Per bucket, only the narrow key/sec[/ord] columns sort; each
+        op folds the whole bucket in one call against those sorted
+        arrays (``families.py``: one numpy kernel for the window
+        counter and window sum, ``per_key`` for the loop-bodied
+        families), and the outputs scatter back into input row order,
+        so the wide passthrough frame is never sorted or copied. Each
+        fold is pinned to its batch resolver by the stream==batch
+        suites. ``drop`` names input columns nothing after the pass
+        reads; they do not cross the state boundary. The composite
+        state maps each op's identity (family + parameters + input
+        expressions) to its ``{key: entry}`` map, so a ruleset hot-swap
+        keeps unchanged ops' state, starts new ops empty and drops
+        removed ones (``families.op_states`` also reads the older
+        layouts).
 
         Callers guarantee: every spec's key has the same column-node
         string, all ordered specs share one order expression, and no
@@ -1493,6 +1500,7 @@ class CompiledRuleset:
         detector in apply() flushes otherwise).
         """
         import numpy as np
+        import pandas as pd
         from pyspark.sql import types as T
 
         from ..streaming.keyed_state import run_keyed_state
@@ -1501,13 +1509,11 @@ class CompiledRuleset:
         sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
         key_col = fspecs[0][1]["key_col"]
         proj: list = ["*", key_col.cast("string").alias("__fs_key"), sec.alias("__fs_sec")]
-        sort_cols = ["__fs_key", "__fs_sec"]
         ord_col = next(
             (sp["order_col"] for _, sp in fspecs if sp.get("order_col") is not None), None
         )
         if ord_col is not None:
             proj.append(ord_col.cast("double").alias("__fs_ord"))
-            sort_cols.append("__fs_ord")
         ops: list = []  # ({field: (column, dtype)}, out dtype, fold)
         out_cols: list = []
         out_fields: list = []
@@ -1523,7 +1529,7 @@ class CompiledRuleset:
             out_cols.append(out_col)
             out_fields.append(T.StructField(out_col, st.out_type))
             ops.append((inputs, st.out_np, st.fold))
-        aug = df.select(*proj)
+        aug = df.select(*proj).drop(*drop)
         passthrough_cols = [
             f.name for f in aug.schema.fields if not f.name.startswith("__fs")
         ]
@@ -1532,33 +1538,36 @@ class CompiledRuleset:
         )
         idents = op_identities(fspecs)
         fams = [fam for fam, _ in fspecs]
+        ordered = ord_col is not None
         _NULL_KEY = "\x00"
 
         def fold(pdf, stored):
             smaps = op_states(stored, idents, fams)
-            pdf = pdf.sort_values(sort_cols, kind="stable", na_position="last")
-            n = len(pdf)
-            keys = pdf["__fs_key"].to_numpy(dtype=object)
-            sec_a = pdf["__fs_sec"].to_numpy(dtype="int64")
-            runs = []
-            for (inputs, out_np, op_fold), smap in zip(ops, smaps):
-                inp = {f: pdf[c].to_numpy(dtype=dt) for f, (c, dt) in inputs.items()}
-                out_a = (
-                    np.full(n, None, dtype=object)
+            # sort only the narrow key/sec/ord columns; the passthrough
+            # frame stays in input order and the outputs scatter back
+            codes, names = pd.factorize(pdf["__fs_key"].to_numpy(dtype=object), sort=True)
+            codes[codes < 0] = len(names)  # NULL keys last
+            sec_in = pdf["__fs_sec"].to_numpy(dtype="int64")
+            by = [sec_in, codes]
+            if ordered:
+                by.insert(0, pdf["__fs_ord"].to_numpy(dtype="float64"))
+            order = np.lexsort(by)
+            codes, sec = codes[order], sec_in[order]
+            starts = np.flatnonzero(np.diff(codes, prepend=-1))
+            ends = np.append(starts[1:], len(codes))
+            mks = names.tolist() + [_NULL_KEY] * (len(starts) - len(names))
+            out = {c: pdf[c] for c in passthrough_cols}
+            for out_col, (inputs, out_np, op_fold), smap in zip(out_cols, ops, smaps):
+                inp = {f: pdf[c].to_numpy(dtype=dt)[order] for f, (c, dt) in inputs.items()}
+                got = (
+                    np.full(len(sec), None, dtype=object)
                     if out_np == "object"
-                    else np.zeros(n, dtype=out_np)
+                    else np.zeros(len(sec), dtype=out_np)
                 )
-                runs.append((op_fold, smap, inp, out_a))
-            change = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-            for s, e in zip(np.concatenate(([0], change)), np.concatenate((change, [n]))):
-                mk = keys[s] if keys[s] is not None else _NULL_KEY
-                seg_sec = sec_a[s:e]
-                for op_fold, smap, inp, out_a in runs:
-                    op_fold(smap, mk, seg_sec, s, e, inp, out_a)
-            out = pdf[passthrough_cols].copy()
-            for out_col, (*_, out_a) in zip(out_cols, runs):
-                out[out_col] = out_a
-            return out, dict(zip(idents, smaps))
+                op_fold(smap, mks, starts, ends, sec, inp, got)
+                out[out_col] = np.empty_like(got)
+                out[out_col][order] = got
+            return pd.DataFrame(out, copy=False), dict(zip(idents, smaps))
 
         frame = run_keyed_state(
             aug, fold, out_schema, "states_json",
@@ -1839,112 +1848,6 @@ class CompiledRuleset:
             raise ValueError(
                 "ruleset uses HasLabel — apply(labels_df=...) requires a label snapshot"
             )
-        # Materialize features layer by layer; each definition may
-        # reference earlier features by (mangled) column name. Catalyst
-        # collapses single-use chains and keeps multi-use expressions
-        # shared (collapseProjectAlwaysInline=false), so the optimized
-        # plan stays linear in ruleset size.
-        from .families import FAMILIES, spec_columns, stable_node
-
-        state_specs = {
-            sp["name"]: (fam, sp)
-            for fam, f in FAMILIES.items()
-            for sp in getattr(self.ctx, f.lookups, [])
-        }
-        # STATE-OP FUSION (streaming only): a maximal run of
-        # consecutive state ops sharing one key expression resolves
-        # through a single applyInPandasWithState — one exchange + one
-        # state-store pass for N mechanisms. Runs break on: a
-        # non-state entry, a different key node, a second order
-        # expression, or an op whose inputs reference a fused op's
-        # output (it must see that column materialized).
-        streaming = df.isStreaming
-        pending: list[tuple[str, dict]] = []
-        state_passes: list[list[str]] = []
-
-        def _register_pass(names: list[str]) -> None:
-            # Spark allows ONE applyInPandasWithState per streaming
-            # query; fusion collapses same-key runs into one, but
-            # groups split by key changes, inter-op dependencies, or
-            # cross-keyed cache writes cannot share a pass. Fail here
-            # with the split, not deep inside Spark's
-            # UnsupportedOperationChecker (or a scratch-column
-            # resolution error) when the second pass builds.
-            if state_passes:
-                groups = "; ".join(
-                    "{" + ", ".join(g) + "}" for g in state_passes + [names]
-                )
-                raise ValueError(
-                    "streaming ruleset needs "
-                    f"{len(state_passes) + 1} stateful passes ({groups}) but "
-                    "Spark supports a single applyInPandasWithState per "
-                    "query. Stateful features stream together only when they "
-                    "share one key expression, do not read each other's "
-                    "outputs, and do not mix with Cache* ops; split the "
-                    "ruleset or evaluate the extra features in batch."
-                )
-            state_passes.append(names)
-
-        def _flush(frame: DataFrame) -> DataFrame:
-            if not pending:
-                return frame
-            _register_pass([sp["name"] for _, sp in pending])
-            frame = self._join_fused_state(frame, list(pending))
-            pending.clear()
-            return frame
-
-        def _fusable(fam: str, sp: dict) -> bool:
-            if not pending:
-                return True
-            key_node = stable_node(pending[0][1]["key_col"])
-            if stable_node(sp["key_col"]) != key_node:
-                return False
-            if fam == "cache":
-                # every Set statement must write through the SAME key
-                # the fused pass groups by, or its writes would land
-                # in the wrong bucket
-                for s in sp["sets"]:
-                    if stable_node(s["key_col"]) != key_node:
-                        return False
-            if sp.get("order_col") is not None:
-                for _, psp in pending:
-                    if psp.get("order_col") is not None and stable_node(
-                        psp["order_col"]
-                    ) != stable_node(sp["order_col"]):
-                        return False
-            emitted = {psp["name"] for _, psp in pending}
-            refs: set = set()
-            for c in spec_columns(fam, sp):
-                refs |= _column_refs(c)
-            return not (refs & emitted)
-
-        for mangled, defn in self._hoisted_feature_order(state_specs):
-            if defn is not None:
-                df = _flush(df)
-                df = df.select("*", defn.alias(mangled))
-                continue
-            if mangled not in state_specs:
-                df = _flush(df)
-                df = self._join_label(df, labels_df, specs[mangled])
-                continue
-            fam, sp = state_specs[mangled]
-            if not streaming:
-                df = getattr(self, FAMILIES[fam].batch)(df, sp)
-                continue
-            if fam == "cache" and any(
-                stable_node(s["key_col"]) != stable_node(sp["key_col"])
-                for s in sp["sets"]
-            ):
-                # writes keyed differently from the reads: only the
-                # union resolver can route them — a pass of its own
-                df = _flush(df)
-                _register_pass([mangled])
-                df = self._join_cache_streaming(df, sp)
-                continue
-            if not _fusable(fam, sp):
-                df = _flush(df)
-            pending.append((fam, sp))
-        df = _flush(df)
         # Output-name collision guard: the result frame must be usable
         # under Spark's DEFAULT case-insensitive resolution, not just
         # under this engine's caseSensitive=true sessions. A ruleset
@@ -2002,6 +1905,135 @@ class CompiledRuleset:
             cols.append(F.lit(0).alias(ERROR_COUNT))
         if sample_rate_col is not None:
             cols.append(sample_rate_col.alias(SAMPLE_RATE))
+        # Materialize features layer by layer; each definition may
+        # reference earlier features by (mangled) column name. Catalyst
+        # collapses single-use chains and keeps multi-use expressions
+        # shared (collapseProjectAlwaysInline=false), so the optimized
+        # plan stays linear in ruleset size.
+        from .families import FAMILIES, spec_columns, stable_node
+
+        state_specs = {
+            sp["name"]: (fam, sp)
+            for fam, f in FAMILIES.items()
+            for sp in getattr(self.ctx, f.lookups, [])
+        }
+        # STATE-OP FUSION (streaming only): a maximal run of
+        # consecutive state ops sharing one key expression resolves
+        # through a single applyInPandasWithState — one exchange + one
+        # state-store pass for N mechanisms. Runs break on: a
+        # non-state entry, a different key node, a second order
+        # expression, or an op whose inputs reference a fused op's
+        # output (it must see that column materialized).
+        streaming = df.isStreaming
+        pending: list[tuple[str, dict]] = []
+        state_passes: list[list[str]] = []
+
+        def _register_pass(names: list[str]) -> None:
+            # Spark allows ONE applyInPandasWithState per streaming
+            # query; fusion collapses same-key runs into one, but
+            # groups split by key changes, inter-op dependencies, or
+            # cross-keyed cache writes cannot share a pass. Fail here
+            # with the split, not deep inside Spark's
+            # UnsupportedOperationChecker (or a scratch-column
+            # resolution error) when the second pass builds.
+            if state_passes:
+                groups = "; ".join(
+                    "{" + ", ".join(g) + "}" for g in state_passes + [names]
+                )
+                raise ValueError(
+                    "streaming ruleset needs "
+                    f"{len(state_passes) + 1} stateful passes ({groups}) but "
+                    "Spark supports a single applyInPandasWithState per "
+                    "query. Stateful features stream together only when they "
+                    "share one key expression, do not read each other's "
+                    "outputs, and do not mix with Cache* ops; split the "
+                    "ruleset or evaluate the extra features in batch."
+                )
+            state_passes.append(names)
+
+        order = self._hoisted_feature_order(state_specs)
+
+        def _dead_envelope(pos: int) -> tuple:
+            # the envelope columns (the JSON ``data`` copy of the whole
+            # action, ``action_name``) that no feature from ``pos`` on
+            # and no output column names: the state pass need not ship
+            # them. A word scan of the column trees over-captures (a
+            # literal 'data' keeps the column); an under-capture would
+            # fail analysis when the plan builds
+            later: list = list(cols)
+            for name, defn in order[pos:]:
+                if defn is not None:
+                    later.append(defn)
+                elif name in state_specs:
+                    later += spec_columns(*state_specs[name])
+                else:
+                    later.append(specs[name]["entity_col"])
+            words = set(_re_mod.findall(r"\w+", " ".join(map(stable_node, later)).lower()))
+            return tuple(
+                c for c in (b.data, b.action_name)
+                if c in df.columns and _re_mod.fullmatch(r"\w+", c) and c.lower() not in words
+            )
+
+        def _flush(frame: DataFrame, pos: int) -> DataFrame:
+            if not pending:
+                return frame
+            _register_pass([sp["name"] for _, sp in pending])
+            frame = self._join_fused_state(frame, list(pending), _dead_envelope(pos))
+            pending.clear()
+            return frame
+
+        def _fusable(fam: str, sp: dict) -> bool:
+            if not pending:
+                return True
+            key_node = stable_node(pending[0][1]["key_col"])
+            if stable_node(sp["key_col"]) != key_node:
+                return False
+            if fam == "cache":
+                # every Set statement must write through the SAME key
+                # the fused pass groups by, or its writes would land
+                # in the wrong bucket
+                for s in sp["sets"]:
+                    if stable_node(s["key_col"]) != key_node:
+                        return False
+            if sp.get("order_col") is not None:
+                for _, psp in pending:
+                    if psp.get("order_col") is not None and stable_node(
+                        psp["order_col"]
+                    ) != stable_node(sp["order_col"]):
+                        return False
+            emitted = {psp["name"] for _, psp in pending}
+            refs: set = set()
+            for c in spec_columns(fam, sp):
+                refs |= _column_refs(c)
+            return not (refs & emitted)
+
+        for pos, (mangled, defn) in enumerate(order):
+            if defn is not None:
+                df = _flush(df, pos)
+                df = df.select("*", defn.alias(mangled))
+                continue
+            if mangled not in state_specs:
+                df = _flush(df, pos)
+                df = self._join_label(df, labels_df, specs[mangled])
+                continue
+            fam, sp = state_specs[mangled]
+            if not streaming:
+                df = getattr(self, FAMILIES[fam].batch)(df, sp)
+                continue
+            if fam == "cache" and any(
+                stable_node(s["key_col"]) != stable_node(sp["key_col"])
+                for s in sp["sets"]
+            ):
+                # writes keyed differently from the reads: only the
+                # union resolver can route them — a pass of its own
+                df = _flush(df, pos)
+                _register_pass([mangled])
+                df = self._join_cache_streaming(df, sp)
+                continue
+            if not _fusable(fam, sp):
+                df = _flush(df, pos)
+            pending.append((fam, sp))
+        df = _flush(df, len(order))
         return df.select(*cols)
 
 

@@ -12,17 +12,22 @@ families:
 - ``inputs`` — the spec fields holding input Columns (dependency
   extraction for hoisting and fusion);
 - ``stream`` — the builder for the streaming side: the columns the
-  fused state pass ships per op, the output type, and the per-key
-  segment fold.
+  fused state pass ships per op, the output type, and the bucket
+  fold.
 
 Streaming frames resolve every family through the fused state pass
-(``CompiledRuleset._join_fused_state``): rows sort by (key, sec[, ord]),
-and each key's segment folds through every op of the pass against that
-op's ``{key: entry}`` map. A segment fold has the signature
-``fold(smap, mk, seg_sec, s, e, inp, out)``: ``mk`` is the JSON map key,
-``seg_sec`` the segment's event seconds, ``[s, e)`` its rows in the
-batch, ``inp`` the op's input arrays and ``out`` its output array.
-Each fold is pinned to its batch resolver by the stream==batch suites.
+(``CompiledRuleset._join_fused_state``), which hands each op a whole
+bucket at once. A fold has the signature
+``fold(smap, mks, starts, ends, sec, inp, out)``: the bucket's rows are
+sorted by (key, sec[, ord]); key ``mks[k]`` (its JSON map key) owns rows
+``[starts[k], ends[k])``; ``sec`` is every row's event second, ``inp``
+the op's input arrays and ``out`` its output array, all in that sorted
+order; ``smap`` is the op's ``{key: entry}`` map. The window counter and
+window sum share one numpy kernel over the bucket, key age and last
+value are plain numpy over the segments, and every other family wraps
+its one-key body ``(smap, mk, seg_sec, s, e, inp, out)`` in
+``per_key``. Each fold is pinned to its batch resolver by the
+stream==batch suites.
 """
 
 from __future__ import annotations
@@ -31,7 +36,8 @@ import hashlib
 import json
 import math
 import re
-from typing import Any, Callable, NamedTuple
+from itertools import chain
+from typing import Any, Callable, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
@@ -71,32 +77,90 @@ def _present(v) -> bool:
     return v is not None and not pd.isna(v)
 
 
-def _window(sp: dict) -> Stream:
-    win, cap, gated = int(sp["window_seconds"]), int(sp["cap"]), sp["gate"] is not None
+def per_key(seg_fold: Callable) -> Callable:
+    """The bucket fold of a family whose body folds one key at a time:
+    ``seg_fold(smap, mk, seg_sec, s, e, inp, out)`` runs on each key's
+    rows ``[s, e)``."""
 
-    def fold(smap, mk, seg_sec, s, e, inp, out):
-        # all increment timestamps visible for this key: carried deque
-        # + this segment's gated rows. Count at row i = increments in
-        # [sec_i - win + 1, sec_i]; a row's own increment sorts <= sec_i
-        # so it counts, later rows' do not — zadd-then-zcard, vectorized
-        inc_ts = np.sort(
-            np.concatenate(
-                [np.asarray(smap.get(mk, ()), dtype="int64"), seg_sec[inp["inc"][s:e]]]
-            )
+    def fold(smap, mks, starts, ends, sec, inp, out):
+        for mk, s, e in zip(mks, starts.tolist(), ends.tolist()):
+            seg_fold(smap, mk, sec[s:e], s, e, inp, out)
+
+    return fold
+
+
+def trailing_sum_fold(
+    win: int, amt: Optional[str], *, pairs: bool, cap: int = 0, gated: bool = False
+) -> Callable:
+    """The bucket kernel of the window counter and the window sum: per
+    row, the sum of the key's amounts (carried + this batch) with event
+    second in ``[sec - win + 1, sec]``, ties included, as the batch
+    RANGE window sees them. A window count is the sum of its 0/1
+    increments (every row counts when ``amt`` is None). The state keeps
+    each key's non-zero entries still inside the window of its newest
+    row: ``[sec, amt]`` pairs when ``pairs``, else bare seconds (one
+    per increment). ``cap`` clamps the output, ``gated`` zeroes rows
+    whose ``gate`` input is off.
+
+    One stable sort of ``key index * span + (sec - base)`` over carried
+    entries and rows orders every key's entries by second, carried
+    before new at equal seconds; two ``searchsorted`` calls against the
+    prefix sum give every row's window."""
+
+    def fold(smap, mks, starts, ends, sec, inp, out):
+        n_keys = len(mks)
+        carried = [smap.get(mk, ()) for mk in mks]
+        c_len = np.fromiter(map(len, carried), dtype="int64", count=n_keys)
+        flat = chain.from_iterable(carried)
+        if pairs:
+            c = np.fromiter(chain.from_iterable(flat), dtype="int64").reshape(-1, 2)
+            c_sec, c_amt = c[:, 0], c[:, 1]
+        else:
+            c_sec = np.fromiter(flat, dtype="int64")
+            c_amt = np.ones(len(c_sec), dtype="int64")
+        r_key = np.repeat(np.arange(n_keys), ends - starts)
+        r_amt = np.ones(len(sec), dtype="int64") if amt is None else inp[amt].astype("int64")
+        key = np.concatenate([np.repeat(np.arange(n_keys), c_len), r_key])
+        e_sec = np.concatenate([c_sec, sec])
+        e_amt = np.concatenate([c_amt, r_amt])
+        # every probed second (sec - win + 1 included) lands in [1, span)
+        base = int(e_sec.min()) - win
+        span = int(e_sec.max()) - base + 1
+        comp = key * span + (e_sec - base)
+        order = np.argsort(comp, kind="stable")
+        comp, key, e_sec, e_amt = comp[order], key[order], e_sec[order], e_amt[order]
+        csum = np.concatenate(([0], np.cumsum(e_amt)))
+        probe = r_key * span + (sec - base)
+        got = (
+            csum[np.searchsorted(comp, probe, side="right")]
+            - csum[np.searchsorted(comp, probe - win + 1, side="left")]
         )
-        hi = np.searchsorted(inc_ts, seg_sec, side="right")
-        lo = np.searchsorted(inc_ts, seg_sec - win + 1, side="left")
-        counts = hi - lo
-        if cap and len(inc_ts) > cap:
-            counts = np.minimum(counts, cap)
-        out[s:e] = np.where(inp["gate"][s:e], counts, 0) if gated else counts
-        keep = int(seg_sec.max()) - win + 1
-        kept = inc_ts[np.searchsorted(inc_ts, keep, side="left"):]
-        _put(smap, mk, [int(x) for x in kept])
+        if cap:
+            got = np.minimum(got, cap)
+        out[:] = np.where(inp["gate"], got, 0) if gated else got
+        # evict: entries older than the window of the key's newest row
+        keep = (e_amt != 0) & (e_sec >= (sec[ends - 1] - win + 1)[key])
+        bounds = np.concatenate(([0], np.cumsum(np.bincount(key[keep], minlength=n_keys))))
+        kept = (np.stack([e_sec[keep], e_amt[keep]], axis=1) if pairs else e_sec[keep]).tolist()
+        for mk, lo, hi in zip(mks, bounds[:-1].tolist(), bounds[1:].tolist()):
+            _put(smap, mk, kept[lo:hi])
 
-    cols = {"inc": (F.coalesce(sp["incremented"], F.lit(False)), "bool")}
-    if gated:
+    return fold
+
+
+def _window(sp: dict) -> Stream:
+    # the carried entry is the Redis zset of in-window increment
+    # seconds; an increment that is the literal true (no when_all)
+    # ships no column: every row counts
+    cols = {}
+    if stable_node(sp["incremented"]) != stable_node(F.lit(True)):
+        cols["inc"] = (F.coalesce(sp["incremented"], F.lit(False)), "bool")
+    if sp["gate"] is not None:
         cols["gate"] = (_gate(sp), "bool")
+    fold = trailing_sum_fold(
+        int(sp["window_seconds"]), "inc" if "inc" in cols else None,
+        pairs=False, cap=int(sp["cap"]), gated="gate" in cols,
+    )
     return Stream(cols, T.LongType(), "int64", fold)
 
 
@@ -113,7 +177,7 @@ def _seq(sp: dict) -> Stream:
             seg_out[j] = rx.search(suffix) is not None
         _put(smap, mk, suffix)
 
-    return Stream({"sym": (sp["symbol_col"], "object")}, T.BooleanType(), "bool", fold)
+    return Stream({"sym": (sp["symbol_col"], "object")}, T.BooleanType(), "bool", per_key(fold))
 
 
 def _wdistinct(sp: dict) -> Stream:
@@ -156,7 +220,7 @@ def _wdistinct(sp: dict) -> Stream:
         _put(smap, mk, [[t, v] for t, v in occ if t >= keep])
 
     cols = {"val": (sp["value_col"], "object"), "vg": (_gate(sp), "bool")}
-    return Stream(cols, T.LongType(), "int64", fold)
+    return Stream(cols, T.LongType(), "int64", per_key(fold))
 
 
 def _seen(sp: dict) -> Stream:
@@ -202,7 +266,7 @@ def _seen(sp: dict) -> Stream:
         _put(smap, mk, sorted([v, ss] for v, ss in final_pairs.items()))
 
     cols = {"val": (sp["value_col"], "object"), "vg": (_gate(sp), "bool")}
-    return Stream(cols, T.BooleanType(), "bool", fold)
+    return Stream(cols, T.BooleanType(), "bool", per_key(fold))
 
 
 def _wminmax(sp: dict) -> Stream:
@@ -241,7 +305,7 @@ def _wminmax(sp: dict) -> Stream:
 
     # object dtype keeps NULL values visible
     cols = {"val": (sp["value_col"], "object"), "vg": (_gate(sp), "bool")}
-    return Stream(cols, T.LongType(), "object", fold)
+    return Stream(cols, T.LongType(), "object", per_key(fold))
 
 
 def _unique(sp: dict) -> Stream:
@@ -292,7 +356,7 @@ def _unique(sp: dict) -> Stream:
         _put(smap, mk, [[v, t0] for v, t0 in kept])
 
     cols = {"val": (sp["value_col"], "object"), "vg": (_gate(sp), "bool")}
-    return Stream(cols, T.LongType(), "int64", fold)
+    return Stream(cols, T.LongType(), "int64", per_key(fold))
 
 
 def _sess(sp: dict) -> Stream:
@@ -324,28 +388,24 @@ def _sess(sp: dict) -> Stream:
             j = hi + 1
         smap[mk] = [int(seg_sec[-1]), int(bases[-1] + (n_seg - starts_ses[-1]))]
 
-    return Stream({}, T.LongType(), "int64", fold)
+    return Stream({}, T.LongType(), "int64", per_key(fold))
+
+
+def last_fold(smap, mks, starts, ends, sec, inp, out):
+    """lag(value): a key's first row sees its carried value (None for a
+    new key), later rows the prior row's value. The state is one
+    JSON-safe string (or None) per key: its last row's value."""
+    vals = inp["val"]
+    out[1:] = vals[:-1]
+    out[starts] = [st[0] if (st := smap.get(mk)) is not None else None for mk in mks]
+    smap.update(
+        (mk, [None if v is None or (isinstance(v, float) and pd.isna(v)) else str(v)])
+        for mk, v in zip(mks, vals[ends - 1])
+    )
 
 
 def _last(sp: dict) -> Stream:
-    def fold(smap, mk, seg_sec, s, e, inp, out):
-        # lag(value): the segment's first row sees the carried value (or
-        # None for a new key), later rows the prior row's value; the
-        # state is ONE JSON-safe string (or None) per key
-        vals = inp["val"][s:e]
-        seg_out = out[s:e]
-        st = smap.get(mk)
-        seg_out[0] = st[0] if st is not None else None
-        if e - s > 1:
-            seg_out[1:] = vals[:-1]
-        v_last = vals[-1]
-        if v_last is not None and not (isinstance(v_last, float) and pd.isna(v_last)):
-            v_last = str(v_last)
-        else:
-            v_last = None
-        smap[mk] = [v_last]
-
-    return Stream({"val": (sp["value_col"], "object")}, T.StringType(), "object", fold)
+    return Stream({"val": (sp["value_col"], "object")}, T.StringType(), "object", last_fold)
 
 
 def _rl(sp: dict) -> Stream:
@@ -368,20 +428,22 @@ def _rl(sp: dict) -> Stream:
                 seg_out[j] = True
         smap[mk] = [tokens, last]
 
-    return Stream({}, T.BooleanType(), "bool", fold)
+    return Stream({}, T.BooleanType(), "bool", per_key(fold))
+
+
+def age_fold(smap, mks, starts, ends, sec, inp, out):
+    """Seconds since the key's first-seen second. The min-fold lets a
+    late out-of-order first row lower the carried floor (it reports 0
+    itself: a key's rows are sec-sorted)."""
+    first = sec[starts]
+    carried = [st[0] if (st := smap.get(mk)) is not None else f for mk, f in zip(mks, first.tolist())]
+    first = np.minimum(first, np.array(carried, dtype="int64"))
+    out[:] = sec - np.repeat(first, ends - starts)
+    smap.update(zip(mks, ([f] for f in first.tolist())))
 
 
 def _age(sp: dict) -> Stream:
-    def fold(smap, mk, seg_sec, s, e, inp, out):
-        # seconds since the key's first-seen second; the min-fold lets a
-        # late out-of-order first event lower the carried floor (it
-        # reports 0 itself: the segment is sec-sorted)
-        st = smap.get(mk)
-        first = int(seg_sec[0]) if st is None else min(int(st[0]), int(seg_sec[0]))
-        out[s:e] = seg_sec - first
-        smap[mk] = [first]
-
-    return Stream({}, T.LongType(), "int64", fold)
+    return Stream({}, T.LongType(), "int64", age_fold)
 
 
 def _round6(x: float) -> float:
@@ -427,7 +489,7 @@ def _burst(sp: dict) -> Stream:
             j = hi + 1
         smap[mk] = [last, ng, sg, qg]
 
-    return Stream({}, T.DoubleType(), "float64", fold)
+    return Stream({}, T.DoubleType(), "float64", per_key(fold))
 
 
 def _amount(sp: dict) -> Column:
@@ -446,24 +508,8 @@ def _sorted_amounts(smap, mk, seg_sec, amt):
 
 
 def _wsum(sp: dict) -> Stream:
-    win = int(sp["window_seconds"])
-
-    def fold(smap, mk, seg_sec, s, e, inp, out):
-        # trailing-window SUM, judged like the batch RANGE window: all
-        # visible same-key amounts (carried + this whole segment) with
-        # ts in [sec_r - win + 1, sec_r]. Carried state is the in-window
-        # non-zero (sec, amt) entries, re-sorted because late data may
-        # put carried entries after segment rows
-        all_sec, all_amt = _sorted_amounts(smap, mk, seg_sec, inp["amt"][s:e])
-        csum = np.concatenate(([0], np.cumsum(all_amt)))
-        hi = np.searchsorted(all_sec, seg_sec, side="right")
-        lo = np.searchsorted(all_sec, seg_sec - win + 1, side="left")
-        out[s:e] = csum[hi] - csum[lo]
-        kidx = np.searchsorted(all_sec, int(seg_sec.max()) - win + 1, side="left")
-        _put(smap, mk, [
-            [int(t), int(a)] for t, a in zip(all_sec[kidx:], all_amt[kidx:]) if a != 0
-        ])
-
+    # carried state: the in-window non-zero [sec, amt] entries
+    fold = trailing_sum_fold(int(sp["window_seconds"]), "amt", pairs=True)
     return Stream({"amt": (_amount(sp), "int64")}, T.LongType(), "int64", fold)
 
 
@@ -497,7 +543,7 @@ def _decay(sp: dict) -> Stream:
             [int(t), int(a)] for t, a in zip(u_sec[kidx:], u_amt[kidx:]) if a != 0
         ])
 
-    return Stream({"amt": (_amount(sp), "int64")}, T.LongType(), "int64", fold)
+    return Stream({"amt": (_amount(sp), "int64")}, T.LongType(), "int64", per_key(fold))
 
 
 def _tent(sp: dict) -> Stream:
@@ -525,7 +571,7 @@ def _tent(sp: dict) -> Stream:
             last = ch
         smap[mk] = [last, ncnt, sq, cnts]
 
-    return Stream({"sym": (sp["state_col"], "object")}, T.DoubleType(), "float64", fold)
+    return Stream({"sym": (sp["state_col"], "object")}, T.DoubleType(), "float64", per_key(fold))
 
 
 def _cache(sp: dict) -> Stream:
@@ -563,7 +609,7 @@ def _cache(sp: dict) -> Stream:
             g = g & F.coalesce(st["gate"], F.lit(False))
         cols[f"g{j}"] = (g, "bool")
         cols[f"v{j}"] = (st["value_col"].cast(sp["cast"]), "object")
-    return Stream(cols, T._parse_datatype_string(sp["cast"]), "object", fold)
+    return Stream(cols, T._parse_datatype_string(sp["cast"]), "object", per_key(fold))
 
 
 FAMILIES: dict[str, Family] = {

@@ -10,10 +10,14 @@ key change or a dependency on a fused op's output.
 
 from __future__ import annotations
 
+import copy
 import os
 import shutil
 
+import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from osprey_spark.compiler import compile_ruleset
@@ -502,6 +506,21 @@ def test_singleton_stream_equals_batch(spark, tmp_path, sml, col):
     assert _n_fused_passes(out) == 1
 
 
+def test_state_pass_keeps_data_read_after_it(spark, tmp_path):
+    """The envelope's JSON ``data`` column crosses the state pass when
+    a feature after the pass still reads it (a nested JsonData path has
+    no typed column), and stream==batch still holds."""
+    sml = SINGLE_WINDOW_SML + (
+        "AB: Optional[str] = JsonData(path='$.a.b', required=False)\n"
+        "Seen = N + StringLength(s=AB)\n"
+    )
+    rs, in_dir = _stream_vs_batch(spark, tmp_path, sml, ["N", "AB", "Seen"])
+    stream = spark.readStream.schema(spark.read.parquet(in_dir).schema).parquet(in_dir)
+    plan = rs().apply(with_envelope(stream))._jdf.queryExecution().analyzed().toString()
+    node = next(ln for ln in plan.splitlines() if "WithState" in ln)
+    assert " data#" in node.split("]", 1)[0]
+
+
 @SINGLETONS
 def test_singleton_survives_checkpoint_restart(spark, tmp_path, sml, col):
     """Kill after batch 1, restart a new engine on the same
@@ -670,3 +689,147 @@ def test_keyed_state_runner_owns_the_state_calls():
         "streaming/sketches.py": 7,
         "operators/cep.py": 1,
     }
+
+
+# --------------------------------------------------------------------------
+# bucket kernels vs the one-key reference folds
+# --------------------------------------------------------------------------
+
+
+def _ref_window(win, cap, gated, smap, mk, seg_sec, s, e, inp, out):
+    inc = inp["inc"][s:e] if "inc" in inp else np.ones(e - s, dtype=bool)
+    inc_ts = np.sort(
+        np.concatenate([np.asarray(smap.get(mk, ()), dtype="int64"), seg_sec[inc]])
+    )
+    hi = np.searchsorted(inc_ts, seg_sec, side="right")
+    lo = np.searchsorted(inc_ts, seg_sec - win + 1, side="left")
+    counts = hi - lo
+    if cap and len(inc_ts) > cap:
+        counts = np.minimum(counts, cap)
+    out[s:e] = np.where(inp["gate"][s:e], counts, 0) if gated else counts
+    kept = inc_ts[np.searchsorted(inc_ts, int(seg_sec.max()) - win + 1, side="left"):]
+    if len(kept):
+        smap[mk] = [int(x) for x in kept]
+    else:
+        smap.pop(mk, None)
+
+
+def _ref_wsum(win, smap, mk, seg_sec, s, e, inp, out):
+    prev = np.asarray(smap.get(mk, ()), dtype="int64").reshape(-1, 2)
+    all_sec = np.concatenate([prev[:, 0], seg_sec])
+    all_amt = np.concatenate([prev[:, 1], inp["amt"][s:e]])
+    o = np.argsort(all_sec, kind="stable")
+    all_sec, all_amt = all_sec[o], all_amt[o]
+    csum = np.concatenate(([0], np.cumsum(all_amt)))
+    hi = np.searchsorted(all_sec, seg_sec, side="right")
+    lo = np.searchsorted(all_sec, seg_sec - win + 1, side="left")
+    out[s:e] = csum[hi] - csum[lo]
+    kidx = np.searchsorted(all_sec, int(seg_sec.max()) - win + 1, side="left")
+    kept = [[int(t), int(a)] for t, a in zip(all_sec[kidx:], all_amt[kidx:]) if a != 0]
+    if kept:
+        smap[mk] = kept
+    else:
+        smap.pop(mk, None)
+
+
+def _ref_age(smap, mk, seg_sec, s, e, inp, out):
+    st_ = smap.get(mk)
+    first = int(seg_sec[0]) if st_ is None else min(int(st_[0]), int(seg_sec[0]))
+    out[s:e] = seg_sec - first
+    smap[mk] = [first]
+
+
+def _ref_last(smap, mk, seg_sec, s, e, inp, out):
+    vals = inp["val"][s:e]
+    st_ = smap.get(mk)
+    out[s] = st_[0] if st_ is not None else None
+    out[s + 1 : e] = vals[:-1]
+    v = vals[-1]
+    smap[mk] = [None if v is None or (isinstance(v, float) and v != v) else str(v)]
+
+
+_T0 = 1_700_000_000
+
+
+@st.composite
+def _buckets(draw):
+    """One bucket: keys (the NULL key's map key among them), each with
+    sorted row seconds and maybe a carried entry per family — carried
+    seconds may lie after this batch's rows (late data) or before the
+    window (eviction)."""
+    n = draw(st.integers(1, 6))
+    keys = draw(st.lists(st.sampled_from("abcdefgh"), min_size=n, max_size=n, unique=True))
+    if draw(st.booleans()):
+        keys[-1] = "\x00"
+    secs, states = [], {"window": {}, "wsum": {}, "age": {}, "last": {}}
+    sec_st = st.integers(_T0 - 40, _T0 + 40)
+    for k in keys:
+        secs.append(sorted(draw(st.lists(sec_st, min_size=1, max_size=6))))
+        if draw(st.booleans()):
+            states["window"][k] = sorted(draw(st.lists(sec_st, min_size=1, max_size=5)))
+        if draw(st.booleans()):
+            states["wsum"][k] = [
+                [t, a] for t, a in sorted(draw(st.lists(
+                    st.tuples(sec_st, st.integers(-3, 3).filter(bool)), min_size=1, max_size=5,
+                )))
+            ]
+        if draw(st.booleans()):
+            states["age"][k] = [draw(sec_st)]
+        if draw(st.booleans()):
+            states["last"][k] = [draw(st.sampled_from([None, "p", "q"]))]
+    rows = sum(len(x) for x in secs)
+    inp = {
+        "inc": np.array(draw(st.lists(st.booleans(), min_size=rows, max_size=rows))),
+        "gate": np.array(draw(st.lists(st.booleans(), min_size=rows, max_size=rows))),
+        "amt": np.array(draw(st.lists(st.integers(-2, 3), min_size=rows, max_size=rows)), dtype="int64"),
+        "val": np.array(
+            draw(st.lists(st.sampled_from([None, "x", "y", 7, float("nan")]), min_size=rows, max_size=rows)),
+            dtype=object,
+        ),
+    }
+    return keys, secs, states, inp
+
+
+def _same(a, b):
+    def na(v):  # NaN == NaN
+        return None if isinstance(v, float) and v != v else v
+
+    return [na(v) for v in a.tolist()] == [na(v) for v in b.tolist()]
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    bucket=_buckets(),
+    win=st.integers(1, 30),
+    cap=st.sampled_from([0, 1, 2, 3, 10_000]),
+    counted=st.booleans(),
+    gated=st.booleans(),
+)
+def test_bucket_kernels_match_per_key_folds(bucket, win, cap, counted, gated):
+    """Each vectorized bucket kernel (window count, window sum, key age,
+    last value) yields the outputs and the state map of the one-key
+    reference fold run key by key over the same sorted bucket."""
+    from osprey_spark.compiler.families import age_fold, last_fold, trailing_sum_fold
+
+    keys, secs, states, inp = bucket
+    sec = np.array([t for seg in secs for t in seg], dtype="int64")
+    ends = np.cumsum([len(seg) for seg in secs])
+    starts = ends - [len(seg) for seg in secs]
+    w_inp = {f: inp[f] for f in (("gate",) if gated else ()) + (() if counted else ("inc",))}
+    cases = [
+        ("window", trailing_sum_fold(win, None if counted else "inc", pairs=False, cap=cap, gated=gated),
+         lambda *a: _ref_window(win, cap, gated, *a), w_inp, "int64"),
+        ("wsum", trailing_sum_fold(win, "amt", pairs=True), lambda *a: _ref_wsum(win, *a),
+         {"amt": inp["amt"]}, "int64"),
+        ("age", age_fold, _ref_age, {}, "int64"),
+        ("last", last_fold, _ref_last, {"val": inp["val"]}, "object"),
+    ]
+    for fam, kernel, ref, op_inp, dt in cases:
+        got_map, want_map = copy.deepcopy(states[fam]), copy.deepcopy(states[fam])
+        got = np.full(len(sec), None, dtype=object) if dt == "object" else np.zeros(len(sec), dt)
+        want = got.copy()
+        kernel(got_map, keys, starts, ends, sec, op_inp, got)
+        for mk, s, e in zip(keys, starts.tolist(), ends.tolist()):
+            ref(want_map, mk, sec[s:e], s, e, op_inp, want)
+        assert _same(got, want), fam
+        assert got_map == want_map, fam

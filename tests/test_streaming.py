@@ -9,6 +9,7 @@ the north-rule semantics.
 from __future__ import annotations
 
 import os
+import re
 import time
 
 import pytest
@@ -1146,6 +1147,12 @@ Heavy = N >= 3
     assert "__f_WcKey" in sig  # the dep closure rides along
     for feature in ("__f_Big1", "__f_Big2", "__f_Big3"):
         assert feature not in sig, f"{feature} crossed the Arrow boundary"
+    # nothing after the pass reads the envelope's JSON copy of the turn
+    # or its action name, so neither crosses in either direction; an
+    # ungated IncrementWindow ships no constant increment column
+    for dead in ("data", "action_name"):
+        assert not re.search(rf"[(\[ ]{dead}#", node), f"{dead} crossed the Arrow boundary"
+    assert "_inc#" not in sig
 
 
 def test_stream_asof_enrich_long_key_carries_state(spark, tmp_path):

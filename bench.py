@@ -3,7 +3,8 @@
 
 Runs the headline queries from ``__spark_entry__.queries()`` on
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) with
-``local[$SPARK_GRAFT_CPUS]`` and measures the BASELINE.json metric —
+``build_session``'s default ``local[N]`` (N = ``$SPARK_GRAFT_CPUS``, else the
+host's cores; recorded as ``cpus``) and measures the BASELINE.json metric —
 rule-verdict throughput (turns/sec) of the streaming pipeline over a
 deterministic skewed transcripts table — then prints ONE JSON line:
 
@@ -374,6 +375,7 @@ def main() -> None:
             "spark.hadoop.parquet.enable.dictionary": "false",
         },
     )
+    cpus = spark.sparkContext.defaultParallelism
     try:
         qtimes = _bench_queries(spark, sf_dir)
         streaming = _bench_streaming(spark, work_dir)
@@ -394,7 +396,7 @@ def main() -> None:
         "sf": sf,
         "throughput": streaming,
         "backpressure": backpressure,
-        "cpus": len(os.sched_getaffinity(0)),
+        "cpus": cpus,
     }
     scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALING.json")
     if os.path.exists(scaling_path):

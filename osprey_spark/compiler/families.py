@@ -23,9 +23,8 @@ sorted by (key, sec[, ord]); key ``mks[k]`` (its JSON map key) owns rows
 ``[starts[k], ends[k])``; ``sec`` is every row's event second, ``inp``
 the op's input arrays and ``out`` its output array, all in that sorted
 order; ``smap`` is the op's ``{key: entry}`` map. The window counter and
-window sum share one numpy kernel over the bucket, key age and last
-value are plain numpy over the segments, and every other family wraps
-its one-key body ``(smap, mk, seg_sec, s, e, inp, out)`` in
+window sum share one numpy kernel over the bucket; every other family
+wraps its one-key body ``(smap, mk, seg_sec, s, e, inp, out)`` in
 ``per_key``. Each fold is pinned to its batch resolver by the
 stream==batch suites.
 """
@@ -391,21 +390,25 @@ def _sess(sp: dict) -> Stream:
     return Stream({}, T.LongType(), "int64", per_key(fold))
 
 
-def last_fold(smap, mks, starts, ends, sec, inp, out):
-    """lag(value): a key's first row sees its carried value (None for a
-    new key), later rows the prior row's value. The state is one
-    JSON-safe string (or None) per key: its last row's value."""
-    vals = inp["val"]
-    out[1:] = vals[:-1]
-    out[starts] = [st[0] if (st := smap.get(mk)) is not None else None for mk in mks]
-    smap.update(
-        (mk, [None if v is None or (isinstance(v, float) and pd.isna(v)) else str(v)])
-        for mk, v in zip(mks, vals[ends - 1])
-    )
-
-
 def _last(sp: dict) -> Stream:
-    return Stream({"val": (sp["value_col"], "object")}, T.StringType(), "object", last_fold)
+    def fold(smap, mk, seg_sec, s, e, inp, out):
+        # lag(value): the segment's first row sees the carried value (or
+        # None for a new key), later rows the prior row's value; the
+        # state is ONE JSON-safe string (or None) per key
+        vals = inp["val"][s:e]
+        seg_out = out[s:e]
+        st = smap.get(mk)
+        seg_out[0] = st[0] if st is not None else None
+        if e - s > 1:
+            seg_out[1:] = vals[:-1]
+        v_last = vals[-1]
+        if v_last is not None and not (isinstance(v_last, float) and pd.isna(v_last)):
+            v_last = str(v_last)
+        else:
+            v_last = None
+        smap[mk] = [v_last]
+
+    return Stream({"val": (sp["value_col"], "object")}, T.StringType(), "object", per_key(fold))
 
 
 def _rl(sp: dict) -> Stream:
@@ -431,19 +434,17 @@ def _rl(sp: dict) -> Stream:
     return Stream({}, T.BooleanType(), "bool", per_key(fold))
 
 
-def age_fold(smap, mks, starts, ends, sec, inp, out):
-    """Seconds since the key's first-seen second. The min-fold lets a
-    late out-of-order first row lower the carried floor (it reports 0
-    itself: a key's rows are sec-sorted)."""
-    first = sec[starts]
-    carried = [st[0] if (st := smap.get(mk)) is not None else f for mk, f in zip(mks, first.tolist())]
-    first = np.minimum(first, np.array(carried, dtype="int64"))
-    out[:] = sec - np.repeat(first, ends - starts)
-    smap.update(zip(mks, ([f] for f in first.tolist())))
-
-
 def _age(sp: dict) -> Stream:
-    return Stream({}, T.LongType(), "int64", age_fold)
+    def fold(smap, mk, seg_sec, s, e, inp, out):
+        # seconds since the key's first-seen second; the min-fold lets a
+        # late out-of-order first event lower the carried floor (it
+        # reports 0 itself: the segment is sec-sorted)
+        st = smap.get(mk)
+        first = int(seg_sec[0]) if st is None else min(int(st[0]), int(seg_sec[0]))
+        out[s:e] = seg_sec - first
+        smap[mk] = [first]
+
+    return Stream({}, T.LongType(), "int64", per_key(fold))
 
 
 def _round6(x: float) -> float:

@@ -16,6 +16,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Cores a local session runs on: ``$SPARK_GRAFT_CPUS`` when set,
+    else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def build_session(
     app_name: str = "osprey_spark",
     master: str | None = None,
@@ -25,11 +31,11 @@ def build_session(
 ) -> SparkSession:
     """Build a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[default_cpus()]``.
     On a real cluster these settings ride along unchanged except
     ``master``/memory, which spark-submit supplies.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -732,22 +732,6 @@ def _ref_wsum(win, smap, mk, seg_sec, s, e, inp, out):
         smap.pop(mk, None)
 
 
-def _ref_age(smap, mk, seg_sec, s, e, inp, out):
-    st_ = smap.get(mk)
-    first = int(seg_sec[0]) if st_ is None else min(int(st_[0]), int(seg_sec[0]))
-    out[s:e] = seg_sec - first
-    smap[mk] = [first]
-
-
-def _ref_last(smap, mk, seg_sec, s, e, inp, out):
-    vals = inp["val"][s:e]
-    st_ = smap.get(mk)
-    out[s] = st_[0] if st_ is not None else None
-    out[s + 1 : e] = vals[:-1]
-    v = vals[-1]
-    smap[mk] = [None if v is None or (isinstance(v, float) and v != v) else str(v)]
-
-
 _T0 = 1_700_000_000
 
 
@@ -761,7 +745,7 @@ def _buckets(draw):
     keys = draw(st.lists(st.sampled_from("abcdefgh"), min_size=n, max_size=n, unique=True))
     if draw(st.booleans()):
         keys[-1] = "\x00"
-    secs, states = [], {"window": {}, "wsum": {}, "age": {}, "last": {}}
+    secs, states = [], {"window": {}, "wsum": {}}
     sec_st = st.integers(_T0 - 40, _T0 + 40)
     for k in keys:
         secs.append(sorted(draw(st.lists(sec_st, min_size=1, max_size=6))))
@@ -773,28 +757,13 @@ def _buckets(draw):
                     st.tuples(sec_st, st.integers(-3, 3).filter(bool)), min_size=1, max_size=5,
                 )))
             ]
-        if draw(st.booleans()):
-            states["age"][k] = [draw(sec_st)]
-        if draw(st.booleans()):
-            states["last"][k] = [draw(st.sampled_from([None, "p", "q"]))]
     rows = sum(len(x) for x in secs)
     inp = {
         "inc": np.array(draw(st.lists(st.booleans(), min_size=rows, max_size=rows))),
         "gate": np.array(draw(st.lists(st.booleans(), min_size=rows, max_size=rows))),
         "amt": np.array(draw(st.lists(st.integers(-2, 3), min_size=rows, max_size=rows)), dtype="int64"),
-        "val": np.array(
-            draw(st.lists(st.sampled_from([None, "x", "y", 7, float("nan")]), min_size=rows, max_size=rows)),
-            dtype=object,
-        ),
     }
     return keys, secs, states, inp
-
-
-def _same(a, b):
-    def na(v):  # NaN == NaN
-        return None if isinstance(v, float) and v != v else v
-
-    return [na(v) for v in a.tolist()] == [na(v) for v in b.tolist()]
 
 
 @settings(max_examples=300, deadline=None)
@@ -806,10 +775,10 @@ def _same(a, b):
     gated=st.booleans(),
 )
 def test_bucket_kernels_match_per_key_folds(bucket, win, cap, counted, gated):
-    """Each vectorized bucket kernel (window count, window sum, key age,
-    last value) yields the outputs and the state map of the one-key
-    reference fold run key by key over the same sorted bucket."""
-    from osprey_spark.compiler.families import age_fold, last_fold, trailing_sum_fold
+    """The vectorized bucket kernel (window count and window sum) yields
+    the outputs and the state map of the one-key reference fold run key
+    by key over the same sorted bucket."""
+    from osprey_spark.compiler.families import trailing_sum_fold
 
     keys, secs, states, inp = bucket
     sec = np.array([t for seg in secs for t in seg], dtype="int64")
@@ -818,18 +787,15 @@ def test_bucket_kernels_match_per_key_folds(bucket, win, cap, counted, gated):
     w_inp = {f: inp[f] for f in (("gate",) if gated else ()) + (() if counted else ("inc",))}
     cases = [
         ("window", trailing_sum_fold(win, None if counted else "inc", pairs=False, cap=cap, gated=gated),
-         lambda *a: _ref_window(win, cap, gated, *a), w_inp, "int64"),
+         lambda *a: _ref_window(win, cap, gated, *a), w_inp),
         ("wsum", trailing_sum_fold(win, "amt", pairs=True), lambda *a: _ref_wsum(win, *a),
-         {"amt": inp["amt"]}, "int64"),
-        ("age", age_fold, _ref_age, {}, "int64"),
-        ("last", last_fold, _ref_last, {"val": inp["val"]}, "object"),
+         {"amt": inp["amt"]}),
     ]
-    for fam, kernel, ref, op_inp, dt in cases:
+    for fam, kernel, ref, op_inp in cases:
         got_map, want_map = copy.deepcopy(states[fam]), copy.deepcopy(states[fam])
-        got = np.full(len(sec), None, dtype=object) if dt == "object" else np.zeros(len(sec), dt)
-        want = got.copy()
+        got, want = np.zeros(len(sec), "int64"), np.zeros(len(sec), "int64")
         kernel(got_map, keys, starts, ends, sec, op_inp, got)
         for mk, s, e in zip(keys, starts.tolist(), ends.tolist()):
             ref(want_map, mk, sec[s:e], s, e, op_inp, want)
-        assert _same(got, want), fam
+        assert got.tolist() == want.tolist(), fam
         assert got_map == want_map, fam

@@ -3,8 +3,10 @@
 The sandbox has no multi-node cluster, so the two-cluster-size
 criterion is evidenced by running the *identical* spark-submit job on
 the *identical* input at two parallelism levels — local[N] and
-local[4N], with 4N the cores this host offers (``SPARK_GRAFT_CPUS``
-when set) — and reporting throughput at both plus
+local[4N] with N = cpus // 4 (at least 1), where cpus is
+``SPARK_GRAFT_CPUS`` when set, else the host's cores; 4N is then
+4 * (cpus // 4), not cpus itself when cpus is no multiple of 4 — and
+reporting throughput at both plus
 ``efficiency = (tp_4N / tp_N) / 4`` (target ≥ 0.8), under
 exactly-once output parity (order-insensitive fingerprint equality +
 per-turn text equality vs the input).
@@ -21,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import math
 import subprocess
 import sys
 import zipfile
@@ -138,22 +141,27 @@ def main() -> None:
     stateful_convs = int(os.environ.get("BENCH_SCALING_STATEFUL_CONVS", "0"))
     stateful_input = gen_input(stateful_convs) if stateful_convs else input_dir
 
-    # BENCH_SCALING_CLUSTER=1: run each level as a local-cluster of
-    # SEPARATE EXECUTOR JVMS (up to 4 cores each) instead of local[N]
-    # threads — a quarter as many executors at N as at 4N, with real
-    # executor-process isolation, block-manager shuffle transport, and
-    # per-executor heaps. The closest this sandbox gets to the north
-    # rule's literal "two cluster sizes (N and 4N executors)".
-    cluster = os.environ.get("BENCH_SCALING_CLUSTER") == "1"
-    exec_mem = os.environ.get("BENCH_SCALING_EXEC_MEM_MB", "6144")
+    sys.path.insert(0, REPO)
+    from osprey_spark.session import default_cpus
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    cpus = default_cpus()
     lo = max(cpus // 4, 1)
     hi = 4 * lo
 
+    # BENCH_SCALING_CLUSTER=1: run each level as a local-cluster of
+    # SEPARATE EXECUTOR JVMS instead of local[N] threads, with real
+    # executor-process isolation, block-manager shuffle transport, and
+    # per-executor heaps. Every executor has gcd(N, 4) cores, so 4N runs
+    # exactly four times as many executors as N (2 vs 8 on 32 cores,
+    # 1 vs 4 on 4 or 8). The closest this sandbox gets to the north
+    # rule's literal "two cluster sizes (N and 4N executors)".
+    cluster = os.environ.get("BENCH_SCALING_CLUSTER") == "1"
+    exec_mem = os.environ.get("BENCH_SCALING_EXEC_MEM_MB", "6144")
+    exec_cores = math.gcd(lo, 4)
+
     def master_for(cores: int) -> str:
         if cluster:
-            return f"local-cluster[{max(cores // 4, 1)},{min(cores, 4)},{exec_mem}]"
+            return f"local-cluster[{cores // exec_cores},{exec_cores},{exec_mem}]"
         return f"local[{cores}]"
 
     modes = ("e2e", "ruleval", "stateful", "cal")
@@ -177,6 +185,8 @@ def main() -> None:
     e2e_n, e2e_4n = best[("e2e", lo)], best[("e2e", hi)]
     result = {
         "cpus": cpus,
+        # N = cpus // 4 and 4N = 4 * (cpus // 4) task slots
+        "levels": {"N": lo, "4N": hi},
         "input_turns": e2e_n["rows"],
         "repeats_per_level": repeats,
         "all_throughputs": {

@@ -172,7 +172,6 @@ def stream_turn_repetition(
     per-group Arrow cost amortized across keys.
     """
     import re as _re
-    from decimal import ROUND_HALF_UP, Decimal
 
     import pandas as pd
     from pyspark.sql.types import (
@@ -184,16 +183,9 @@ def stream_turn_repetition(
     )
 
     from ..streaming.keyed_state import run_keyed_state
+    from ..streaming.sketches import _round6
 
     split_rx = _re.compile(r"[\W_]+", _re.ASCII)
-    _q = Decimal("0.000001")
-
-    def _round6(x: float) -> float:
-        # replicate Spark's F.round on doubles exactly:
-        # BigDecimal.valueOf(x) (shortest decimal repr, == Python repr)
-        # then setScale(6, HALF_UP) — Python's round() is half-even and
-        # would diverge on exact ties (means that are odd/128 etc.)
-        return float(Decimal(repr(x)).quantize(_q, rounding=ROUND_HALF_UP))
 
     out_schema = StructType(
         [

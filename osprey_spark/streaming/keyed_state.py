@@ -31,9 +31,12 @@ supplies only its fold:
 
 The bucket column name, the state field name and the JSON payload are
 the operator's, so checkpoints written by each operator resume
-unchanged. Ops that emit on event-time timeout (``sketches.py``, CEP's
-response-absence) keep their own calls: they have no bucket map and
-their fold runs on expiry, not on input.
+unchanged. Ops that emit on event-time timeout have no bucket map and
+fold on expiry, not on input: the six windowed sketch ops run on the
+windowed runner, ``sketches._window_sketch``, the home of the
+event-time ops, and CEP's response-absence op keeps its per-trigger
+deadlines in its own call. ``sketches.stream_cusum`` keeps its own
+call too: its state is four typed longs, not JSON.
 """
 
 from __future__ import annotations

@@ -20,11 +20,14 @@ key with no per-conversation state at all. A hot window/dim slot
 serializes its register fold (inherent to any per-group sketch) but
 carries only counts, never conversation payloads.
 
-Lifecycle: watermark-driven. Open slots emit a changelog row per
-touching micro-batch (`is_final=false`, monotone `upd_seq`); when the
-event-time watermark passes window_end + the configured delay, the
-slot times out, emits its closing row (`is_final=true`) and frees its
-state — the state store never accumulates closed windows.
+Lifecycle: watermark-driven, owned by `_window_sketch` for all six
+windowed ops (each supplies only its projection, empty sketch, merge
+and read). Open slots emit a changelog row per touching micro-batch
+(`is_final=false`, monotone `upd_seq`); when the event-time watermark
+passes window_end + the configured delay, the slot times out, emits
+its closing row (`is_final=true`) and frees its state — the state
+store never accumulates closed windows. `stream_cusum` keeps its own
+call: it has no window, no timeout and a typed four-long state.
 
 No counterpart in the reference engine (its approx distinct counts
 are Druid/ClickHouse-side, e.g. the TopN/timeseries paths the batch
@@ -37,6 +40,7 @@ import json
 import math
 import re
 from decimal import ROUND_HALF_UP, Decimal
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -93,6 +97,109 @@ def hll_estimate_from_registers(regs: dict) -> float:
     return _round6(est)
 
 
+def _window_sketch(
+    turns: DataFrame,
+    cols: list,
+    fields: str,
+    empty: Callable[[], Any],
+    merge: Callable[[Any, Any], Any],
+    read: Callable[[Any], dict],
+    state_field: str,
+    dims: tuple[str, ...],
+    ts_col: str,
+    window_seconds: int,
+    watermark: str,
+) -> DataFrame:
+    """The event-time lifecycle of every windowed sketch op; the op
+    supplies only its projected ``cols``, its output ``fields`` (DDL),
+    an ``empty()`` sketch, ``merge(sketch, pdf) -> sketch`` and
+    ``read(sketch) -> {field: values}``.
+
+    The stream is grouped by ``(win_start, dims...)`` — the tumbling
+    ``window_seconds`` window of ``ts_col``, dims cast to string — and
+    each slot keeps ``json [sketch, upd_seq]`` in ``state_field``. A
+    touching micro-batch merges each chunk, bumps ``upd_seq`` and emits
+    the read with ``is_final=false``; once the watermark passes
+    window_end + delay the slot emits the read once more with
+    ``is_final=true`` and frees its state. Rows are ``win_start,
+    dims..., fields..., upd_seq, is_final``. The state field and its
+    JSON payload are the op's own, so its checkpoints resume unchanged.
+    """
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    delay_sec = parse_delay_seconds(watermark)
+    win_s = int(window_seconds)
+    ts_sec = F.col(ts_col).cast("long")
+    src = turns.withWatermark(ts_col, watermark).select(
+        (ts_sec - F.pmod(ts_sec, F.lit(win_s))).alias("win_start"),
+        *[F.col(d).cast("string").alias(d) for d in dims],
+        *cols,
+        # the watermark-bearing event-time column must survive the
+        # projection for EventTimeTimeout to resolve; fn ignores it
+        F.col(ts_col),
+    )
+    out_schema = ", ".join(
+        ["win_start long", *[f"`{d}` string" for d in dims], fields]
+        + ["upd_seq long", "is_final boolean"]
+    )
+
+    def fn(key_tuple, pdf_iter, state):
+        # key tuple arrives as numpy scalars; GroupState round-trips
+        # its properties (incl. the timeout timestamp) through
+        # json.dumps, which rejects np.int64 — coerce once here
+        win_start = int(key_tuple[0])
+        sketch, seq = json.loads(state.get[0]) if state.exists else (empty(), 0)
+
+        def frame(sketch, seq, final):
+            vals = read(sketch)
+            n = len(next(iter(vals.values())))
+            return pd.DataFrame(
+                {
+                    "win_start": pd.array([win_start] * n, dtype="int64"),
+                    **{d: [dv] * n for d, dv in zip(dims, key_tuple[1:])},
+                    **vals,
+                    "upd_seq": pd.array([seq] * n, dtype="int64"),
+                    "is_final": pd.array([final] * n, dtype="bool"),
+                }
+            )
+
+        if state.hasTimedOut:
+            state.remove()
+            yield frame(sketch, seq + 1, True)
+            return
+
+        for pdf in pdf_iter:
+            if len(pdf):
+                sketch = merge(sketch, pdf)
+        seq += 1
+        state.update((json.dumps([sketch, seq]),))
+        # close the slot once the event-time watermark clears
+        # window_end + delay (timeout needs a timestamp strictly
+        # beyond the current watermark to register)
+        timeout_ms = (win_start + win_s + delay_sec) * 1000
+        state.setTimeoutTimestamp(max(timeout_ms, state.getCurrentWatermarkMs() + 1))
+        yield frame(sketch, seq, False)
+
+    return src.groupBy("win_start", *dims).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=f"{state_field} string",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def _add_bins(bins: dict, pdf) -> dict:
+    # histogram merge = integer vector addition of per-batch partial
+    # bin counts — exact in any arrival order; the bin ids stay string
+    # keys, as the checkpointed JSON holds them
+    for b, n in pdf.groupby("_bin").size().items():
+        k = str(int(b))
+        bins[k] = bins.get(k, 0) + int(n)
+    return bins
+
+
 def stream_window_hll(
     turns: DataFrame,
     key_col: str = "conv_id",
@@ -120,19 +227,6 @@ def stream_window_hll(
     JVM-side, so the state fold is a max-merge of the same integers
     in any arrival order.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    delay_sec = parse_delay_seconds(watermark)
-    dims = list(dim_cols)
     key = F.col(key_col)
     h = F.md5(F.concat(F.lit(f"{seed}:"), key.cast("string")).cast("binary"))
     v = F.conv(F.substring(h, 3, 13), 16, 10).cast("long")
@@ -141,88 +235,29 @@ def stream_window_hll(
         .otherwise(F.lit(53) - F.length(F.conv(F.substring(h, 3, 13), 16, 2)))
         .cast("int")
     )
-    ts_sec = F.col(ts_col).cast("long")
-    win = (ts_sec - F.pmod(ts_sec, F.lit(int(window_seconds)))).alias("win_start")
 
-    src = turns.withWatermark(ts_col, watermark).select(
-        win,
-        *[F.col(d).cast("string").alias(d) for d in dims],
-        F.conv(F.substring(h, 1, 2), 16, 10).cast("int").alias("_bkt"),
-        rho.alias("_rho"),
-        # the watermark-bearing event-time column must survive the
-        # projection for EventTimeTimeout to resolve; fn ignores it
-        F.col(ts_col),
-    )
+    def merge(regs, pdf):
+        # per-batch max-merge: groupby bucket max then fold into
+        # the carried registers — order-independent by construction
+        for b, r in pdf.groupby("_bkt")["_rho"].max().items():
+            k = str(int(b))
+            if r > regs.get(k, 0):
+                regs[k] = int(r)
+        return regs
 
-    out_schema = StructType(
-        [StructField("win_start", LongType())]
-        + [StructField(d, StringType()) for d in dims]
-        + [
-            StructField("n_regs", LongType()),
-            StructField("hll_estimate", DoubleType()),
-            StructField("upd_seq", LongType()),
-            StructField("is_final", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("regs_json", StringType())])
-    win_s = int(window_seconds)
+    def read(regs):
+        return {
+            "n_regs": [len(regs)],
+            "hll_estimate": [hll_estimate_from_registers(regs)],
+        }
 
-    def fn(key_tuple, pdf_iter, state):
-        # key tuple arrives as numpy scalars; GroupState round-trips
-        # its properties (incl. the timeout timestamp) through
-        # json.dumps, which rejects np.int64 — coerce once here
-        win_start = int(key_tuple[0])
-        dim_vals = list(key_tuple[1:])
-
-        def _row(regs, seq, final):
-            return pd.DataFrame(
-                {
-                    "win_start": pd.array([win_start], dtype="int64"),
-                    **{d: [dv] for d, dv in zip(dims, dim_vals)},
-                    "n_regs": pd.array([len(regs)], dtype="int64"),
-                    "hll_estimate": pd.array(
-                        [hll_estimate_from_registers(regs)], dtype="float64"
-                    ),
-                    "upd_seq": pd.array([seq], dtype="int64"),
-                    "is_final": pd.array([final], dtype="bool"),
-                }
-            )
-
-        if state.hasTimedOut:
-            regs, seq = (
-                json.loads(state.get[0]) if state.exists else ({}, 0)
-            )
-            state.remove()
-            yield _row(regs, seq + 1, True)
-            return
-
-        regs, seq = json.loads(state.get[0]) if state.exists else ({}, 0)
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            # per-batch max-merge: groupby bucket max then fold into
-            # the carried registers — order-independent by construction
-            mx = pdf.groupby("_bkt")["_rho"].max()
-            for b, r in mx.items():
-                k = str(int(b))
-                if r > regs.get(k, 0):
-                    regs[k] = int(r)
-        seq += 1
-        state.update((json.dumps([regs, seq]),))
-        # close the slot once the event-time watermark clears
-        # window_end + delay (timeout needs a timestamp strictly
-        # beyond the current watermark to register)
-        timeout_ms = (win_start + win_s + delay_sec) * 1000
-        cur_wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(timeout_ms, cur_wm + 1))
-        yield _row(regs, seq, False)
-
-    return src.groupBy("win_start", *dims).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    bkt = F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
+    return _window_sketch(
+        turns,
+        [bkt.alias("_bkt"), rho.alias("_rho")],
+        "n_regs long, hll_estimate double",
+        dict, merge, read, "regs_json",
+        dim_cols, ts_col, window_seconds, watermark,
     )
 
 
@@ -267,119 +302,40 @@ def stream_window_cms(
     fold is integer addition of identical md5-derived buckets, exact
     in any arrival order.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators.sketches import _bucket
 
     if not watch_keys:
         raise ValueError("stream_window_cms needs a non-empty watch_keys list")
-    delay_sec = parse_delay_seconds(watermark)
-    dims = list(dim_cols)
     key = F.col(key_col)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias("d"), _bucket(key, d, width, seed).alias("bucket")
-            )
-            for d in range(depth)
-        ]
-    )
-    ts_sec = F.col(ts_col).cast("long")
-    win = (ts_sec - F.pmod(ts_sec, F.lit(int(window_seconds)))).alias("win_start")
-    src = (
-        turns.withWatermark(ts_col, watermark)
-        .select(
-            win,
-            *[F.col(d).cast("string").alias(d) for d in dims],
-            F.explode(pairs).alias("_p"),
-            F.col(ts_col),
-        )
-        .select(
-            "win_start",
-            *dims,
-            F.col("_p.d").alias("_d"),
-            F.col("_p.bucket").alias("_bucket"),
-            F.col(ts_col),
-        )
-    )
+    buckets = F.array(*[_bucket(key, d, width, seed) for d in range(depth)])
     watch = {
         k: [py_cms_bucket(k, d, width, seed) for d in range(depth)]
         for k in watch_keys
     }
-    out_schema = StructType(
-        [StructField("win_start", LongType())]
-        + [StructField(d, StringType()) for d in dims]
-        + [
-            StructField("key", StringType()),
-            StructField("cms_n", LongType()),
-            StructField("upd_seq", LongType()),
-            StructField("is_final", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("counters_json", StringType())])
-    win_s = int(window_seconds)
 
-    def fn(key_tuple, pdf_iter, state):
-        win_start = int(key_tuple[0])
-        dim_vals = list(key_tuple[1:])
+    def merge(counters, pdf):
+        # sum-merge: per-batch (d, bucket) partial counts fold by
+        # integer addition — exact in any arrival order
+        for (d, b), n in pdf.groupby(["_d", "_bucket"]).size().items():
+            ck = f"{int(d)}:{int(b)}"
+            counters[ck] = counters.get(ck, 0) + int(n)
+        return counters
 
-        def _rows(counters, seq, final):
-            ks, ns = [], []
-            for k, buckets in watch.items():
-                ks.append(k)
-                ns.append(
-                    min(counters.get(f"{d}:{b}", 0) for d, b in enumerate(buckets))
-                )
-            return pd.DataFrame(
-                {
-                    "win_start": pd.array([win_start] * len(ks), dtype="int64"),
-                    **{d: [dv] * len(ks) for d, dv in zip(dims, dim_vals)},
-                    "key": ks,
-                    "cms_n": pd.array(ns, dtype="int64"),
-                    "upd_seq": pd.array([seq] * len(ks), dtype="int64"),
-                    "is_final": pd.array([final] * len(ks), dtype="bool"),
-                }
-            )
+    def read(counters):
+        return {
+            "key": list(watch),
+            "cms_n": [
+                min(counters.get(f"{d}:{b}", 0) for d, b in enumerate(bs))
+                for bs in watch.values()
+            ],
+        }
 
-        if state.hasTimedOut:
-            counters, seq = (
-                json.loads(state.get[0]) if state.exists else ({}, 0)
-            )
-            state.remove()
-            yield _rows(counters, seq + 1, True)
-            return
-
-        counters, seq = json.loads(state.get[0]) if state.exists else ({}, 0)
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            # sum-merge: per-batch (d, bucket) partial counts fold by
-            # integer addition — exact in any arrival order
-            part = pdf.groupby(["_d", "_bucket"]).size()
-            for (d, b), n in part.items():
-                ck = f"{int(d)}:{int(b)}"
-                counters[ck] = counters.get(ck, 0) + int(n)
-        seq += 1
-        state.update((json.dumps([counters, seq]),))
-        timeout_ms = (win_start + win_s + delay_sec) * 1000
-        cur_wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(timeout_ms, cur_wm + 1))
-        yield _rows(counters, seq, False)
-
-    return src.groupBy("win_start", *dims).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _window_sketch(
+        turns,
+        [F.posexplode(buckets).alias("_d", "_bucket")],
+        "key string, cms_n long",
+        dict, merge, read, "counters_json",
+        dim_cols, ts_col, window_seconds, watermark,
     )
 
 
@@ -412,50 +368,9 @@ def stream_window_kmv(
     est_intersect, upd_seq, is_final``; timeout/`upd_seq` contract
     identical to `stream_window_hll`.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators.sketches import _KMV_DOM, _kmv_hash
 
-    delay_sec = parse_delay_seconds(watermark)
-    dims = list(dim_cols)
     kk = int(k)
-    ts_sec = F.col(ts_col).cast("long")
-    win = (ts_sec - F.pmod(ts_sec, F.lit(int(window_seconds)))).alias("win_start")
-    src = (
-        turns.filter(F.col(seg_col).isin([seg_a, seg_b]))
-        .withWatermark(ts_col, watermark)
-        .select(
-            win,
-            *[F.col(d).cast("string").alias(d) for d in dims],
-            F.col(seg_col).cast("string").alias("_seg"),
-            _kmv_hash(F.col(key_col), seed).alias("_h"),
-            F.col(ts_col),
-        )
-    )
-    out_schema = StructType(
-        [StructField("win_start", LongType())]
-        + [StructField(d, StringType()) for d in dims]
-        + [
-            StructField("est_a", DoubleType()),
-            StructField("est_b", DoubleType()),
-            StructField("est_union", DoubleType()),
-            StructField("est_jaccard", DoubleType()),
-            StructField("est_intersect", DoubleType()),
-            StructField("upd_seq", LongType()),
-            StructField("is_final", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("kmv_json", StringType())])
-    win_s = int(window_seconds)
 
     def _est(lst):
         # replay of kmv_estimate_col: exact below saturation, else
@@ -464,69 +379,44 @@ def stream_window_kmv(
             return float(len(lst))
         return _round6((kk - 1.0) / (lst[kk - 1] / _KMV_DOM))
 
-    def fn(key_tuple, pdf_iter, state):
-        win_start = int(key_tuple[0])
-        dim_vals = list(key_tuple[1:])
+    def merge(sk, pdf):
+        for seg, name in ((seg_a, "a"), (seg_b, "b")):
+            hs = pdf.loc[pdf["_seg"] == seg, "_h"]
+            if len(hs):
+                # min-k merge: sorted set union, truncated
+                sk[name] = sorted(set(sk.get(name, [])) | set(int(h) for h in hs))[:kk]
+        return sk
 
-        def _rows(sk, seq, final):
-            a, b = sk.get("a", []), sk.get("b", [])
-            sa, sb = set(a), set(b)
-            u_all = sorted(sa | sb)
-            inboth = sa & sb
-            est_u = _est(u_all)
-            if not u_all:
-                jacc = 0.0
-            elif len(u_all) < kk:
-                jacc = len(inboth) / float(len(u_all))
-            else:
-                jacc = len(set(u_all[:kk]) & inboth) / float(kk)
-            return pd.DataFrame(
-                {
-                    "win_start": pd.array([win_start], dtype="int64"),
-                    **{d: [dv] for d, dv in zip(dims, dim_vals)},
-                    "est_a": pd.array([_est(a)], dtype="float64"),
-                    "est_b": pd.array([_est(b)], dtype="float64"),
-                    "est_union": pd.array([est_u], dtype="float64"),
-                    "est_jaccard": pd.array([_round6(jacc)], dtype="float64"),
-                    "est_intersect": pd.array(
-                        [_round6(jacc * est_u)], dtype="float64"
-                    ),
-                    "upd_seq": pd.array([seq], dtype="int64"),
-                    "is_final": pd.array([final], dtype="bool"),
-                }
-            )
+    def read(sk):
+        a, b = sk.get("a", []), sk.get("b", [])
+        sa, sb = set(a), set(b)
+        u_all = sorted(sa | sb)
+        inboth = sa & sb
+        est_u = _est(u_all)
+        if not u_all:
+            jacc = 0.0
+        elif len(u_all) < kk:
+            jacc = len(inboth) / float(len(u_all))
+        else:
+            jacc = len(set(u_all[:kk]) & inboth) / float(kk)
+        return {
+            "est_a": [_est(a)],
+            "est_b": [_est(b)],
+            "est_union": [est_u],
+            "est_jaccard": [_round6(jacc)],
+            "est_intersect": [_round6(jacc * est_u)],
+        }
 
-        if state.hasTimedOut:
-            sk, seq = json.loads(state.get[0]) if state.exists else ({}, 0)
-            state.remove()
-            yield _rows(sk, seq + 1, True)
-            return
-
-        sk, seq = json.loads(state.get[0]) if state.exists else ({}, 0)
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            for seg, name in ((seg_a, "a"), (seg_b, "b")):
-                hs = pdf.loc[pdf["_seg"] == seg, "_h"]
-                if len(hs):
-                    # min-k merge: sorted set union, truncated
-                    merged = sorted(
-                        set(sk.get(name, [])) | set(int(h) for h in hs)
-                    )[:kk]
-                    sk[name] = merged
-        seq += 1
-        state.update((json.dumps([sk, seq]),))
-        timeout_ms = (win_start + win_s + delay_sec) * 1000
-        cur_wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(timeout_ms, cur_wm + 1))
-        yield _rows(sk, seq, False)
-
-    return src.groupBy("win_start", *dims).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _window_sketch(
+        turns.filter(F.col(seg_col).isin([seg_a, seg_b])),
+        [
+            F.col(seg_col).cast("string").alias("_seg"),
+            _kmv_hash(F.col(key_col), seed).alias("_h"),
+        ],
+        "est_a double, est_b double, est_union double, est_jaccard double,"
+        " est_intersect double",
+        dict, merge, read, "kmv_json",
+        dim_cols, ts_col, window_seconds, watermark,
     )
 
 
@@ -558,95 +448,24 @@ def stream_window_hist(
     `operators.sketches.hist_quantiles` run in batch over the same
     rows grouped by the same derived window column.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators.sketches import hist_bin, py_hist_quantiles
 
-    delay_sec = parse_delay_seconds(watermark)
-    dims = list(dim_cols)
     qs = [int(q) for q in q_pcts]
-    ts_sec = F.col(ts_col).cast("long")
-    win = (ts_sec - F.pmod(ts_sec, F.lit(int(window_seconds)))).alias("win_start")
-    src = turns.withWatermark(ts_col, watermark).select(
-        win,
-        *[F.col(d).cast("string").alias(d) for d in dims],
-        hist_bin(F.col(value_col).cast("long")).alias("_bin"),
-        F.col(ts_col),
-    )
-    out_schema = StructType(
-        [StructField("win_start", LongType())]
-        + [StructField(d, StringType()) for d in dims]
-        + [
-            StructField("q_pct", LongType()),
-            StructField("est", LongType()),
-            StructField("n_rows", LongType()),
-            StructField("upd_seq", LongType()),
-            StructField("is_final", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("bins_json", StringType())])
-    win_s = int(window_seconds)
 
-    def fn(key_tuple, pdf_iter, state):
-        win_start = int(key_tuple[0])
-        dim_vals = list(key_tuple[1:])
+    def read(bins):
+        reads = py_hist_quantiles({int(b): n for b, n in bins.items()}, qs)
+        return {
+            "q_pct": [r[0] for r in reads],
+            "est": [r[1] for r in reads],
+            "n_rows": [r[2] for r in reads],
+        }
 
-        def _rows(counters, seq, final):
-            reads = py_hist_quantiles(counters, qs)
-            return pd.DataFrame(
-                {
-                    "win_start": pd.array(
-                        [win_start] * len(reads), dtype="int64"
-                    ),
-                    **{d: [dv] * len(reads) for d, dv in zip(dims, dim_vals)},
-                    "q_pct": pd.array([r[0] for r in reads], dtype="int64"),
-                    "est": pd.array([r[1] for r in reads], dtype="int64"),
-                    "n_rows": pd.array([r[2] for r in reads], dtype="int64"),
-                    "upd_seq": pd.array([seq] * len(reads), dtype="int64"),
-                    "is_final": pd.array([final] * len(reads), dtype="bool"),
-                }
-            )
-
-        if state.hasTimedOut:
-            counters, seq = (
-                json.loads(state.get[0]) if state.exists else ({}, 0)
-            )
-            counters = {int(k): v for k, v in counters.items()}
-            state.remove()
-            yield _rows(counters, seq + 1, True)
-            return
-
-        counters, seq = json.loads(state.get[0]) if state.exists else ({}, 0)
-        counters = {int(k): v for k, v in counters.items()}
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            # histogram merge = integer vector addition of per-batch
-            # partial bin counts — exact in any arrival order
-            part = pdf.groupby("_bin").size()
-            for b, n in part.items():
-                counters[int(b)] = counters.get(int(b), 0) + int(n)
-        seq += 1
-        state.update((json.dumps([{str(k): v for k, v in counters.items()}, seq]),))
-        timeout_ms = (win_start + win_s + delay_sec) * 1000
-        cur_wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(timeout_ms, cur_wm + 1))
-        yield _rows(counters, seq, False)
-
-    return src.groupBy("win_start", *dims).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _window_sketch(
+        turns,
+        [hist_bin(F.col(value_col).cast("long")).alias("_bin")],
+        "q_pct long, est long, n_rows long",
+        dict, _add_bins, read, "bins_json",
+        dim_cols, ts_col, window_seconds, watermark,
     )
 
 
@@ -687,22 +506,8 @@ def stream_window_weighted_sample(
     doubles, and json state round-trips floats exactly (shortest-repr
     decoding), so no re-derivation ever happens Python-side.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     if k < 1:
         raise ValueError("k must be >= 1")
-    delay_sec = parse_delay_seconds(watermark)
-    dims = list(dim_cols)
     sid = F.concat_ws(":", *[F.col(c).cast("string") for c in id_cols])
     w = (
         F.greatest(F.length("text").cast("long"), F.lit(1))
@@ -714,88 +519,32 @@ def stream_window_weighted_sample(
     ).cast("long")
     u = (h + F.lit(1)).cast("double") / F.lit(float(1 << 60))
     skey = -F.log(u) / w.cast("double")
-    ts_sec = F.col(ts_col).cast("long")
-    win = (ts_sec - F.pmod(ts_sec, F.lit(int(window_seconds)))).alias("win_start")
-    src = turns.withWatermark(ts_col, watermark).select(
-        win,
-        *[F.col(d).cast("string").alias(d) for d in dims],
-        sid.alias("_id"),
-        w.alias("_w"),
-        skey.alias("_skey"),
-        F.col(ts_col),
-    )
-    out_schema = StructType(
-        [StructField("win_start", LongType())]
-        + [StructField(d, StringType()) for d in dims]
-        + [
-            StructField("rank", IntegerType()),
-            StructField("sample_id", StringType()),
-            StructField("weight", LongType()),
-            StructField("sample_key", DoubleType()),
-            StructField("upd_seq", LongType()),
-            StructField("is_final", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("reservoir_json", StringType())])
-    win_s = int(window_seconds)
     kk = int(k)
 
-    def fn(key_tuple, pdf_iter, state):
-        win_start = int(key_tuple[0])
-        dim_vals = list(key_tuple[1:])
-
-        def _rows(res, seq, final):
-            n = len(res)
-            return pd.DataFrame(
-                {
-                    "win_start": pd.array([win_start] * n, dtype="int64"),
-                    **{d: [dv] * n for d, dv in zip(dims, dim_vals)},
-                    "rank": pd.array(range(1, n + 1), dtype="int32"),
-                    "sample_id": [e[1] for e in res],
-                    "weight": pd.array([e[2] for e in res], dtype="int64"),
-                    "sample_key": pd.array(
-                        [_round6(e[0]) for e in res], dtype="float64"
-                    ),
-                    "upd_seq": pd.array([seq] * n, dtype="int64"),
-                    "is_final": pd.array([final] * n, dtype="bool"),
-                }
-            )
-
-        if state.hasTimedOut:
-            res, seq = json.loads(state.get[0]) if state.exists else ([], 0)
-            state.remove()
-            yield _rows(res, seq + 1, True)
-            return
-
-        res, seq = json.loads(state.get[0]) if state.exists else ([], 0)
-        entries = [tuple(e) for e in res]
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            entries.extend(
-                zip(
-                    (float(x) for x in pdf["_skey"]),
-                    (str(x) for x in pdf["_id"]),
-                    (int(x) for x in pdf["_w"]),
-                )
-            )
+    def merge(res, pdf):
+        res = res + [
+            [float(x), str(i), int(wt)]
+            for x, i, wt in zip(pdf["_skey"], pdf["_id"], pdf["_w"])
+        ]
         # min-k merge: k smallest (key, id) of carried ∪ batch — the
         # same total order the batch TakeOrdered uses on these doubles
-        entries.sort(key=lambda e: (e[0], e[1]))
-        entries = entries[:kk]
-        seq += 1
-        state.update((json.dumps([[list(e) for e in entries], seq]),))
-        timeout_ms = (win_start + win_s + delay_sec) * 1000
-        cur_wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(timeout_ms, cur_wm + 1))
-        yield _rows(entries, seq, False)
+        res.sort(key=lambda e: (e[0], e[1]))
+        return res[:kk]
 
-    return src.groupBy("win_start", *dims).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    def read(res):
+        return {
+            "rank": list(range(1, len(res) + 1)),
+            "sample_id": [e[1] for e in res],
+            "weight": [e[2] for e in res],
+            "sample_key": [_round6(e[0]) for e in res],
+        }
+
+    return _window_sketch(
+        turns,
+        [sid.alias("_id"), w.alias("_w"), skey.alias("_skey")],
+        "rank int, sample_id string, weight long, sample_key double",
+        list, merge, read, "reservoir_json",
+        dim_cols, ts_col, window_seconds, watermark,
     )
 
 
@@ -827,96 +576,20 @@ def stream_drift_psi(
     upd_seq, is_final`` per touching micro-batch (changelog; keep the
     max upd_seq per slot, or filter is_final for closed windows only).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators.sketches import hist_bin, py_drift_metrics
 
     ref = {int(k): int(v) for k, v in ref_bins.items()}
-    delay_sec = parse_delay_seconds(watermark)
-    dims = list(dim_cols)
-    ts_sec = F.col(ts_col).cast("long")
-    win = (ts_sec - F.pmod(ts_sec, F.lit(int(window_seconds)))).alias("win_start")
-    src = turns.withWatermark(ts_col, watermark).select(
-        win,
-        *[F.col(d).cast("string").alias(d) for d in dims],
-        hist_bin(F.col(value_col).cast("long")).alias("_bin"),
-        F.col(ts_col),
-    )
-    out_schema = StructType(
-        [StructField("win_start", LongType())]
-        + [StructField(d, StringType()) for d in dims]
-        + [
-            StructField("ref_n", LongType()),
-            StructField("cur_n", LongType()),
-            StructField("n_bins", LongType()),
-            StructField("psi", DoubleType()),
-            StructField("ks", DoubleType()),
-            StructField("upd_seq", LongType()),
-            StructField("is_final", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("bins_json", StringType())])
-    win_s = int(window_seconds)
 
-    def fn(key_tuple, pdf_iter, state):
-        win_start = int(key_tuple[0])
-        dim_vals = list(key_tuple[1:])
+    def read(bins):
+        rn, cn, nb, psi, ks = py_drift_metrics(ref, {int(b): n for b, n in bins.items()})
+        return {"ref_n": [rn], "cur_n": [cn], "n_bins": [nb], "psi": [psi], "ks": [ks]}
 
-        def _row(counters, seq, final):
-            rn, cn, nb, psi, ks = py_drift_metrics(ref, counters)
-            return pd.DataFrame(
-                {
-                    "win_start": pd.array([win_start], dtype="int64"),
-                    **{d: [dv] for d, dv in zip(dims, dim_vals)},
-                    "ref_n": pd.array([rn], dtype="int64"),
-                    "cur_n": pd.array([cn], dtype="int64"),
-                    "n_bins": pd.array([nb], dtype="int64"),
-                    "psi": pd.array([psi], dtype="float64"),
-                    "ks": pd.array([ks], dtype="float64"),
-                    "upd_seq": pd.array([seq], dtype="int64"),
-                    "is_final": pd.array([final], dtype="bool"),
-                }
-            )
-
-        if state.hasTimedOut:
-            counters, seq = (
-                json.loads(state.get[0]) if state.exists else ({}, 0)
-            )
-            counters = {int(k): v for k, v in counters.items()}
-            state.remove()
-            yield _row(counters, seq + 1, True)
-            return
-
-        counters, seq = json.loads(state.get[0]) if state.exists else ({}, 0)
-        counters = {int(k): v for k, v in counters.items()}
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            part = pdf.groupby("_bin").size()
-            for b, n in part.items():
-                counters[int(b)] = counters.get(int(b), 0) + int(n)
-        seq += 1
-        state.update((json.dumps([{str(k): v for k, v in counters.items()}, seq]),))
-        timeout_ms = (win_start + win_s + delay_sec) * 1000
-        cur_wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(timeout_ms, cur_wm + 1))
-        yield _row(counters, seq, False)
-
-    return src.groupBy("win_start", *dims).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _window_sketch(
+        turns,
+        [hist_bin(F.col(value_col).cast("long")).alias("_bin")],
+        "ref_n long, cur_n long, n_bins long, psi double, ks double",
+        dict, _add_bins, read, "bins_json",
+        dim_cols, ts_col, window_seconds, watermark,
     )
 
 

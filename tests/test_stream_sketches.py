@@ -10,13 +10,21 @@ converges to the batch estimate exactly.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pyspark.sql.functions as F
 import pytest
 
 from osprey_spark.operators.sketches import hll_distinct
 from osprey_spark.streaming.sketches import (
     parse_delay_seconds,
+    stream_drift_psi,
+    stream_window_cms,
+    stream_window_hist,
     stream_window_hll,
+    stream_window_kmv,
+    stream_window_weighted_sample,
 )
 
 
@@ -92,59 +100,6 @@ def test_stream_window_hll_matches_batch(spark, tmp_path):
         assert r.hll_estimate == est, (k, r.hll_estimate, est)
         # sketch sanity: within the coarse error of m=256 registers
         assert abs(r.hll_estimate - n_exact) / max(n_exact, 1) < 0.35
-
-
-def test_stream_window_hll_evicts_on_watermark(spark, tmp_path):
-    """A much-later event pushes the watermark past window_end +
-    delay: the old slots emit is_final=true and their state is gone
-    (a third, later-still batch does not re-emit them)."""
-    df = _df(spark)
-    src = str(tmp_path / "turns")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    df.coalesce(1).write.parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(
-            "conv_id string, turn_idx int, role string, text string, ts timestamp"
-        ).parquet(src)
-        q = (
-            stream_window_hll(stream, window_seconds=3600, watermark="10 minutes")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out).collect()
-
-    run()
-    late = spark.createDataFrame(
-        [("zz", 999, "user", "late", "2024-01-01 14:00:00")],
-        "conv_id string, turn_idx int, role string, text string, ts_str string",
-    ).select("conv_id", "turn_idx", "role", "text", F.to_timestamp("ts_str").alias("ts"))
-    late.coalesce(1).write.mode("append").parquet(src)
-    rows2 = run()
-    late_win = (
-        late.select((F.col("ts").cast("long") - F.pmod(F.col("ts").cast("long"), F.lit(3600))).alias("w"))
-        .collect()[0]
-        .w
-    )
-    finals = [r for r in rows2 if r.is_final and r.win_start < late_win]
-    # both original windows x roles closed out
-    assert len({(r.win_start, r.role) for r in finals}) == 4
-    # closing rows carry the converged estimate (same as the last
-    # open-slot update for that key)
-    latest_open = {}
-    for r in rows2:
-        if not r.is_final:
-            k = (r.win_start, r.role)
-            if k not in latest_open or r.upd_seq > latest_open[k].upd_seq:
-                latest_open[k] = r
-    for r in finals:
-        assert r.hll_estimate == latest_open[(r.win_start, r.role)].hll_estimate
 
 
 def test_stream_windowed_topn_matches_batch(spark, tmp_path):
@@ -493,75 +448,181 @@ def test_stream_window_kmv_matches_batch(spark, tmp_path):
     ), "k too large — estimator branch never exercised"
 
 
-def test_stream_window_hist_state_survives_restart(spark, tmp_path):
-    """North rule: resumable from checkpoint. Bin counts persisted by
-    the first run must merge with post-restart arrivals — the final
-    per-slot estimate equals batch over ALL rows."""
-    from osprey_spark.operators.sketches import hist_quantiles
-    from osprey_spark.streaming.sketches import stream_window_hist
+_LIFECYCLE_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, v int, ts timestamp"
+)
 
-    in_dir = str(tmp_path / "in_hist")
-    out_dir = str(tmp_path / "out_hist")
-    ckpt = str(tmp_path / "ckpt_hist")
-    schema = "conv_id string, v int, ts timestamp"
+# each windowed sketch op over a tiny no-dim stream (10-minute watermark,
+# 1-hour windows)
+_WINDOW_SKETCHES = {
+    "hll": lambda s: stream_window_hll(
+        s, dim_cols=(), window_seconds=3600, watermark="10 minutes"
+    ),
+    "cms": lambda s: stream_window_cms(
+        s, watch_keys=("c0", "c1", "c2"), window_seconds=3600, watermark="10 minutes"
+    ),
+    "kmv": lambda s: stream_window_kmv(
+        s, "conv_id", "role", "user", "assistant", window_seconds=3600,
+        watermark="10 minutes", k=2,
+    ),
+    "hist": lambda s: stream_window_hist(
+        s, "v", window_seconds=3600, watermark="10 minutes", q_pcts=(50, 99)
+    ),
+    "weighted_sample": lambda s: stream_window_weighted_sample(
+        s, k=3, window_seconds=3600, watermark="10 minutes"
+    ),
+    "drift_psi": lambda s: stream_drift_psi(
+        s, "v", ref_bins={8: 2, 20: 1}, window_seconds=3600, watermark="10 minutes"
+    ),
+}
 
-    def write(rows):
-        (
-            spark.createDataFrame(rows, "conv_id string, v int, ts_str string")
-            .select("conv_id", "v", F.to_timestamp("ts_str").alias("ts"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(in_dir)
-        )
 
-    def run():
-        stream = spark.readStream.schema(schema).parquet(in_dir)
+def _lifecycle_rows(first_idx, *hhmm_v):
+    return [
+        (f"c{(first_idx + i) % 5}", first_idx + i, ("user", "assistant")[i % 2],
+         "x" * (1 + (first_idx + i) % 7), v, f"2024-01-01 {t}:00")
+        for i, (t, v) in enumerate(hhmm_v)
+    ]
+
+
+def _reads(rows):
+    """Changelog rows -> {(win_start, upd_seq, is_final): sorted reads}."""
+    out = {}
+    for r in rows:
+        d = r.asDict()
+        k = (d.pop("win_start"), d.pop("upd_seq"), d.pop("is_final"))
+        out.setdefault(k, []).append(tuple(d.values()))
+    return {k: sorted(v, key=repr) for k, v in out.items()}
+
+
+@pytest.fixture()
+def one_state_partition(spark):
+    # a micro-batch of this tiny stateful stream takes ~1.6 s on one
+    # state partition, ~2.3 s on the suite's default four
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+@pytest.mark.parametrize("op", list(_WINDOW_SKETCHES))
+def test_window_sketch_lifecycle(spark, tmp_path, one_state_partition, op):
+    """One checkpoint, four runs: (1) a restart mid-window — the
+    restored sketch merges the new rows, reading what one uninterrupted
+    run reads; (2) a later row pushes the watermark past both earlier
+    slots — each emits exactly one is_final read, equal to its last
+    open read, and evicts; (3) a later-still row — no closed slot is
+    emitted again."""
+    import pandas as pd
+
+    def run(name, rows):
+        # pandas writes the input file in ~10 ms; a Spark write job
+        # takes ~1 s, five times per case
+        pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "v", "ts"])
+        pdf = pdf.astype({"turn_idx": "int32", "v": "int32"})
+        pdf["ts"] = pd.to_datetime(pdf["ts"]).dt.tz_localize("UTC")
+        in_dir = tmp_path / f"in_{name}"
+        in_dir.mkdir(exist_ok=True)
+        pdf.to_parquet(in_dir / f"part-{len(list(in_dir.iterdir()))}.parquet",
+                       index=False, coerce_timestamps="us")
+        got = []
         q = (
-            stream_window_hist(
-                stream, "v", window_seconds=3600, watermark="10 minutes",
-                q_pcts=(50, 99),
+            _WINDOW_SKETCHES[op](
+                spark.readStream.schema(_LIFECYCLE_SCHEMA).parquet(str(in_dir))
             )
             .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
+            .foreachBatch(lambda df, _id: got.extend(df.collect()))
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
+        return _reads(got)
 
-    rows1 = [(f"c{i}", 10 + i, f"2024-01-01 10:{i:02d}:00") for i in range(20)]
-    rows2 = [(f"d{i}", 500 + 7 * i, f"2024-01-01 10:{30 + i:02d}:00") for i in range(20)]
-    write(rows1)
-    run()
-    write(rows2)
-    run()  # restart on the same checkpoint
-    emitted = spark.read.parquet(out_dir).collect()
-    latest = {}
-    for r in emitted:
-        k = (r.win_start, r.q_pct)
-        if k not in latest or r.upd_seq > latest[k].upd_seq:
-            latest[k] = r
-    all_rows = spark.createDataFrame(
-        rows1 + rows2, "conv_id string, v int, ts_str string"
-    ).select(
-        "conv_id",
-        "v",
-        (
-            F.to_timestamp("ts_str").cast("long")
-            - F.pmod(F.to_timestamp("ts_str").cast("long"), F.lit(3600))
-        ).alias("win_start"),
+    rows_a = _lifecycle_rows(0, ("10:00", 5), ("10:05", 40), ("11:00", 300), ("11:05", 7))
+    # rows_a leave the watermark at 10:55, so rows_b are on time, and
+    # rows_b leave it at 11:05, short of the 10:00 slot's 11:10 close
+    rows_b = _lifecycle_rows(4, ("10:56", 12), ("10:58", 900), ("11:10", 60), ("11:15", 3))
+    slots = {1704103200, 1704106800}  # 10:00 and 11:00
+
+    run("s", rows_a)
+    restarted = run("s", rows_b)
+    once = run("ref", rows_a + rows_b)
+    assert {k[0] for k in restarted} == slots
+    last_open = {}
+    for w in slots:
+        assert restarted[(w, 2, False)] == once[(w, 1, False)], (op, w)
+        last_open[w] = restarted[(w, 2, False)]
+
+    late = run("s", _lifecycle_rows(8, ("14:00", 1)))
+    for w in slots:
+        emitted = [k for k in late if k[0] == w]
+        assert emitted == [(w, 3, True)], (op, w, emitted)
+        assert late[(w, 3, True)] == last_open[w], (op, w)
+
+    later = run("s", _lifecycle_rows(9, ("15:00", 1)))
+    assert later and not {k[0] for k in later} & slots, (op, sorted(later))
+
+
+# tests/fixtures/window_hist_ckpt: a checkpoint (``ckpt/``) written by
+# the per-op stream_window_hist that preceded the shared runner — state
+# ``bins_json`` = json [{"<bin>": count}, upd_seq] per (win_start, role)
+# — with dim_cols=("role",), q_pcts=(50, 99), a 10-minute watermark and
+# 4 shuffle partitions over one batch (``in/``, hour 10: user v=10, 300,
+# 7; assistant v=40). Its source log names the input as
+# file:///fixture/in/...; the test points that at its own copy.
+LEGACY_HIST_CKPT = os.path.join(
+    os.path.dirname(__file__), "fixtures", "window_hist_ckpt"
+)
+
+
+def test_legacy_window_hist_checkpoint_resumes_exactly(spark, tmp_path):
+    """Upgrade safety: the per-op hist checkpoint resumes on the shared
+    runner — its string-keyed bins merge with new rows, exact counts."""
+    import json
+
+    shutil.copytree(LEGACY_HIST_CKPT, tmp_path, dirs_exist_ok=True)
+    log = tmp_path / "ckpt" / "sources" / "0" / "0"
+    log.write_text(log.read_text().replace("file:///fixture/", f"file://{tmp_path}/"))
+    # the logged file keeps its logged mtime, so the source never
+    # mistakes it for a new file
+    entry = json.loads(log.read_text().splitlines()[1])
+    seen = entry["path"][len("file://"):]
+    os.utime(seen, (entry["timestamp"] / 1000, entry["timestamp"] / 1000))
+    schema = "conv_id string, role string, v int, ts timestamp"
+    (
+        spark.createDataFrame(
+            [("c5", "user", 1000, "2024-01-01 10:20:00"),
+             ("c6", "assistant", 41, "2024-01-01 10:21:00")],
+            "conv_id string, role string, v int, ts_str string",
+        )
+        .select("conv_id", "role", "v", F.to_timestamp("ts_str").alias("ts"))
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(str(tmp_path / "in"))
     )
-    expect = {
-        (r.win_start, r.q_pct): (r.est, r.n_rows)
-        for r in hist_quantiles(all_rows, "v", ["win_start"], (50, 99)).collect()
+    got = []
+    q = (
+        stream_window_hist(
+            spark.readStream.schema(schema).parquet(str(tmp_path / "in")),
+            "v", dim_cols=("role",), window_seconds=3600,
+            watermark="10 minutes", q_pcts=(50, 99),
+        )
+        .writeStream.outputMode("append")
+        .foreachBatch(lambda df, _id: got.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert {
+        (r.role, r.q_pct): (r.est, r.n_rows, r.upd_seq, r.is_final) for r in got
+    } == {
+        ("user", 50): (10, 4, 2, False),
+        ("user", 99): (896, 4, 2, False),
+        ("assistant", 50): (40, 2, 2, False),
+        ("assistant", 99): (40, 2, 2, False),
     }
-    assert set(latest) == set(expect)
-    for k, r in latest.items():
-        assert (r.est, r.n_rows) == expect[k], k
-    # the post-restart rows landed in the same window as the first
-    # batch: n_rows = 40 proves the restored state merged
-    assert all(v[1] == 40 for v in expect.values())
 
 
 def test_stream_drift_psi_matches_batch(spark, tmp_path):

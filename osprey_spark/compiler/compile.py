@@ -192,6 +192,16 @@ class CompilerContext:
         # reference batches label fetches by entity routing key,
         # ref: stdlib/udfs/labels.py:242-293)
         self.label_lookups: list[dict] = []
+        # Stateful calls (IncrementWindow, SequenceMatches, CacheGet*
+        # ...): mangled name → (family, spec), registered in call
+        # order by ``families.defer_state_op``
+        self.state_ops: dict[str, tuple[str, dict]] = {}
+        # registration-time pairing: IncrementWindow gates for
+        # GetWindowCount, CacheSet* statements for CacheGet*
+        self.window_increments: list[dict] = []
+        self.cache_sets: list[dict] = []
+        # required-JsonData miss indicators for ``__error_count``
+        self.error_indicators: list[Column] = []
         self.verdict_conditions: list[tuple[Column, str]] = []
         self.label_effects: list[dict] = []
         # AtprotoList-class effects → the 'atproto_list' custom
@@ -1238,11 +1248,12 @@ class CompiledRuleset:
         """Resolve one RateLimit on a BATCH frame. The token bucket's
         recurrence (consumption depends on prior ALLOW decisions) has
         no window-function form, so: project a NARROW (rid, key, sec,
-        order) relation, group it by a 1024-way hash bucket of the
-        key (the state ops' coalescing discipline — per-group Arrow
-        overhead amortizes across keys), fold each key's rows in
-        (sec, order) order inside one applyInPandas pass, and join
-        the boolean back by row id. Only 4 small columns ever cross
+        order) relation, group it by the key's hash bucket
+        (``bucket_column``: ``state_bucket_count()`` buckets, 32 per
+        core unless pinned — the state ops' coalescing discipline;
+        per-group Arrow overhead amortizes across keys), fold each
+        key's rows in (sec, order) order inside one applyInPandas
+        pass, and join the boolean back by row id. Only 4 small columns ever cross
         the Arrow boundary — the wide feature frame stays JVM-side.
         Streaming frames route through the fused state pass carrying
         [tokens_units, last_sec] per key."""
@@ -1735,12 +1746,9 @@ class CompiledRuleset:
             d.unpersist()
         self._cache_persists = []
 
-    def _hoisted_feature_order(
-        self, state_specs: dict[str, tuple[str, dict]]
-    ) -> list[tuple[str, Optional[Column]]]:
+    def _hoisted_feature_order(self) -> list[tuple[str, Optional[Column]]]:
         """Feature materialization order with STATE OPS HOISTED as
-        early as their dependencies allow. ``state_specs`` maps each
-        state op's mangled name to its (family, spec).
+        early as their dependencies allow.
 
         Why: the streaming state ops ship every column of their
         input frame through Arrow (python state fn) and back. In
@@ -1783,8 +1791,8 @@ class CompiledRuleset:
         for name, defn in entries:
             if defn is not None:
                 cols = [defn]
-            elif name in state_specs:
-                cols = spec_columns(*state_specs[name])
+            elif name in self.ctx.state_ops:
+                cols = spec_columns(*self.ctx.state_ops[name])
                 state_ops.append(name)
             else:
                 cols = [label_specs[name]["entity_col"]]
@@ -1894,7 +1902,7 @@ class CompiledRuleset:
         # failed-node counter: the JVM-computable subset is required
         # extraction misses (ref counts every raised UDF; our Err→NULL
         # collapse keeps values identical and this keeps the count)
-        indicators = getattr(self.ctx, "error_indicators", [])
+        indicators = self.ctx.error_indicators
         if indicators:
             err = sum(
                 (ind.cast("int") for ind in indicators[1:]),
@@ -1912,11 +1920,6 @@ class CompiledRuleset:
         # plan stays linear in ruleset size.
         from .families import FAMILIES, spec_columns, stable_node
 
-        state_specs = {
-            sp["name"]: (fam, sp)
-            for fam, f in FAMILIES.items()
-            for sp in getattr(self.ctx, f.lookups, [])
-        }
         # STATE-OP FUSION (streaming only): a maximal run of
         # consecutive state ops sharing one key expression resolves
         # through a single applyInPandasWithState — one exchange + one
@@ -1951,7 +1954,7 @@ class CompiledRuleset:
                 )
             state_passes.append(names)
 
-        order = self._hoisted_feature_order(state_specs)
+        order = self._hoisted_feature_order()
 
         def _dead_envelope(pos: int) -> tuple:
             # the envelope columns (the JSON ``data`` copy of the whole
@@ -1964,8 +1967,8 @@ class CompiledRuleset:
             for name, defn in order[pos:]:
                 if defn is not None:
                     later.append(defn)
-                elif name in state_specs:
-                    later += spec_columns(*state_specs[name])
+                elif name in self.ctx.state_ops:
+                    later += spec_columns(*self.ctx.state_ops[name])
                 else:
                     later.append(specs[name]["entity_col"])
             words = set(_re_mod.findall(r"\w+", " ".join(map(stable_node, later)).lower()))
@@ -2012,11 +2015,11 @@ class CompiledRuleset:
                 df = _flush(df, pos)
                 df = df.select("*", defn.alias(mangled))
                 continue
-            if mangled not in state_specs:
+            if mangled not in self.ctx.state_ops:
                 df = _flush(df, pos)
                 df = self._join_label(df, labels_df, specs[mangled])
                 continue
-            fam, sp = state_specs[mangled]
+            fam, sp = self.ctx.state_ops[mangled]
             if not streaming:
                 df = getattr(self, FAMILIES[fam].batch)(df, sp)
                 continue

@@ -1,12 +1,14 @@
 """The stateful rule families: one table row and one streaming fold each.
 
 Every stateful SML call (``IncrementWindow``, ``SequenceMatches``,
-``GetUniqueCount``, ``CacheGet*`` ...) registers a spec in a
-``CompilerContext`` list and a deferred feature; ``CompiledRuleset.apply``
-resolves it at plan time. ``FAMILIES`` is the only place that knows the
-families:
+``GetUniqueCount``, ``CacheGet*`` ...) registers through
+``defer_state_op``: it names the op, stores ``(family, spec)`` in the
+ordered ``CompilerContext.state_ops`` and appends a deferred feature;
+``CompiledRuleset.apply`` resolves it at plan time. ``FAMILIES`` is the
+only place that knows the families:
 
-- ``lookups`` — the ``CompilerContext`` attribute holding the specs;
+- ``prefix`` — the mangled-name prefix of the family's ops (``__wc_``
+  for the window counter: ops are named ``__wc_0``, ``__wc_1`` ...);
 - ``batch`` — the ``CompiledRuleset`` method resolving one spec on a
   batch frame (window functions, JVM-side);
 - ``inputs`` — the spec fields holding input Columns (dependency
@@ -44,9 +46,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .values import Value
+
 
 class Family(NamedTuple):
-    lookups: str
+    prefix: str
     batch: str
     inputs: tuple
     stream: Callable[[dict], "Stream"]
@@ -614,34 +618,48 @@ def _cache(sp: dict) -> Stream:
 
 
 FAMILIES: dict[str, Family] = {
-    "window": Family("window_lookups", "_join_window_count",
+    "window": Family("__wc_", "_join_window_count",
                      ("key_col", "incremented", "gate"), _window),
-    "seq": Family("seq_lookups", "_join_seq_match",
+    "seq": Family("__sq_", "_join_seq_match",
                   ("key_col", "symbol_col", "order_col"), _seq),
-    "wdistinct": Family("distinct_lookups", "_join_window_distinct",
+    "wdistinct": Family("__wd_", "_join_window_distinct",
                         ("key_col", "value_col", "gate"), _wdistinct),
-    "sess": Family("session_lookups", "_join_session_count", ("key_col",), _sess),
-    "last": Family("last_lookups", "_join_last_value",
+    "sess": Family("__sc_", "_join_session_count", ("key_col",), _sess),
+    "last": Family("__lv_", "_join_last_value",
                    ("key_col", "value_col", "order_col"), _last),
-    "wsum": Family("wsum_lookups", "_join_window_sum",
+    "wsum": Family("__ws_", "_join_window_sum",
                    ("key_col", "value_col", "gate"), _wsum),
-    "age": Family("age_lookups", "_join_key_age", ("key_col",), _age),
-    "rl": Family("ratelimit_lookups", "_join_rate_limit",
+    "age": Family("__ka_", "_join_key_age", ("key_col",), _age),
+    "rl": Family("__rl_", "_join_rate_limit",
                  ("key_col", "order_col"), _rl),
-    "unique": Family("unique_lookups", "_join_unique_count",
+    "unique": Family("__uc_", "_join_unique_count",
                      ("key_col", "value_col", "gate"), _unique),
-    "wminmax": Family("wminmax_lookups", "_join_window_minmax",
+    "wminmax": Family("__wm_", "_join_window_minmax",
                       ("key_col", "value_col", "gate"), _wminmax),
-    "seen": Family("seen_lookups", "_join_seen_before",
+    "seen": Family("__sb_", "_join_seen_before",
                    ("key_col", "value_col", "gate"), _seen),
-    "decay": Family("decay_lookups", "_join_decay_score",
+    "decay": Family("__dy_", "_join_decay_score",
                     ("key_col", "value_col", "gate"), _decay),
-    "tent": Family("tent_lookups", "_join_transition_entropy",
+    "tent": Family("__te_", "_join_transition_entropy",
                    ("key_col", "state_col", "order_col"), _tent),
-    "burst": Family("burst_lookups", "_join_burstiness", ("key_col",), _burst),
-    "cache": Family("cache_lookups", "_join_cache",
+    "burst": Family("__bs_", "_join_burstiness", ("key_col",), _burst),
+    "cache": Family("__cache_", "_join_cache",
                     ("key_col", "default_col", "gate", "sets"), _cache),
 }
+
+
+def defer_state_op(ctx, fam: str, dtype: str, **spec) -> Value:
+    """Register one stateful call: name it ``<prefix><n>`` (its index
+    among the family's ops), store ``(fam, spec)`` under that name in
+    ``ctx.state_ops``, append the deferred feature ``apply()``
+    resolves, and return the feature's ``Value``. ``spec`` is exactly
+    what ``op_identities`` digests, so a changed field starts that op's
+    checkpointed state empty."""
+    n = sum(1 for f, _ in ctx.state_ops.values() if f == fam)
+    name = f"{FAMILIES[fam].prefix}{n}"
+    ctx.state_ops[name] = (fam, {"name": name, **spec})
+    ctx.feature_exprs.append((name, None))
+    return Value(col=F.col(name), dtype=dtype)
 
 
 def spec_columns(fam: str, sp: dict) -> list[Column]:

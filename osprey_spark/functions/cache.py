@@ -27,39 +27,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..compiler import nullsafe
+from ..compiler.families import defer_state_op
 from ..compiler.values import Value
-from .registry import arg, const_arg, register
+from .registry import arg, register, when_all_gate, whole_seconds
 
 DAY = 86400.0
-
-
-def _gate(ctx, call, args):
-    from ..sml.nodes import ListLiteral
-    from .registry import raw_arg
-
-    when_all = raw_arg(ctx, call, args, "when_all")
-    if when_all is None:
-        return None
-    if not isinstance(when_all, ListLiteral):
-        raise ctx.error(f"{call.func} when_all= must be a list", call.span)
-    conds = [ctx.compile_expr(e) for e in when_all.items]
-    return nullsafe.strict_all(conds) if conds else None
 
 
 def _cache_set(ctx, call, args, family: str):
     key_v = arg(ctx, call, args, "key")
     value_v = arg(ctx, call, args, "value")
-    ttl = const_arg(ctx, call, args, "ttl_seconds", required=False, default=DAY)
-    if float(ttl) < 1.0:
-        raise ctx.error(
-            f"{call.func}: ttl_seconds must be >= 1 (event-time cache reads have "
-            f"whole-second resolution), got {ttl}",
-            call.span,
-        )
-    gate = _gate(ctx, call, args)
-    if not hasattr(ctx, "cache_sets"):
-        ctx.cache_sets = []
+    ttl = whole_seconds(ctx, call, args, "ttl_seconds", default=DAY)
+    gate = when_all_gate(ctx, call, args)
     ctx.cache_sets.append(
         {
             "family": family,
@@ -84,8 +63,8 @@ def _cache_get(ctx, call, args, family: str, default, out_dtype: str, cast: str)
     key_v = arg(ctx, call, args, "key")
     d = args.get("default")
     default_col = d.col if d is not None else F.lit(default)
-    gate = _gate(ctx, call, args)
-    sets = [s for s in getattr(ctx, "cache_sets", []) if s["family"] == family]
+    gate = when_all_gate(ctx, call, args)
+    sets = [s for s in ctx.cache_sets if s["family"] == family]
     if not sets:
         raise ctx.error(
             f"{call.func}: no preceding CacheSet{family} in this program "
@@ -93,21 +72,14 @@ def _cache_get(ctx, call, args, family: str, default, out_dtype: str, cast: str)
             "streaming state)",
             call.span,
         )
-    if not hasattr(ctx, "cache_lookups"):
-        ctx.cache_lookups = []
-    name = f"__cache_{len(ctx.cache_lookups)}"
-    ctx.cache_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "default_col": default_col,
-            "gate": gate,
-            "cast": cast,
-            "sets": list(sets),
-        }
+    return defer_state_op(
+        ctx, "cache", out_dtype,
+        key_col=key_v.col,
+        default_col=default_col,
+        gate=gate,
+        cast=cast,
+        sets=list(sets),
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype=out_dtype)
 
 
 @register("CacheSetStr")

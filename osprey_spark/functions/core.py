@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from ..compiler.values import Effect, Value
 from ..compiler import nullsafe
 from ..compiler.compile import annotation_dtype
-from .registry import arg, const_arg, raw_arg, register
+from ..compiler.families import defer_state_op
+from .registry import arg, const_arg, raw_arg, register, when_all_gate, whole_seconds
 
 _JSON_CAST = {"str": "string", "int": "long", "float": "double", "bool": "boolean"}
 
@@ -57,8 +58,6 @@ def json_data(ctx, call, args):
     dtype = annotation_dtype(ctx.current_annotation)
     raw, direct = _payload_col(ctx, path)
     if required:
-        if not hasattr(ctx, "error_indicators"):
-            ctx.error_indicators = []
         ctx.error_indicators.append(raw.isNull())
     if dtype.startswith("list:"):
         elem = _JSON_CAST.get(dtype.split(":")[1], "string")
@@ -253,31 +252,13 @@ def _window_count(ctx, call, args, increments: bool):
     key expression in this program (pairing rule as for CacheSet/Get);
     with no paired increment it falls back to counting every event
     (the increment-on-every-event pattern), documented divergence."""
-    from ..compiler import nullsafe
-    from ..sml.nodes import ListLiteral
-
     key_v = arg(ctx, call, args, "key")
-    window_s = const_arg(ctx, call, args, "window_seconds")
-    if float(window_s) < 1.0:
-        raise ctx.error(
-            f"{call.func}: window_seconds must be >= 1 (event-time windows have "
-            f"whole-second resolution), got {window_s}",
-            call.span,
-        )
+    window_s = whole_seconds(ctx, call, args, "window_seconds")
     const_arg(ctx, call, args, "max_ttl_seconds", required=False)
     # ref cache.py:166,198-201: counts saturate at max_events_cap
     cap = const_arg(ctx, call, args, "max_events_cap", required=False, default=10_000)
-    gate = None
-    when_all = raw_arg(ctx, call, args, "when_all")
-    if when_all is not None:
-        if not isinstance(when_all, ListLiteral):
-            raise ctx.error(f"{call.func} when_all= must be a list", call.span)
-        conds = [ctx.compile_expr(e) for e in when_all.items]
-        if conds:
-            gate = nullsafe.strict_all(conds)
+    gate = when_all_gate(ctx, call, args)
 
-    if not hasattr(ctx, "window_increments"):
-        ctx.window_increments = []
     if increments:
         ctx.window_increments.append({"key_repr": str(key_v.col), "gate": gate})
         inc_gates = [gate]
@@ -300,21 +281,14 @@ def _window_count(ctx, call, args, increments: bool):
     # plan time — batch frames get an event-time range window; a
     # STREAMING frame gets applyInPandasWithState (non-time window
     # functions are illegal on streams), same semantics either way
-    if not hasattr(ctx, "window_lookups"):
-        ctx.window_lookups = []
-    name = f"__wc_{len(ctx.window_lookups)}"
-    ctx.window_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "window_seconds": round(float(window_s)),
-            "cap": int(cap) if cap else 0,
-            "gate": gate,
-            "incremented": incremented,
-        }
+    return defer_state_op(
+        ctx, "window", "int",
+        key_col=key_v.col,
+        window_seconds=round(float(window_s)),
+        cap=int(cap) if cap else 0,
+        gate=gate,
+        incremented=incremented,
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="int")
 
 
 @register("IncrementWindow")
@@ -347,80 +321,31 @@ def get_window_distinct(ctx, call, args):
     values never register. Values compare as strings (the state
     round-trips through JSON).
     """
-    from ..compiler import nullsafe
-    from ..sml.nodes import ListLiteral
-
     key_v = arg(ctx, call, args, "key")
     value_v = arg(ctx, call, args, "value")
-    window_s = const_arg(ctx, call, args, "window_seconds")
-    if float(window_s) < 1.0:
-        raise ctx.error(
-            f"{call.func}: window_seconds must be >= 1 (event-time windows have "
-            f"whole-second resolution), got {window_s}",
-            call.span,
-        )
-    gate = None
-    when_all = raw_arg(ctx, call, args, "when_all")
-    if when_all is not None:
-        if not isinstance(when_all, ListLiteral):
-            raise ctx.error(f"{call.func} when_all= must be a list", call.span)
-        conds = [ctx.compile_expr(e) for e in when_all.items]
-        if conds:
-            gate = nullsafe.strict_all(conds)
-
-    if not hasattr(ctx, "distinct_lookups"):
-        ctx.distinct_lookups = []
-    name = f"__wd_{len(ctx.distinct_lookups)}"
-    ctx.distinct_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "value_col": value_v.col.cast("string"),
-            "window_seconds": round(float(window_s)),
-            "gate": gate,
-        }
+    window_s = whole_seconds(ctx, call, args, "window_seconds")
+    return defer_state_op(
+        ctx, "wdistinct", "int",
+        key_col=key_v.col,
+        value_col=value_v.col.cast("string"),
+        window_seconds=round(float(window_s)),
+        gate=when_all_gate(ctx, call, args),
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="int")
 
 
 def _window_extreme(ctx, call, args, mode: int):
     """Shared registration for GetWindowMax / GetWindowMin."""
-    from ..compiler import nullsafe
-    from ..sml.nodes import ListLiteral
-
     key_v = arg(ctx, call, args, "key")
     value_v = arg(ctx, call, args, "value")
-    window_s = const_arg(ctx, call, args, "window_seconds")
-    if float(window_s) < 1.0:
-        raise ctx.error(
-            f"{call.func}: window_seconds must be >= 1 (event-time windows have "
-            f"whole-second resolution), got {window_s}",
-            call.span,
-        )
-    gate = None
-    when_all = raw_arg(ctx, call, args, "when_all")
-    if when_all is not None:
-        if not isinstance(when_all, ListLiteral):
-            raise ctx.error(f"{call.func} when_all= must be a list", call.span)
-        conds = [ctx.compile_expr(e) for e in when_all.items]
-        if conds:
-            gate = nullsafe.strict_all(conds)
-    if not hasattr(ctx, "wminmax_lookups"):
-        ctx.wminmax_lookups = []
-    name = f"__wm_{len(ctx.wminmax_lookups)}"
-    ctx.wminmax_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "value_col": value_v.col.cast("long"),
-            "window_seconds": round(float(window_s)),
-            "mode": mode,
-            "gate": gate,
-        }
+    window_s = whole_seconds(ctx, call, args, "window_seconds")
+    return defer_state_op(
+        ctx, "wminmax", "int",
+        key_col=key_v.col,
+        value_col=value_v.col.cast("long"),
+        window_seconds=round(float(window_s)),
+        mode=mode,
+        gate=when_all_gate(ctx, call, args),
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="int")
 
 
 @register("GetWindowMax")
@@ -480,32 +405,14 @@ def seen_before(ctx, call, args):
     NULL values never register and always read False. ``when_all``
     gates registration; every event reads.
     """
-    from ..compiler import nullsafe
-    from ..sml.nodes import ListLiteral
-
     key_v = arg(ctx, call, args, "key")
     value_v = arg(ctx, call, args, "value")
-    gate = None
-    when_all = raw_arg(ctx, call, args, "when_all")
-    if when_all is not None:
-        if not isinstance(when_all, ListLiteral):
-            raise ctx.error(f"{call.func} when_all= must be a list", call.span)
-        conds = [ctx.compile_expr(e) for e in when_all.items]
-        if conds:
-            gate = nullsafe.strict_all(conds)
-    if not hasattr(ctx, "seen_lookups"):
-        ctx.seen_lookups = []
-    name = f"__sb_{len(ctx.seen_lookups)}"
-    ctx.seen_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "value_col": value_v.col.cast("string"),
-            "gate": gate,
-        }
+    return defer_state_op(
+        ctx, "seen", "bool",
+        key_col=key_v.col,
+        value_col=value_v.col.cast("string"),
+        gate=when_all_gate(ctx, call, args),
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="bool")
 
 
 @register("GetUniqueCount")
@@ -534,9 +441,6 @@ def get_unique_count(ctx, call, args):
     (every event reads); NULL values never register; values compare
     as strings.
     """
-    from ..compiler import nullsafe
-    from ..sml.nodes import ListLiteral
-
     key_v = arg(ctx, call, args, "key")
     value_v = arg(ctx, call, args, "value")
     cap = const_arg(ctx, call, args, "cap", required=False, default=0)
@@ -546,29 +450,13 @@ def get_unique_count(ctx, call, args):
             f"(0 = unbounded), got {cap}",
             call.span,
         )
-    gate = None
-    when_all = raw_arg(ctx, call, args, "when_all")
-    if when_all is not None:
-        if not isinstance(when_all, ListLiteral):
-            raise ctx.error(f"{call.func} when_all= must be a list", call.span)
-        conds = [ctx.compile_expr(e) for e in when_all.items]
-        if conds:
-            gate = nullsafe.strict_all(conds)
-
-    if not hasattr(ctx, "unique_lookups"):
-        ctx.unique_lookups = []
-    name = f"__uc_{len(ctx.unique_lookups)}"
-    ctx.unique_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "value_col": value_v.col.cast("string"),
-            "cap": int(cap),
-            "gate": gate,
-        }
+    return defer_state_op(
+        ctx, "unique", "int",
+        key_col=key_v.col,
+        value_col=value_v.col.cast("string"),
+        cap=int(cap),
+        gate=when_all_gate(ctx, call, args),
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="int")
 
 
 @register("GetSessionCount")
@@ -594,26 +482,10 @@ def get_session_count(ctx, call, args):
     session that gated-off events neither extend nor break).
     """
     key_v = arg(ctx, call, args, "key")
-    gap_s = const_arg(ctx, call, args, "gap_seconds")
-    if float(gap_s) < 1.0:
-        raise ctx.error(
-            f"{call.func}: gap_seconds must be >= 1 (event-time sessions have "
-            f"whole-second resolution), got {gap_s}",
-            call.span,
-        )
-
-    if not hasattr(ctx, "session_lookups"):
-        ctx.session_lookups = []
-    name = f"__sc_{len(ctx.session_lookups)}"
-    ctx.session_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "gap_seconds": round(float(gap_s)),
-        }
+    gap_s = whole_seconds(ctx, call, args, "gap_seconds")
+    return defer_state_op(
+        ctx, "sess", "int", key_col=key_v.col, gap_seconds=round(float(gap_s))
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="int")
 
 
 @register("GetWindowSum")
@@ -639,31 +511,20 @@ def get_window_sum(ctx, call, args):
     key_v = arg(ctx, call, args, "key")
     value_v = arg(ctx, call, args, "value")
     gate_v = arg(ctx, call, args, "gate", required=False)
-    win_s = const_arg(ctx, call, args, "window_seconds")
-    if float(win_s) < 1.0:
-        raise ctx.error(
-            f"{call.func}: window_seconds must be >= 1, got {win_s}", call.span
-        )
+    win_s = whole_seconds(ctx, call, args, "window_seconds")
     if value_v.dtype not in ("int", None, "any"):
         raise ctx.error(
             f"{call.func}: value must be an integer feature (float windowed "
             f"sums are partition-order dependent), got {value_v.dtype}",
             call.span,
         )
-    if not hasattr(ctx, "wsum_lookups"):
-        ctx.wsum_lookups = []
-    name = f"__ws_{len(ctx.wsum_lookups)}"
-    ctx.wsum_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "value_col": F.coalesce(value_v.col.cast("long"), F.lit(0)),
-            "gate": gate_v.col if gate_v is not None else None,
-            "window_seconds": round(float(win_s)),
-        }
+    return defer_state_op(
+        ctx, "wsum", "int",
+        key_col=key_v.col,
+        value_col=F.coalesce(value_v.col.cast("long"), F.lit(0)),
+        gate=gate_v.col if gate_v is not None else None,
+        window_seconds=round(float(win_s)),
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="int")
 
 
 @register("GetDecayScore")
@@ -696,36 +557,24 @@ def get_decay_score(ctx, call, args):
     key_v = arg(ctx, call, args, "key")
     value_v = arg(ctx, call, args, "value", required=False)
     gate_v = arg(ctx, call, args, "gate", required=False)
-    half_s = const_arg(ctx, call, args, "halflife_seconds")
-    if float(half_s) < 1.0:
-        raise ctx.error(
-            f"{call.func}: halflife_seconds must be >= 1, got {half_s}",
-            call.span,
-        )
+    half_s = whole_seconds(ctx, call, args, "halflife_seconds")
     if value_v is not None and value_v.dtype not in ("int", None, "any"):
         raise ctx.error(
             f"{call.func}: value must be an integer feature (float decayed "
             f"sums are partition-order dependent), got {value_v.dtype}",
             call.span,
         )
-    if not hasattr(ctx, "decay_lookups"):
-        ctx.decay_lookups = []
-    name = f"__dy_{len(ctx.decay_lookups)}"
-    ctx.decay_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "value_col": (
-                F.coalesce(value_v.col.cast("long"), F.lit(0))
-                if value_v is not None
-                else F.lit(1).cast("long")
-            ),
-            "gate": gate_v.col if gate_v is not None else None,
-            "halflife_s": round(float(half_s)),
-        }
+    return defer_state_op(
+        ctx, "decay", "int",
+        key_col=key_v.col,
+        value_col=(
+            F.coalesce(value_v.col.cast("long"), F.lit(0))
+            if value_v is not None
+            else F.lit(1).cast("long")
+        ),
+        gate=gate_v.col if gate_v is not None else None,
+        halflife_s=round(float(half_s)),
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="int")
 
 
 @register("RateLimit")
@@ -769,21 +618,14 @@ def rate_limit(ctx, call, args):
                 f"fractional rates would break the integer-exact bucket",
                 call.span,
             )
-    if not hasattr(ctx, "ratelimit_lookups"):
-        ctx.ratelimit_lookups = []
-    name = f"__rl_{len(ctx.ratelimit_lookups)}"
-    ctx.ratelimit_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "order_col": order_v.col if order_v is not None else None,
-            "rate": int(limit),  # units (1/per token) refilled per second
-            "cap": int(burst) * int(per_s),
-            "cost": int(cost) * int(per_s),
-        }
+    return defer_state_op(
+        ctx, "rl", "bool",
+        key_col=key_v.col,
+        order_col=order_v.col if order_v is not None else None,
+        rate=int(limit),  # units (1/per token) refilled per second
+        cap=int(burst) * int(per_s),
+        cost=int(cost) * int(per_s),
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="bool")
 
 
 @register("GetKeyAge")
@@ -807,12 +649,7 @@ def get_key_age(ctx, call, args):
     carried floor for everything after it.
     """
     key_v = arg(ctx, call, args, "key")
-    if not hasattr(ctx, "age_lookups"):
-        ctx.age_lookups = []
-    name = f"__ka_{len(ctx.age_lookups)}"
-    ctx.age_lookups.append({"name": name, "key_col": key_v.col})
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="int")
+    return defer_state_op(ctx, "age", "int", key_col=key_v.col)
 
 
 @register("GetBurstiness")
@@ -835,12 +672,7 @@ def get_burstiness(ctx, call, args):
     batch equivalence holds for watermark-respecting streams.
     """
     key_v = arg(ctx, call, args, "key")
-    if not hasattr(ctx, "burst_lookups"):
-        ctx.burst_lookups = []
-    name = f"__bs_{len(ctx.burst_lookups)}"
-    ctx.burst_lookups.append({"name": name, "key_col": key_v.col})
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="float")
+    return defer_state_op(ctx, "burst", "float", key_col=key_v.col)
 
 
 @register("GetLastValue")
@@ -867,19 +699,12 @@ def get_last_value(ctx, call, args):
     key_v = arg(ctx, call, args, "key")
     value_v = arg(ctx, call, args, "value")
     order_v = arg(ctx, call, args, "order", required=False)
-    if not hasattr(ctx, "last_lookups"):
-        ctx.last_lookups = []
-    name = f"__lv_{len(ctx.last_lookups)}"
-    ctx.last_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "value_col": value_v.col.cast("string"),
-            "order_col": order_v.col if order_v is not None else None,
-        }
+    return defer_state_op(
+        ctx, "last", "str",
+        key_col=key_v.col,
+        value_col=value_v.col.cast("string"),
+        order_col=order_v.col if order_v is not None else None,
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="str")
 
 
 @register("SequenceMatches")
@@ -929,21 +754,14 @@ def sequence_matches(ctx, call, args):
         )
     sym = F.coalesce(F.substring(sym_v.col.cast("string"), 1, 1), F.lit("?"))
     sym = F.when(sym == "", F.lit("?")).otherwise(sym)
-    if not hasattr(ctx, "seq_lookups"):
-        ctx.seq_lookups = []
-    name = f"__sq_{len(ctx.seq_lookups)}"
-    ctx.seq_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "symbol_col": sym,
-            "order_col": order_v.col if order_v is not None else None,
-            "pattern": str(pattern),
-            "last_k": k,
-        }
+    return defer_state_op(
+        ctx, "seq", "bool",
+        key_col=key_v.col,
+        symbol_col=sym,
+        order_col=order_v.col if order_v is not None else None,
+        pattern=str(pattern),
+        last_k=k,
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="bool")
 
 
 @register("GetSnowflakeBucket")
@@ -1185,16 +1003,9 @@ def get_transition_entropy(ctx, call, args):
     key_v = arg(ctx, call, args, "key")
     state_v = arg(ctx, call, args, "state")
     order_v = arg(ctx, call, args, "order", required=False)
-    if not hasattr(ctx, "tent_lookups"):
-        ctx.tent_lookups = []
-    name = f"__te_{len(ctx.tent_lookups)}"
-    ctx.tent_lookups.append(
-        {
-            "name": name,
-            "key_col": key_v.col,
-            "state_col": F.coalesce(state_v.col.cast("string"), F.lit("\x00")),
-            "order_col": order_v.col if order_v is not None else None,
-        }
+    return defer_state_op(
+        ctx, "tent", "float",
+        key_col=key_v.col,
+        state_col=F.coalesce(state_v.col.cast("string"), F.lit("\x00")),
+        order_col=order_v.col if order_v is not None else None,
     )
-    ctx.feature_exprs.append((name, None))
-    return Value(col=F.col(name), dtype="float")

@@ -10,8 +10,9 @@ from __future__ import annotations
 
 from typing import Any, Callable, Optional
 
+from ..compiler import nullsafe
 from ..compiler.values import Value
-from ..sml.nodes import Call
+from ..sml.nodes import Call, ListLiteral
 
 CompileFn = Callable[..., Value]
 
@@ -112,3 +113,32 @@ def const_str_list(ctx, call: Call, name: str, args: Optional[dict] = None) -> l
             raise ctx.error(f"{call.func} {name}= items must be string literals", call.span)
         out.append(item.value)
     return out
+
+
+def when_all_gate(ctx, call: Call, args: dict[str, Value]):
+    """The optional ``when_all=[...]`` gate of a stateful call: the
+    strict (NULL → False) conjunction of its conditions, or None when
+    the argument is absent or empty (every event passes)."""
+    node = raw_arg(ctx, call, args, "when_all")
+    if node is None:
+        return None
+    if not isinstance(node, ListLiteral):
+        raise ctx.error(f"{call.func} when_all= must be a list", call.span)
+    conds = [ctx.compile_expr(e) for e in node.items]
+    return nullsafe.strict_all(conds) if conds else None
+
+
+def whole_seconds(
+    ctx, call: Call, args: dict[str, Value], name: str, default: Any = None
+) -> Any:
+    """A constant ``*_seconds`` argument of an event-time state op,
+    required unless ``default`` is given; it must be >= 1 because
+    event time has whole-second resolution."""
+    v = const_arg(ctx, call, args, name, required=default is None, default=default)
+    if float(v) < 1.0:
+        raise ctx.error(
+            f"{call.func}: {name} must be >= 1 (event time has whole-second "
+            f"resolution), got {v}",
+            call.span,
+        )
+    return v

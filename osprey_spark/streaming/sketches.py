@@ -26,8 +26,13 @@ and read). Open slots emit a changelog row per touching micro-batch
 (`is_final=false`, monotone `upd_seq`); when the event-time watermark
 passes window_end + the configured delay, the slot times out, emits
 its closing row (`is_final=true`) and frees its state — the state
-store never accumulates closed windows. `stream_cusum` keeps its own
-call: it has no window, no timeout and a typed four-long state.
+store never accumulates closed windows. The watermark also bounds
+lateness: a row already behind the watermark (more than the delay
+older than the latest event time seen) is dropped by Spark's stateful
+filter before any merge, even while its window slot is still open. So
+each op's "exact in any arrival order" equivalence holds for rows at
+most `watermark` late. `stream_cusum` keeps its own call: it has no
+window, no timeout and a typed four-long state.
 
 No counterpart in the reference engine (its approx distinct counts
 are Druid/ClickHouse-side, e.g. the TopN/timeseries paths the batch
@@ -121,7 +126,10 @@ def _window_sketch(
     touching micro-batch merges each chunk, bumps ``upd_seq`` and emits
     the read with ``is_final=false``; once the watermark passes
     window_end + delay the slot emits the read once more with
-    ``is_final=true`` and frees its state. Rows are ``win_start,
+    ``is_final=true`` and frees its state. A row already behind the
+    watermark never reaches ``merge`` (Spark's stateful filter drops
+    it, open slot or not), so the merged sketch equals the batch one
+    only for rows at most ``watermark`` late. Rows are ``win_start,
     dims..., fields..., upd_seq, is_final``. The state field and its
     JSON payload are the op's own, so its checkpoints resume unchanged.
     """
@@ -225,7 +233,7 @@ def stream_window_hll(
     batch over the same rows grouped by the same derived window/dim
     columns. Register assignment uses the IDENTICAL md5 expressions
     JVM-side, so the state fold is a max-merge of the same integers
-    in any arrival order.
+    in any arrival order of rows at most `watermark` late.
     """
     key = F.col(key_col)
     h = F.md5(F.concat(F.lit(f"{seed}:"), key.cast("string")).cast("binary"))
@@ -300,7 +308,7 @@ def stream_window_cms(
     `count_min_build` + `count_min_estimate` run in batch over the
     same rows grouped by the same derived window column — the counter
     fold is integer addition of identical md5-derived buckets, exact
-    in any arrival order.
+    in any arrival order of rows at most `watermark` late.
     """
     from ..operators.sketches import _bucket
 
@@ -360,7 +368,8 @@ def stream_window_kmv(
     Fifth streaming sketch fold: MIN-K merge (sorted set union
     truncated to k), associative+commutative like the others, so the
     final estimates equal the batch `kmv_set_ops(group_cols=[window])`
-    bit-for-bit in any arrival order. State per open slot is two <=k
+    bit-for-bit in any arrival order of rows at most `watermark` late.
+    State per open slot is two <=k
     hash lists — independent of traffic and key cardinality.
 
     Emits one changelog row per touching micro-batch:
@@ -436,7 +445,8 @@ def stream_window_hist(
     addition over <=252 EXACT bins, so the running p50/p95/p99 inside
     the open window (micro-batch latency, turn lengths, tool run
     times) equals the batch `hist_quantiles` over the same prefix in
-    any arrival order, bit-for-bit. State per open slot is the bin
+    any arrival order of rows at most `watermark` late, bit-for-bit.
+    State per open slot is the bin
     table — independent of traffic volume AND of value cardinality.
 
     Emits one changelog row per q_pct per touching micro-batch:
@@ -488,7 +498,8 @@ def stream_window_weighted_sample(
     smallest (key, id, weight) entries per open slot. min-k is
     associative and commutative, so the carried reservoir after any
     prefix equals the batch top-k over that prefix in ANY arrival
-    order — late rows displace exactly as they would in batch. State
+    order — rows at most `watermark` late displace exactly as they
+    would in batch (later ones are dropped by the watermark). State
     is k entries per open slot regardless of traffic ("sample 8 turns
     of this hour proportional to length" costs the same at 10^12
     turns/hour).
@@ -564,7 +575,8 @@ def stream_drift_psi(
     the closure as a literal — the broadcast-dimension class).
 
     The state fold is the same integer bin-count vector addition as
-    ``stream_window_hist`` — exact in any arrival order — and every
+    ``stream_window_hist`` — exact in any arrival order of rows at
+    most ``watermark`` late — and every
     read recomputes PSI/KS from the merged table via
     ``py_drift_metrics``, the identical arithmetic the batch
     ``drift_metrics`` oracle checks. So the latest row per slot always

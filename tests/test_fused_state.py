@@ -646,6 +646,71 @@ def test_hot_swap_keeps_unchanged_op_state(spark, tmp_path):
         assert row["N2"] == full[k]["N2"] and row["N3"] == since_added[k]["N3"]
 
 
+_ALL_FAMILIES_SML = """
+K: str = JsonData(path='$.conv_id')
+Role: str = JsonData(path='$.role')
+Ti: int = JsonData(path='$.turn_idx')
+Tool: str = JsonData(path='$.tool')
+IsUser = Role == 'user'
+NUser = IncrementWindow(key=K, window_seconds=120.0, when_all=[IsUser])
+NAll = IncrementWindow(key=K, window_seconds=3600.0, max_events_cap=50)
+NRead = GetWindowCount(key=K, window_seconds=600.0)
+Seq = SequenceMatches(key=K, symbol=Role, order=Ti, pattern='ut', last_k=4)
+NTools = GetUniqueCount(key=K, value=Tool, cap=8, when_all=[IsUser])
+NRoles = GetWindowDistinct(key=K, value=Role, window_seconds=300.0, when_all=[IsUser])
+MaxTi = GetWindowMax(key=K, value=Ti, window_seconds=300.0, when_all=[IsUser])
+MinTi = GetWindowMin(key=K, value=Ti, window_seconds=300.0)
+Rpt = SeenBefore(key=K, value=Role, when_all=[IsUser])
+Heat = GetDecayScore(key=K, value=Ti, halflife_seconds=60.0, gate=IsUser)
+Sess = GetSessionCount(key=K, gap_seconds=30.0)
+Prev = GetLastValue(key=K, value=Role, order=Ti)
+Tok = GetWindowSum(key=K, value=Ti, window_seconds=60.0, gate=IsUser)
+Age = GetKeyAge(key=K)
+Ok = RateLimit(key=K, limit=2, per_seconds=60, burst=3, order=Ti)
+Ent = GetTransitionEntropy(key=K, state=Role, order=Ti)
+Bst = GetBurstiness(key=K)
+CacheSetStr(key=K, value=Role, ttl_seconds=600.0, when_all=[IsUser])
+LastRole = CacheGetStr(key=K, default='none')
+"""
+
+# Recorded before the stateful calls shared one registration path. The
+# identity keys each op's checkpointed state: a drifted digest would
+# silently resume that op from an empty state.
+_PINNED_IDENTITIES = [
+    ("__wc_0", "window:0ca9362e306a304b"),
+    ("__wc_1", "window:6542013c3313c282"),
+    ("__wc_2", "window:6d2daf5c672ea7b2"),
+    ("__sq_0", "seq:acf81075c484f855"),
+    ("__uc_0", "unique:78e6bc0300aead26"),
+    ("__wd_0", "wdistinct:0d36214600e1cc14"),
+    ("__wm_0", "wminmax:1ee9f8cb57c1a974"),
+    ("__wm_1", "wminmax:a4c71715e4345832"),
+    ("__sb_0", "seen:07175af0692f70e0"),
+    ("__dy_0", "decay:842981671dcc4438"),
+    ("__sc_0", "sess:4182c2f06c9493f4"),
+    ("__lv_0", "last:4c459e7ce16a6690"),
+    ("__ws_0", "wsum:a9f67fa2ea3f8f70"),
+    ("__ka_0", "age:ae448bfbdea79f4d"),
+    ("__rl_0", "rl:d0cf7a9ff612a579"),
+    ("__te_0", "tent:a735caff744841be"),
+    ("__bs_0", "burst:ae448bfbdea79f4d"),
+    ("__cache_0", "cache:ed7697beef95c728"),
+]
+
+
+def test_op_identities_are_pinned(spark):
+    """Compile-only: every family's mangled names and state identities
+    stay byte-identical, so existing checkpoints resume into the same
+    ops."""
+    from osprey_spark.compiler.families import FAMILIES, op_identities
+
+    rs = compile_ruleset({"main.sml": _ALL_FAMILIES_SML}, bindings=TURN_BINDINGS)
+    ops = rs.ctx.state_ops
+    names = [n for n, defn in rs.ctx.feature_exprs if defn is None]
+    assert {ops[n][0] for n in names} == set(FAMILIES)
+    assert list(zip(names, op_identities([ops[n] for n in names]))) == _PINNED_IDENTITIES
+
+
 def test_composite_state_layouts():
     """The stored composite state resolves per op by identity; the two
     older layouts resume only where they are unambiguous."""

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from osprey_spark.compiler import compile_ruleset
-from osprey_spark.sml.errors import SmlError
+from osprey_spark.sml.errors import SmlError, SmlValidationError
 
 CASES = [
     ("duplicate feature", "X = 1\nX = 2\n", "duplicate feature"),
@@ -128,6 +128,55 @@ def test_validation_error(spark, label, sml, fragment):
     with pytest.raises(SmlError) as ei:
         compile_ruleset({"main.sml": sml})
     assert fragment.lower() in str(ei.value).lower()
+
+
+# --- shared argument checks of the stateful calls ---------------------------
+
+_K = "K: str = JsonData(path='$.k')\nV: int = JsonData(path='$.v')\n"
+
+# (call, its *_seconds argument, the call's other arguments)
+SECONDS_ARGS = [
+    ("IncrementWindow", "window_seconds", "key=K"),
+    ("GetWindowCount", "window_seconds", "key=K"),
+    ("GetWindowDistinct", "window_seconds", "key=K, value=V"),
+    ("GetWindowMax", "window_seconds", "key=K, value=V"),
+    ("GetWindowMin", "window_seconds", "key=K, value=V"),
+    ("GetWindowSum", "window_seconds", "key=K, value=V"),
+    ("GetSessionCount", "gap_seconds", "key=K"),
+    ("GetDecayScore", "halflife_seconds", "key=K"),
+    ("CacheSetStr", "ttl_seconds", "key=K, value=K"),
+]
+
+
+@pytest.mark.parametrize(
+    "func,name,rest", SECONDS_ARGS, ids=[f"{f}.{n}" for f, n, _ in SECONDS_ARGS]
+)
+def test_sub_second_state_argument_rejected(spark, func, name, rest):
+    sml = _K + f"X = {func}({rest}, {name}=0.5)\n"
+    with pytest.raises(SmlValidationError) as ei:
+        compile_ruleset({"main.sml": sml})
+    assert f"{func}: {name} must be >= 1" in str(ei.value)
+
+
+GATED_CALLS = [
+    ("IncrementWindow", "key=K, window_seconds=60"),
+    ("GetWindowCount", "key=K, window_seconds=60"),
+    ("GetWindowDistinct", "key=K, value=V, window_seconds=60"),
+    ("GetWindowMax", "key=K, value=V, window_seconds=60"),
+    ("GetWindowMin", "key=K, value=V, window_seconds=60"),
+    ("SeenBefore", "key=K, value=V"),
+    ("GetUniqueCount", "key=K, value=V"),
+    ("CacheSetStr", "key=K, value=K"),
+    ("CacheGetStr", "key=K"),
+]
+
+
+@pytest.mark.parametrize("func,rest", GATED_CALLS, ids=[f for f, _ in GATED_CALLS])
+def test_non_list_when_all_rejected(spark, func, rest):
+    sml = _K + "CacheSetStr(key=K, value=K)\n" + f"X = {func}({rest}, when_all=True)\n"
+    with pytest.raises(SmlValidationError) as ei:
+        compile_ruleset({"main.sml": sml})
+    assert f"{func} when_all= must be a list" in str(ei.value)
 
 
 # --- label config validation (ref: validate_labels.py:36-85) ----------------

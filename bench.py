@@ -119,6 +119,7 @@ def _bench_streaming(spark, work_dir: str) -> dict:
     tpc = int(os.environ.get("BENCH_TURNS_PER_CONV", "30"))
     n_files = 256
     input_dir, n_rows = _turns_input(spark, work_dir, n_convs, tpc, n_files)
+    layouts: list = []  # each engine's resolved state-bucket layout
 
     def run(sml: str, tag: str) -> tuple[float, list]:
         out_dir = os.path.join("/dev/shm/osprey_bench", f"stream_out_{tag}")
@@ -131,6 +132,7 @@ def _bench_streaming(spark, work_dir: str) -> dict:
             max_files_per_trigger=max(n_files // 4, 1),  # ≥4 micro-batches
             repartition_buckets=False,  # input is co-partitioned (see _turns_input)
         )
+        layouts.append(engine.state_layout)
         t0 = time.perf_counter()
         engine.run_to_completion()
         wall = time.perf_counter() - t0
@@ -242,6 +244,8 @@ def _bench_streaming(spark, work_dir: str) -> dict:
     lat = sorted(c["duration_s"] for c in commits_best) or [0.0]
 
     return {
+        "state_buckets": layouts[0].n,
+        "bucket_labels": layouts[0].labels,
         "turns": n_rows,
         "streaming_wall_s": round(wall, 3),
         "turns_per_sec": round(n_rows / wall, 1),
@@ -397,6 +401,9 @@ def main() -> None:
         "throughput": streaming,
         "backpressure": backpressure,
         "cpus": cpus,
+        # the state-bucket layout every bench engine resolved
+        "state_buckets": streaming.pop("state_buckets"),
+        "bucket_labels": streaming.pop("bucket_labels"),
     }
     scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALING.json")
     if os.path.exists(scaling_path):

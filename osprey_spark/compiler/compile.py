@@ -28,7 +28,7 @@ from __future__ import annotations
 import posixpath
 import re as _re_mod
 from dataclasses import dataclass, field
-from typing import Any, Callable, Optional
+from typing import TYPE_CHECKING, Any, Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -55,6 +55,9 @@ from ..sml.nodes import (
 from ..sml.parser import parse_program
 from . import nullsafe
 from .values import Effect, Value, const_value
+
+if TYPE_CHECKING:
+    from ..streaming.buckets import BucketLayout
 
 # Reserved output feature names
 # (ref: engine/executor/custom_extracted_features.py:54-91,
@@ -774,6 +777,11 @@ class CompiledRuleset:
 
     ctx: CompilerContext
     bindings: InputBindings
+    # row-id frames pinned by batch cache / rate-limit lookups, released
+    # by release_cache_state()
+    _cache_persists: list = field(
+        default_factory=list, init=False, repr=False, compare=False
+    )
 
     @property
     def feature_names(self) -> list[str]:
@@ -945,8 +953,6 @@ class CompiledRuleset:
             # across re-executions — persist pins one materialization
             # (released via CompiledRuleset.release_cache_state())
             df = df.withColumn(rid, F.monotonically_increasing_id()).persist()
-            if not hasattr(self, "_cache_persists"):
-                self._cache_persists = []
             self._cache_persists.append(df)
         cast = spec["cast"]
         probes = df.select(
@@ -1249,9 +1255,10 @@ class CompiledRuleset:
         recurrence (consumption depends on prior ALLOW decisions) has
         no window-function form, so: project a NARROW (rid, key, sec,
         order) relation, group it by the key's hash bucket
-        (``bucket_column``: ``state_bucket_count()`` buckets, 32 per
-        core unless pinned — the state ops' coalescing discipline;
-        per-group Arrow overhead amortizes across keys), fold each
+        (``bucket_column``: identity labels over
+        ``state_bucket_count()`` buckets, 32 per core unless pinned —
+        the state ops' coalescing discipline; per-group Arrow overhead
+        amortizes across keys; no checkpoint, so no layout), fold each
         key's rows in (sec, order) order inside one applyInPandas
         pass, and join the boolean back by row id. Only 4 small columns ever cross
         the Arrow boundary — the wide feature frame stays JVM-side.
@@ -1268,8 +1275,6 @@ class CompiledRuleset:
         rid = "__rl_rid"
         # same rid discipline as _join_cache: pin one materialization
         df = df.withColumn(rid, F.monotonically_increasing_id()).persist()
-        if not hasattr(self, "_cache_persists"):
-            self._cache_persists = []
         self._cache_persists.append(df)
         ord_col = (
             spec["order_col"].cast("double")
@@ -1470,7 +1475,11 @@ class CompiledRuleset:
         return df.select("*", matched.alias(spec["name"]))
 
     def _join_fused_state(
-        self, df: DataFrame, fspecs: list[tuple[str, dict]], drop: tuple = ()
+        self,
+        df: DataFrame,
+        fspecs: list[tuple[str, dict]],
+        layout: BucketLayout,
+        drop: tuple = (),
     ) -> DataFrame:
         """Resolve a RUN of streaming state ops that share one key
         expression in a SINGLE applyInPandasWithState pass — N
@@ -1504,6 +1513,12 @@ class CompiledRuleset:
         keeps unchanged ops' state, starts new ops empty and drops
         removed ones (``families.op_states`` also reads the older
         layouts).
+
+        Rows group by ``__fs_bkt``, the key's bucket under ``layout``'s
+        label (``keyed_state.bucket_column``): with the balanced labels
+        a new engine checkpoint records, each of the P state tasks
+        folds n/P buckets, and when the key is the sink's ``conv_id``
+        each sink bucket's rows leave one task (``buckets.py``).
 
         Callers guarantee: every spec's key has the same column-node
         string, all ordered specs share one order expression, and no
@@ -1583,6 +1598,7 @@ class CompiledRuleset:
         frame = run_keyed_state(
             aug, fold, out_schema, "states_json",
             bucket=("__fs_bkt", [F.col("__fs_key")]),
+            layout=layout,
         )
         for i, (fam, sp) in enumerate(fspecs):
             if fam == "cache":
@@ -1602,7 +1618,9 @@ class CompiledRuleset:
             ).otherwise(spec["default_col"])
         return result
 
-    def _join_cache_streaming(self, df: DataFrame, spec: dict) -> DataFrame:
+    def _join_cache_streaming(
+        self, df: DataFrame, spec: dict, layout: BucketLayout
+    ) -> DataFrame:
         """Streaming strategy for a CacheGet whose Set statements key
         differently from the Get — the one case the fused pass cannot
         route, since it groups every row by the Get's key. Each event
@@ -1734,6 +1752,7 @@ class CompiledRuleset:
         looked = run_keyed_state(
             rel, fold, out_schema, "latest_json",
             bucket=("__cbkt", [F.col("__ck")]),
+            layout=layout,
         )
         return looked.select(
             "*", self._cache_result(F.col("__cval"), spec).alias(spec["name"])
@@ -1742,9 +1761,9 @@ class CompiledRuleset:
     def release_cache_state(self) -> None:
         """Unpersist the pinned row-id frames cache lookups created —
         call after materializing apply()'s result in long sessions."""
-        for d in getattr(self, "_cache_persists", []):
+        for d in self._cache_persists:
             d.unpersist()
-        self._cache_persists = []
+        self._cache_persists.clear()
 
     def _hoisted_feature_order(self) -> list[tuple[str, Optional[Column]]]:
         """Feature materialization order with STATE OPS HOISTED as
@@ -1839,6 +1858,7 @@ class CompiledRuleset:
         labels_df: Optional[DataFrame] = None,
         sample_config: Optional[dict[str, int]] = None,
         sample_key: Optional[Column] = None,
+        state_layout: Optional[BucketLayout] = None,
     ) -> DataFrame:
         """``labels_df`` is the label-store snapshot required when the
         ruleset calls HasLabel: columns (entity_type, entity_id, label,
@@ -1846,7 +1866,11 @@ class CompiledRuleset:
         ``streaming.state.latest_labels``. ``sample_config`` enables
         per-action-name sampling *before* any feature evaluates (the
         filter sits directly over the scan, so Catalyst pushes it into
-        the source and dropped events never cost a feature)."""
+        the source and dropped events never cost a feature).
+        ``state_layout`` is the state-bucket layout of a streaming
+        frame's checkpoint (``StreamingRuleEngine`` records and passes
+        it); without one, the state passes bucket by identity labels
+        over ``state_bucket_count()``, resolved once here."""
         b = self.bindings
         sample_rate_col: Optional[Column] = None
         if sample_config:
@@ -1928,6 +1952,10 @@ class CompiledRuleset:
         # expression, or an op whose inputs reference a fused op's
         # output (it must see that column materialized).
         streaming = df.isStreaming
+        if streaming and state_layout is None:
+            from ..streaming.buckets import BucketLayout, state_bucket_count
+
+            state_layout = BucketLayout(state_bucket_count())
         pending: list[tuple[str, dict]] = []
         state_passes: list[list[str]] = []
 
@@ -1981,7 +2009,9 @@ class CompiledRuleset:
             if not pending:
                 return frame
             _register_pass([sp["name"] for _, sp in pending])
-            frame = self._join_fused_state(frame, list(pending), _dead_envelope(pos))
+            frame = self._join_fused_state(
+                frame, list(pending), state_layout, _dead_envelope(pos)
+            )
             pending.clear()
             return frame
 
@@ -2031,7 +2061,7 @@ class CompiledRuleset:
                 # union resolver can route them — a pass of its own
                 df = _flush(df, pos)
                 _register_pass([mangled])
-                df = self._join_cache_streaming(df, sp)
+                df = self._join_cache_streaming(df, sp, state_layout)
                 continue
             if not _fusable(fam, sp):
                 df = _flush(df, pos)

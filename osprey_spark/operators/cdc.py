@@ -145,6 +145,7 @@ def stream_latest_snapshot(
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
+    from ..streaming.buckets import BucketLayout
     from ..streaming.keyed_state import run_keyed_state
 
     keys = list(key_cols)
@@ -192,7 +193,7 @@ def stream_latest_snapshot(
         out_schema,
         "best_json",
         bucket=("_bkt", [F.col(k) for k in keys]),
-        n_buckets=n_buckets,
+        layout=BucketLayout(n_buckets),
         initial=lambda: [{}, 0],
     )
 

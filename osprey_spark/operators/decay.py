@@ -135,6 +135,7 @@ def stream_decay_counters(
         StructType,
     )
 
+    from ..streaming.buckets import BucketLayout
     from ..streaming.keyed_state import run_keyed_state
 
     keys = list(key_cols)
@@ -197,7 +198,7 @@ def stream_decay_counters(
         out_schema,
         "state_json",
         bucket=("_bkt", [F.col(k) for k in keys]),
-        n_buckets=n_buckets,
+        layout=BucketLayout(n_buckets),
         initial=lambda: [{}, 0],
     )
 

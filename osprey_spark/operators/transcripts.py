@@ -394,6 +394,7 @@ def stream_transition_counts(
         StructType,
     )
 
+    from ..streaming.buckets import BucketLayout
     from ..streaming.keyed_state import run_keyed_state
 
     sym = F.coalesce(F.col(tool_col), F.col(role_col))
@@ -444,7 +445,7 @@ def stream_transition_counts(
         out_schema,
         "seqs_json",
         bucket=("_bkt", [F.col("_conv")]),
-        n_buckets=n_buckets,
+        layout=BucketLayout(n_buckets),
     )
 
 

@@ -40,6 +40,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .buckets import BucketLayout
 from .keyed_state import run_keyed_state
 
 
@@ -126,7 +127,7 @@ def stream_near_dup_bands(
         out_schema,
         "mins_json",
         bucket=("_bkt", [F.col("_band")]),
-        n_buckets=n_buckets,
+        layout=BucketLayout(n_buckets),
     )
 
 

@@ -12,7 +12,8 @@ supplies only its fold:
     fold(pdf, state) -> (out_frame | None, new_state)
 
 - **Grouping.** Either the caller's group columns, or a hash bucket
-  ``pmod(xxhash64(*keys), n)`` of its key columns with a per-bucket
+  ``pmod(xxhash64(*keys), n)`` of its key columns (grouped under the
+  bucket's label, ``bucket_column``) with a per-bucket
   ``{key: entry}`` map in the state (key coalescing, see
   ``buckets.py``: the fixed per-group Arrow + state cost of
   ``applyInPandasWithState``, measured ~0.4 ms, dominates at real key
@@ -49,17 +50,27 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .buckets import state_bucket_count
+from .buckets import BucketLayout, state_bucket_count
 
 Fold = Callable[[pd.DataFrame, Any], "tuple[Optional[pd.DataFrame], Any]"]
 
 
-def bucket_column(keys: Sequence[Column], n_buckets: Optional[int] = None) -> Column:
-    """``pmod(xxhash64(*keys), n)`` as an int — the state-store group
-    key of every key-coalesced op (``n`` defaults to the plan-time
-    resolution in ``buckets.py``)."""
-    n = state_bucket_count() if n_buckets is None else int(n_buckets)
-    return F.pmod(F.xxhash64(*keys), F.lit(n)).cast("int")
+def bucket_column(keys: Sequence[Column], layout: Optional[BucketLayout] = None) -> Column:
+    """The state-store group key of every key-coalesced op, an int:
+    bucket ``b = pmod(xxhash64(*keys), layout.n)`` under its label —
+    ``b`` itself for identity labels, else ``layout.table()[b]`` (one
+    array-literal lookup; see ``buckets.py`` for why balanced labels
+    spread the buckets evenly over the state tasks). ``layout``
+    defaults to identity labels over the plan-time resolution of
+    ``state_bucket_count()``."""
+    layout = layout or BucketLayout(state_bucket_count())
+    b = F.pmod(F.xxhash64(*keys), F.lit(layout.n)).cast("int")
+    table = layout.table()
+    if table is None:
+        return b
+    # a SQL array literal parses in one call (F.lit of a list builds a
+    # Column per element over py4j)
+    return F.get(F.expr(f"array({','.join(map(str, table))})"), b)
 
 
 def run_keyed_state(
@@ -70,16 +81,16 @@ def run_keyed_state(
     *,
     group_cols: Sequence[str] = (),
     bucket: Optional[tuple[str, Sequence[Column]]] = None,
-    n_buckets: Optional[int] = None,
+    layout: Optional[BucketLayout] = None,
     initial: Callable[[], Any] = dict,
 ) -> DataFrame:
     """Group ``df`` and fold each group's micro-batch rows against its
     JSON state. Pass ``bucket=(column_name, key_columns)`` to group by
-    a hash bucket of the keys (added as ``column_name``), or
-    ``group_cols`` to group by existing columns."""
+    a hash bucket of the keys (added as ``column_name``, bucketed by
+    ``layout``), or ``group_cols`` to group by existing columns."""
     if bucket is not None:
         name, keys = bucket
-        df = df.withColumn(name, bucket_column(keys, n_buckets))
+        df = df.withColumn(name, bucket_column(keys, layout))
         group_cols = [name]
 
     def fn(_key, pdf_iter, state):

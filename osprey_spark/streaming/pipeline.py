@@ -108,12 +108,14 @@ class StreamingRuleEngine:
         # state-bucket checkpoint stability (streaming/buckets.py): the
         # bucket id is the state-store key, so resuming a checkpoint
         # with a different resolved count would strand every key's
-        # state in its old bucket. Record the count on first run and
-        # fail LOUDLY on mismatch instead of silently losing state.
-        from .buckets import record_bucket_count, state_bucket_count
+        # state in its old bucket. Record the layout on first run and
+        # fail LOUDLY on mismatch instead of silently losing state;
+        # transform() passes this one resolution to apply(), so no op
+        # re-resolves the count at plan time.
+        from .buckets import record_layout, state_bucket_count
 
-        recorded = record_bucket_count(self.checkpoint_dir)
-        current = state_bucket_count()
+        self.state_layout = record_layout(self.checkpoint_dir)
+        recorded, current = self.state_layout.n, state_bucket_count()
         if recorded != current:
             raise ValueError(
                 f"checkpoint {self.checkpoint_dir} was created with "
@@ -178,6 +180,7 @@ class StreamingRuleEngine:
             passthrough=self.passthrough,
             sample_config=self.sample_config,
             labels_df=self.labels_df,
+            state_layout=self.state_layout,
         )
         if self.partition_hour:
             out = out.withColumn("ts_hour", F.date_format("ts", "yyyy-MM-dd-HH"))

@@ -54,6 +54,17 @@ from ..sml.nodes import (
 )
 from ..sml.parser import parse_program
 from . import nullsafe
+from .families import (
+    FAMILIES,
+    ROW_ID,
+    cache_result,
+    cache_union,
+    op_identities,
+    op_states,
+    segments,
+    spec_columns,
+    stable_node,
+)
 from .values import Effect, Value, const_value
 
 if TYPE_CHECKING:
@@ -782,6 +793,10 @@ class CompiledRuleset:
     _cache_persists: list = field(
         default_factory=list, init=False, repr=False, compare=False
     )
+    # _hoisted_feature_order(), computed on first use
+    _hoisted_order: Optional[list] = field(
+        default=None, init=False, repr=False, compare=False
+    )
 
     @property
     def feature_names(self) -> list[str]:
@@ -930,562 +945,35 @@ class CompiledRuleset:
         out = df.withColumn("__rate", rate).filter(keep)
         return out, F.when(F.col("__rate") < 100, F.col("__rate")).cast("int")
 
-    def _join_cache(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one CacheGet as a key-VALUE lookup (Redis pairing,
-        see functions/cache.py): union every Set statement's writes
-        with the Get's probe rows into one narrow relation, shuffle
-        once on the key value, take the latest write in the max-TTL
-        event-time frame, expiry-check it against the probe's time
-        (overwrite semantics: an expired latest write hides older
-        ones), and join the values back by row id. Scale shape: one
-        shuffle on the key + one join back — hot keys are one window
-        partition, identical to any Redis-hot-key situation."""
-        from pyspark.sql import Window as W
-
-        name = spec["name"]
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        rid = "__cache_rid"
-        if rid not in df.columns:
-            # the rid must be IDENTICAL in every branch that re-reads
-            # df (probes, per-Set writes, final join-back), but
-            # monotonically_increasing_id depends on partition-local
-            # row order, which upstream exchanges don't guarantee
-            # across re-executions — persist pins one materialization
-            # (released via CompiledRuleset.release_cache_state())
-            df = df.withColumn(rid, F.monotonically_increasing_id()).persist()
-            self._cache_persists.append(df)
-        cast = spec["cast"]
-        probes = df.select(
-            F.col(rid).alias("_crid"),
-            spec["key_col"].cast("string").alias("_ck"),
-            sec.alias("_cts"),
-            F.lit(None).cast("long").alias("_cidx"),
-            F.lit(None).cast("long").alias("_cexp"),
-            F.lit(None).cast(cast).alias("_cv"),
-            F.lit(0).alias("_cset"),
-        )
-        branches = [probes]
-        max_ttl = 1
-        for s in spec["sets"]:
-            ttl = round(s["ttl"])
-            max_ttl = max(max_ttl, ttl)
-            set_gate = F.coalesce(
-                s["gate"] if s["gate"] is not None else F.lit(True), F.lit(False)
-            )
-            branches.append(
-                df.filter(set_gate & s["key_col"].isNotNull())
-                .select(
-                    F.lit(None).cast("long").alias("_crid"),
-                    s["key_col"].cast("string").alias("_ck"),
-                    sec.alias("_cts"),
-                    F.lit(int(s["idx"])).cast("long").alias("_cidx"),
-                    # last event-second at which this write is readable
-                    (sec + F.lit(ttl - 1)).alias("_cexp"),
-                    s["value_col"].cast(cast).alias("_cv"),
-                    F.lit(1).alias("_cset"),
-                )
-            )
-        rel = branches[0]
-        for b_ in branches[1:]:
-            rel = rel.unionByName(b_)
-        w = W.partitionBy("_ck").orderBy("_cts").rangeBetween(-(max_ttl - 1), 0)
-        best = F.max(
-            F.when(
-                F.col("_cset") == 1,
-                F.struct(
-                    F.col("_cts").alias("ts"),
-                    F.col("_cidx").alias("i"),
-                    F.col("_cexp").alias("exp"),
-                    F.col("_cv").alias("v"),
-                ),
-            )
-        ).over(w)
-        looked_up = (
-            rel.withColumn("_cbest", best)
-            .filter(F.col("_cset") == 0)
-            .select(
-                "_crid",
-                F.when(F.col("_cbest.exp") >= F.col("_cts"), F.col("_cbest.v")).alias("_cval"),
-            )
-        )
-        df = df.join(looked_up, df[rid] == looked_up["_crid"], "left").drop("_crid")
-        return df.select(
-            "*", self._cache_result(F.col("_cval"), spec).alias(name)
-        ).drop("_cval")
-
-    def _join_window_count(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one IncrementWindow/GetWindowCount on a BATCH frame:
-        event-time range window (one shuffle on the key, whole-stage
-        codegen). Streaming frames route through the fused state pass,
-        whose window fold carries the deque of in-window increment
-        timestamps (the Redis zset, ref example_plugins/src/udfs/
-        cache.py:161-227) per key."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        win = int(spec["window_seconds"])
-        cap = int(spec["cap"])
-        gate = spec["gate"]
-        w = W.partitionBy(spec["key_col"]).orderBy(sec).rangeBetween(-(win - 1), 0)
-        count = F.sum(F.when(spec["incremented"], 1).otherwise(0)).over(w)
-        if cap:
-            count = F.least(count, F.lit(cap))
-        if gate is not None:
-            count = F.when(F.coalesce(gate, F.lit(False)), count).otherwise(F.lit(0))
-        return df.select("*", F.coalesce(count, F.lit(0)).cast("long").alias(spec["name"]))
-
-    def _join_window_distinct(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetWindowDistinct on a BATCH frame: distinct
-        registered values per key in the trailing event-time window =
-        size(collect_set) over a range window — one shuffle on the
-        key, set state bounded by in-window distinct values. Gated-off
-        and NULL values never enter the set (collect_set drops
-        nulls). Streaming frames route through the fused state pass."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        win = int(spec["window_seconds"])
-        val = spec["value_col"]
-        if spec["gate"] is not None:
-            val = F.when(F.coalesce(spec["gate"], F.lit(False)), val)
-        w = W.partitionBy(spec["key_col"]).orderBy(sec).rangeBetween(-(win - 1), 0)
-        count = F.size(F.collect_set(val).over(w))
-        return df.select("*", count.cast("long").alias(spec["name"]))
-
-    def _join_unique_count(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetUniqueCount on a BATCH frame: lifetime
-        distinct registered values per key = size(collect_set) over
-        an UNBOUNDED-preceding range window — one shuffle on the key,
-        set state bounded by the key's distinct values. A positive
-        ``cap`` clamps with least() AFTER the exact count (the
-        streaming fold stops tracking at cap, which yields the
-        identical clamped value — see the fused fold). Streaming
-        frames route through the fused state pass."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        val = spec["value_col"]
-        if spec["gate"] is not None:
-            val = F.when(F.coalesce(spec["gate"], F.lit(False)), val)
-        w = W.partitionBy(spec["key_col"]).orderBy(sec).rangeBetween(
-            W.unboundedPreceding, 0
-        )
-        count = F.size(F.collect_set(val).over(w)).cast("long")
-        if spec["cap"]:
-            count = F.least(count, F.lit(int(spec["cap"])).cast("long"))
-        return df.select("*", count.alias(spec["name"]))
-
-    def _join_window_sum(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetWindowSum on a BATCH frame: sum of the
-        registered long amounts per key in the trailing event-time
-        window = sum over a range window — one shuffle on the key.
-        Gated-off events contribute 0; the empty window coalesces to
-        0. Streaming frames route through the fused state pass."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        win = int(spec["window_seconds"])
-        val = spec["value_col"]
-        if spec["gate"] is not None:
-            val = F.when(F.coalesce(spec["gate"], F.lit(False)), val).otherwise(
-                F.lit(0)
-            )
-        w = W.partitionBy(spec["key_col"]).orderBy(sec).rangeBetween(-(win - 1), 0)
-        total = F.coalesce(F.sum(val).over(w), F.lit(0))
-        return df.select("*", total.cast("long").alias(spec["name"]))
-
-    def _join_decay_score(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetDecayScore on a BATCH frame: the decayed
-        integer sum of every same-key registration at or before this
-        row's second. collect_list over the UNBOUNDED range window
-        (the GetUniqueCount window class — per-row cost bounded by
-        key occupancy, conversations not corpus), then a pure-JVM HOF
-        fold: weight = 2^20 >> bucket_age via a 21-entry literal
-        array lookup (no float anywhere). Gated-off events register
-        amount 0. Streaming frames route through the fused state
-        pass."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        h = int(spec["halflife_s"])
-        amt = spec["value_col"]
-        if spec["gate"] is not None:
-            amt = F.when(F.coalesce(spec["gate"], F.lit(False)), amt).otherwise(
-                F.lit(0)
-            )
-        bkt = F.floor(sec / F.lit(h)).cast("long")
-        w = (
-            W.partitionBy(spec["key_col"])
-            .orderBy(sec)
-            .rangeBetween(W.unboundedPreceding, 0)
-        )
-        entries = F.collect_list(
-            F.struct(bkt.alias("b"), amt.cast("long").alias("a"))
-        ).over(w)
-        # weights[d+1] = 2^20 >> d for d in 0..21; entry 22 is the
-        # exact zero (2^20 >> 21), and the index clamp keeps every
-        # lookup in bounds under ANSI element_at
-        weights = F.array(*[F.lit((1 << 20) >> d) for d in range(22)])
-        cur_b = bkt
-        score = F.aggregate(
-            entries,
-            F.lit(0).cast("long"),
-            lambda acc, e: acc
-            + e["a"]
-            * F.element_at(
-                weights,
-                (F.least(F.lit(21), cur_b - e["b"]) + 1).cast("int"),
-            ),
-        )
-        return df.select("*", score.cast("long").alias(spec["name"]))
-
-    def _join_transition_entropy(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetTransitionEntropy on a BATCH frame via the
-        TELESCOPED two-window formulation: the per-pair running count
-        c (a (key, pair)-partitioned rows window) turns each row into
-        the exact-quantized delta ``r(c·ln c) − r((c−1)·ln(c−1))``,
-        whose key-running sum telescopes to ``Σ_pairs r(c·ln c)`` at
-        every row — so the running entropy needs NO per-row prefix
-        scan and no map state: two shuffles (key+pair, then key), all
-        JVM expressions, O(1) per row. First event of a key (no
-        transition yet) reads 0.0."""
-        from pyspark.sql import Window as W
-
-        qf = 1e9
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        order_cols = [sec] + (
-            [spec["order_col"]] if spec["order_col"] is not None else []
-        )
-        name = spec["name"]
-        p, d, v = f"{name}_p", f"{name}_d", f"{name}_v"
-        sym = spec["state_col"]
-        w_lag = W.partitionBy(spec["key_col"]).orderBy(*order_cols)
-        prev = F.lag(sym).over(w_lag)
-        pair = F.when(prev.isNotNull(), F.concat_ws("\x01", prev, sym))
-        df1 = df.select("*", pair.alias(p))
-        w_pair = (
-            W.partitionBy(spec["key_col"], F.col(p))
-            .orderBy(*order_cols)
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        c = F.count(F.col(p)).over(w_pair)
-        cd = c.cast("double")
-        r1 = F.round(cd * F.log(cd) * F.lit(qf), 0).cast("long")
-        c0d = (c - 1).cast("double")
-        r0 = F.when(
-            c >= 2, F.round(c0d * F.log(c0d) * F.lit(qf), 0).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        delta = F.when(F.col(p).isNotNull(), r1 - r0).otherwise(
-            F.lit(0).cast("long")
-        )
-        df2 = df1.select(
-            "*",
-            delta.alias(d),
-            F.col(p).isNotNull().cast("long").alias(v),
-        )
-        w_key = (
-            W.partitionBy(spec["key_col"])
-            .orderBy(*order_cols)
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        s_run = F.sum(F.col(d)).over(w_key)
-        n_run = F.sum(F.col(v)).over(w_key)
-        nd = n_run.cast("double")
-        # the feature is ROUNDED to 6 decimals by contract: JVM
-        # Math.log and CPython/libm log differ by 1 ulp on some
-        # inputs (measured: log(3.0)), so raw doubles cannot be
-        # equal across the batch (JVM) and streaming (Python) paths;
-        # 6-digit rounding absorbs that noise — the same absorption
-        # every ln-using DuckDB oracle in this repo relies on.
-        ent = F.when(
-            n_run >= 1,
-            F.round(
-                F.log(nd) - s_run.cast("double") / (F.lit(qf) * nd), 6
-            ),
-        ).otherwise(F.lit(0.0))
-        return df2.select("*", ent.alias(name)).drop(p, d, v)
-
-    def _join_seen_before(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one SeenBefore on a BATCH frame: a conditional
-        registration count over a (key, value)-partitioned RANGE
-        window to the current second; a registering row needs >= 2
-        (itself included), a non-registering reader >= 1 — both
-        tie-order independent. One shuffle on (key, value); NULL
-        values read False (their window partition is the NULL-value
-        group, but the threshold comparison is nulled out below).
-        Streaming frames route through the fused state pass."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        val = spec["value_col"]
-        registers = val.isNotNull()
-        if spec["gate"] is not None:
-            registers = registers & F.coalesce(spec["gate"], F.lit(False))
-        w = (
-            W.partitionBy(spec["key_col"], val)
-            .orderBy(sec)
-            .rangeBetween(W.unboundedPreceding, 0)
-        )
-        cnt = F.count(F.when(registers, F.lit(1))).over(w)
-        thresh = F.when(registers, F.lit(2)).otherwise(F.lit(1))
-        seen = F.when(val.isNull(), F.lit(False)).otherwise(cnt >= thresh)
-        return df.select("*", seen.alias(spec["name"]))
-
-    def _join_window_minmax(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetWindowMax/Min on a BATCH frame: max (or
-        min) of the registered long values per key in the trailing
-        event-time window = max/min over a range window — one shuffle
-        on the key. Gated-off and NULL values never register; an
-        empty window yields NULL (not 0 — a real 0 must stay
-        distinguishable). Streaming frames route through the fused
-        state pass."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        win = int(spec["window_seconds"])
-        val = spec["value_col"]
-        if spec["gate"] is not None:
-            val = F.when(F.coalesce(spec["gate"], F.lit(False)), val)
-        w = W.partitionBy(spec["key_col"]).orderBy(sec).rangeBetween(-(win - 1), 0)
-        agg = F.max(val) if spec["mode"] > 0 else F.min(val)
-        return df.select("*", agg.over(w).cast("long").alias(spec["name"]))
-
-    def _join_rate_limit(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one RateLimit on a BATCH frame. The token bucket's
-        recurrence (consumption depends on prior ALLOW decisions) has
-        no window-function form, so: project a NARROW (rid, key, sec,
-        order) relation, group it by the key's hash bucket
-        (``bucket_column``: identity labels over
-        ``state_bucket_count()`` buckets, 32 per core unless pinned —
-        the state ops' coalescing discipline; per-group Arrow overhead
-        amortizes across keys; no checkpoint, so no layout), fold each
-        key's rows in (sec, order) order inside one applyInPandas
-        pass, and join the boolean back by row id. Only 4 small columns ever cross
-        the Arrow boundary — the wide feature frame stays JVM-side.
-        Streaming frames route through the fused state pass carrying
-        [tokens_units, last_sec] per key."""
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        # lazy: streaming/__init__ imports pipeline, which imports this
-        # module, so a top-level import would be circular
-        from ..streaming.keyed_state import bucket_column
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        rid = "__rl_rid"
-        # same rid discipline as _join_cache: pin one materialization
-        df = df.withColumn(rid, F.monotonically_increasing_id()).persist()
+    def _pin_row_ids(self, df: DataFrame) -> DataFrame:
+        """``df`` with the row-id column ``families.ROW_ID``: the ``pin``
+        hook of the batch resolvers that join back by row id (cache,
+        rate limit). The ids must be IDENTICAL in every branch that
+        re-reads ``df`` (probes, per-Set writes, the join back), but
+        monotonically_increasing_id depends on partition-local row
+        order, which upstream exchanges don't guarantee across
+        re-executions, so persist pins one materialization (released by
+        ``release_cache_state()``)."""
+        if ROW_ID in df.columns:
+            return df
+        df = df.withColumn(ROW_ID, F.monotonically_increasing_id()).persist()
         self._cache_persists.append(df)
-        ord_col = (
-            spec["order_col"].cast("double")
-            if spec["order_col"] is not None
-            else F.lit(0.0)
-        )
-        narrow = df.select(
-            F.col(rid).alias("_rlid"),
-            spec["key_col"].cast("string").alias("_rlk"),
-            sec.alias("_rls"),
-            ord_col.alias("_rlo"),
-            bucket_column([spec["key_col"].cast("string")]).alias("_rlb"),
-        )
-        rate, cap, cost = spec["rate"], spec["cap"], spec["cost"]
-
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            pdf = pdf.sort_values(
-                ["_rlk", "_rls", "_rlo"], kind="stable", na_position="last"
-            )
-            keys = pdf["_rlk"].to_numpy(dtype=object)
-            secs = pdf["_rls"].to_numpy(dtype="int64")
-            out = np.zeros(len(pdf), dtype=bool)
-            tokens = last = None
-            prev_key = object()
-            for i in range(len(pdf)):
-                k = keys[i]
-                if k != prev_key:
-                    tokens, last, prev_key = cap, secs[i], k
-                tokens = min(cap, tokens + rate * (secs[i] - last))
-                last = secs[i]
-                if tokens >= cost:
-                    tokens -= cost
-                    out[i] = True
-            return pd.DataFrame({"_rlid": pdf["_rlid"], "_rlv": out})
-
-        res = narrow.groupBy("_rlb").applyInPandas(
-            fold,
-            T.StructType(
-                [
-                    T.StructField("_rlid", T.LongType()),
-                    T.StructField("_rlv", T.BooleanType()),
-                ]
-            ),
-        )
-        return (
-            df.join(res, F.col(rid) == F.col("_rlid"), "left")
-            .drop("_rlid", rid)
-            .withColumnRenamed("_rlv", spec["name"])
-        )
-
-    def _join_key_age(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetKeyAge on a BATCH frame: seconds since the
-        key's first event = ``sec - min(sec)`` over a RANGE window to
-        the current second — one shuffle on the key, whole-stage
-        codegen. The min depends only on event times, so equal-second
-        ties cannot reorder the result. Streaming frames route
-        through the fused state pass carrying one long per key."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        w = (
-            W.partitionBy(spec["key_col"])
-            .orderBy(sec)
-            .rangeBetween(W.unboundedPreceding, 0)
-        )
-        age = sec - F.min(sec).over(w)
-        return df.select("*", age.cast("long").alias(spec["name"]))
-
-    def _join_burstiness(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetBurstiness on a BATCH frame: per-key gap
-        moments over a RANGE window to the current second. The lag
-        that extracts each gap is tie-order dependent row-by-row, but
-        a tie group's gap MULTISET is invariant (first row carries
-        sec-prev, the rest carry 0) and the RANGE aggregate always
-        sees the whole group, so every row's B is tie-independent.
-        Moments are exact longs; B = (sigma-mu)/(sigma+mu) with the
-        variance clamped at 0 (float dust) and ROUNDED to 6 by
-        contract (the tent family's batch/stream equality contract).
-        Keys with no gaps yet read the 0.0 Poisson-neutral default.
-        Streaming frames route through the fused state pass carrying
-        four ints per key."""
-        from pyspark.sql import Window as W
-
-        name = spec["name"]
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        g, sc = f"__bs_{name}_g", f"__bs_{name}_sec"
-        tmp = df.select(
-            "*",
-            sec.alias(sc),
-            spec["key_col"].cast("string").alias(f"__bs_{name}_key"),
-        )
-        w_rows = W.partitionBy(f"__bs_{name}_key").orderBy(sc)
-        tmp = tmp.select(
-            "*", (F.col(sc) - F.lag(sc).over(w_rows)).alias(g)
-        )
-        w_range = (
-            W.partitionBy(f"__bs_{name}_key")
-            .orderBy(sc)
-            .rangeBetween(W.unboundedPreceding, 0)
-        )
-        n_run = F.count(F.col(g)).over(w_range)
-        s_run = F.sum(F.col(g)).over(w_range)
-        q_run = F.sum(F.col(g) * F.col(g)).over(w_range)
-        nd = n_run.cast("double")
-        mu = s_run.cast("double") / nd
-        var = q_run.cast("double") / nd - mu * mu
-        sig = F.sqrt(F.greatest(F.lit(0.0), var))
-        den = sig + mu
-        b = F.when(
-            (n_run >= 1) & (den > 0), F.round((sig - mu) / den, 6)
-        ).otherwise(F.lit(0.0))
-        return tmp.select("*", b.alias(name)).drop(
-            g, sc, f"__bs_{name}_key"
-        )
-
-    def _join_session_count(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetSessionCount on a BATCH frame: lag-gap
-        session break → running-sum session id → RANGE count within
-        (key, session id). Both window stages cluster by the key (the
-        second's (key, session) requirement is satisfied by the
-        key-hash exchange), so the whole resolver is ONE shuffle +
-        one sort. Tie rows (equal sec) always land in one session and
-        RANGE counts the full tie group, so the result is independent
-        of Spark's tie order. Streaming frames route through the
-        fused state pass."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        gap = int(spec["gap_seconds"])
-        tmp = df.select(
-            "*",
-            spec["key_col"].cast("string").alias("__ss_key"),
-            sec.alias("__ss_sec"),
-        )
-        w_ord = W.partitionBy("__ss_key").orderBy("__ss_sec")
-        prev = F.lag("__ss_sec").over(w_ord)
-        brk = F.when(
-            prev.isNull() | ((F.col("__ss_sec") - prev) > F.lit(gap)), F.lit(1)
-        ).otherwise(F.lit(0))
-        tmp = tmp.select("*", brk.alias("__ss_brk"))
-        tmp = tmp.select(
-            "*",
-            F.sum("__ss_brk")
-            .over(w_ord.rowsBetween(W.unboundedPreceding, W.currentRow))
-            .alias("__ss_id"),
-        )
-        w_cnt = (
-            W.partitionBy("__ss_key", "__ss_id")
-            .orderBy("__ss_sec")
-            .rangeBetween(W.unboundedPreceding, W.currentRow)
-        )
-        return tmp.select(
-            "*", F.count(F.lit(1)).over(w_cnt).cast("long").alias(spec["name"])
-        ).drop("__ss_key", "__ss_sec", "__ss_brk", "__ss_id")
-
-    def _join_last_value(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one GetLastValue on a BATCH frame: ``lag(value)``
-        over the key partitioned by (event time, order) — one key
-        shuffle, whole-stage codegen, no self-join. Streaming frames
-        route through the fused state pass carrying one string per
-        key."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        order_cols = [sec] + (
-            [spec["order_col"]] if spec["order_col"] is not None else []
-        )
-        w = W.partitionBy(spec["key_col"]).orderBy(*order_cols)
-        return df.select(
-            "*", F.lag(spec["value_col"]).over(w).alias(spec["name"])
-        )
-
-    def _join_seq_match(self, df: DataFrame, spec: dict) -> DataFrame:
-        """Resolve one SequenceMatches on a BATCH frame: collect the
-        rolling last-K symbol window with a rows-between window (one
-        shuffle on the key, whole-stage codegen, JVM `rlike`).
-        Streaming frames route through the fused state pass, whose
-        per-key state is the ≤K-char symbol suffix — the reference's
-        tool_seq shape — so a pattern completed by a later batch's
-        event matches when that event arrives. The suffix semantics
-        make streaming == batch whenever (event time, order) is a
-        total order per key (equivalence- and restart-tested)."""
-        from pyspark.sql import Window as W
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        order_cols = [sec] + (
-            [spec["order_col"]] if spec["order_col"] is not None else []
-        )
-        w = (
-            W.partitionBy(spec["key_col"])
-            .orderBy(*order_cols)
-            .rowsBetween(-(int(spec["last_k"]) - 1), 0)
-        )
-        suffix = F.array_join(F.collect_list(spec["symbol_col"]).over(w), "")
-        matched = F.coalesce(suffix.rlike(spec["pattern"]), F.lit(False))
-        return df.select("*", matched.alias(spec["name"]))
+        return df
 
     def _join_fused_state(
         self,
         df: DataFrame,
         fspecs: list[tuple[str, dict]],
         layout: BucketLayout,
+        sec: Column,
         drop: tuple = (),
     ) -> DataFrame:
         """Resolve a RUN of streaming state ops that share one key
         expression in a SINGLE applyInPandasWithState pass — N
         stateful mechanisms, ONE shuffle and ONE state-store
         round-trip per micro-batch instead of N of each. A single op
-        is a run of one: every family streams through this pass.
+        is a run of one: every family streams through this pass, and
+        so does a cross-keyed CacheGet (``_join_cache_streaming``).
 
         This is not merely an optimization: Spark permits exactly ONE
         applyInPandasWithState per streaming query
@@ -1499,20 +987,21 @@ class CompiledRuleset:
         inter-op dependencies, cross-keyed cache writes) fail compile
         with an actionable split, not a deep Spark error.
 
-        Per bucket, only the narrow key/sec[/ord] columns sort; each
-        op folds the whole bucket in one call against those sorted
-        arrays (``families.py``: one numpy kernel for the window
+        Per bucket, only the narrow key/sec[/ord] columns sort
+        (``families.segments``, which the batch rate limit shares);
+        each op folds the whole bucket in one call against those
+        sorted arrays (``families.py``: one numpy kernel for the window
         counter and window sum, ``per_key`` for the loop-bodied
         families), and the outputs scatter back into input row order,
         so the wide passthrough frame is never sorted or copied. Each
         fold is pinned to its batch resolver by the stream==batch
-        suites. ``drop`` names input columns nothing after the pass
-        reads; they do not cross the state boundary. The composite
-        state maps each op's identity (family + parameters + input
-        expressions) to its ``{key: entry}`` map, so a ruleset hot-swap
-        keeps unchanged ops' state, starts new ops empty and drops
-        removed ones (``families.op_states`` also reads the older
-        layouts).
+        suites. ``sec`` is the event-second Column; ``drop`` names
+        input columns nothing after the pass reads; they do not cross
+        the state boundary. The composite state maps each op's
+        identity (family + parameters + input expressions) to its
+        ``{key: entry}`` map, so a ruleset hot-swap keeps unchanged
+        ops' state, starts new ops empty and drops removed ones
+        (``families.op_states`` also reads the older layouts).
 
         Rows group by ``__fs_bkt``, the key's bucket under ``layout``'s
         label (``keyed_state.bucket_column``): with the balanced labels
@@ -1530,9 +1019,7 @@ class CompiledRuleset:
         from pyspark.sql import types as T
 
         from ..streaming.keyed_state import run_keyed_state
-        from .families import FAMILIES, op_identities, op_states
 
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
         key_col = fspecs[0][1]["key_col"]
         proj: list = ["*", key_col.cast("string").alias("__fs_key"), sec.alias("__fs_sec")]
         ord_col = next(
@@ -1565,23 +1052,10 @@ class CompiledRuleset:
         idents = op_identities(fspecs)
         fams = [fam for fam, _ in fspecs]
         ordered = ord_col is not None
-        _NULL_KEY = "\x00"
 
         def fold(pdf, stored):
             smaps = op_states(stored, idents, fams)
-            # sort only the narrow key/sec/ord columns; the passthrough
-            # frame stays in input order and the outputs scatter back
-            codes, names = pd.factorize(pdf["__fs_key"].to_numpy(dtype=object), sort=True)
-            codes[codes < 0] = len(names)  # NULL keys last
-            sec_in = pdf["__fs_sec"].to_numpy(dtype="int64")
-            by = [sec_in, codes]
-            if ordered:
-                by.insert(0, pdf["__fs_ord"].to_numpy(dtype="float64"))
-            order = np.lexsort(by)
-            codes, sec = codes[order], sec_in[order]
-            starts = np.flatnonzero(np.diff(codes, prepend=-1))
-            ends = np.append(starts[1:], len(codes))
-            mks = names.tolist() + [_NULL_KEY] * (len(starts) - len(names))
+            order, mks, starts, ends, sec = segments(pdf, ordered)
             out = {c: pdf[c] for c in passthrough_cols}
             for out_col, (inputs, out_np, op_fold), smap in zip(out_cols, ops, smaps):
                 inp = {f: pdf[c].to_numpy(dtype=dt)[order] for f, (c, dt) in inputs.items()}
@@ -1603,164 +1077,51 @@ class CompiledRuleset:
         for i, (fam, sp) in enumerate(fspecs):
             if fam == "cache":
                 frame = frame.select(
-                    "*", self._cache_result(F.col(f"__fcv_{i}"), sp).alias(sp["name"])
+                    "*", cache_result(F.col(f"__fcv_{i}"), sp).alias(sp["name"])
                 ).drop(f"__fcv_{i}")
         return frame
 
-    @staticmethod
-    def _cache_result(looked_up: Column, spec: dict) -> Column:
-        """A CacheGet's value from its raw lookup: the default when
-        nothing live was found or the Get's gate is off."""
-        result = F.coalesce(looked_up, spec["default_col"])
-        if spec["gate"] is not None:
-            result = F.when(
-                F.coalesce(spec["gate"], F.lit(False)), result
-            ).otherwise(spec["default_col"])
-        return result
-
     def _join_cache_streaming(
-        self, df: DataFrame, spec: dict, layout: BucketLayout
+        self, df: DataFrame, spec: dict, layout: BucketLayout, sec: Column
     ) -> DataFrame:
         """Streaming strategy for a CacheGet whose Set statements key
-        differently from the Get — the one case the fused pass cannot
-        route, since it groups every row by the Get's key. Each event
-        row explodes into its Set-write pieces (narrow: key, ts, stmt
-        idx, value, expiry) and one probe piece carrying every input
-        column; the union groups by a hash bucket of the key value,
-        with a per-bucket {key: latest write} map (Redis overwrite
-        semantics makes the state O(1) per key). Probes re-emerge with
-        the looked-up value — no stream-stream join-back. Within a
-        key, pieces process in (ts, writes-before-reads) order;
-        cross-batch late writes follow watermark limits."""
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        from ..streaming.keyed_state import run_keyed_state
-
-        sec = F.col(self.bindings.timestamp).cast("timestamp").cast("long")
-        cast = spec["cast"]
-        probe = df.select(
-            "*",
-            spec["key_col"].cast("string").alias("__ck"),
-            sec.alias("__cts"),
-            F.lit(None).cast("long").alias("__cidx"),
-            F.lit(None).cast("long").alias("__cexp"),
-            F.lit(None).cast(cast).alias("__cv"),
-            F.lit(0).alias("__cset"),
+        differently from the Get — the one case a same-key fused run
+        cannot route, since it groups every row by the Get's key. The
+        input rows (probes, keyed by the Get's key) union with one
+        narrow row per Set write (keyed by the Set's key, with its
+        event second), the batch resolver's ``families.cache_union``,
+        and the union streams through the fused pass as a one-op cache
+        run keyed by the union's key column ``_ck``: each write row
+        writes only its own statement, and the one cache fold orders
+        writes before reads in a second, exactly like batch. The probe
+        rows come back with the looked-up value — no stream-stream
+        join-back; cross-batch late writes follow watermark limits. The
+        op's state identity digests the union's columns, not the Set
+        expressions, so a changed Set key or value keeps the carried
+        writes; a checkpoint holding the bare ``{key: entry}`` map of
+        the standalone resolver this pass replaced resumes through
+        ``op_states``."""
+        probes = df.select(
+            "*", spec["key_col"].cast("string").alias("_ck"), sec.alias("_cts")
         )
-        rel = probe
-        for s in spec["sets"]:
-            ttl = round(s["ttl"])
-            set_gate = F.coalesce(
-                s["gate"] if s["gate"] is not None else F.lit(True), F.lit(False)
-            )
-            piece = (
-                df.filter(set_gate & s["key_col"].isNotNull())
-                .select(
-                    s["key_col"].cast("string").alias("__ck"),
-                    sec.alias("__cts"),
-                    F.lit(int(s["idx"])).cast("long").alias("__cidx"),
-                    (sec + F.lit(ttl - 1)).alias("__cexp"),
-                    s["value_col"].cast(cast).alias("__cv"),
-                    F.lit(1).alias("__cset"),
-                )
-            )
-            rel = rel.unionByName(piece, allowMissingColumns=True)
-        passthrough_cols = [c for c in df.columns]
-        out_schema = T.StructType(
-            [f for f in df.schema.fields]
-            + [T.StructField("__cval", probe.schema["__cv"].dataType)]
+        write = {"key_col": F.col("_ck"), "value_col": F.col("_cv")}
+        union_spec = {
+            **spec,
+            "key_col": F.col("_ck"),
+            "sets": [
+                {**st, **write, "gate": F.col("_cidx") == st["idx"]} for st in spec["sets"]
+            ],
+        }
+        looked = self._join_fused_state(
+            cache_union(probes, df, spec, sec), [("cache", union_spec)], layout,
+            F.col("_cts"), drop=("_cexp",),
         )
-
-        _NULL_KEY = "\x00"
-
-        def fold(pdf, smap):
-            # per key: writes before probes at equal ts; among same-ts
-            # writes, statement idx ascending so "last position"
-            # = max (ts, idx) — the batch window's struct max
-            pdf = pdf.sort_values(
-                ["__ck", "__cts", "__cset", "__cidx"],
-                ascending=[True, True, False, True],
-                kind="stable",
-                na_position="last",
-            )
-            n = len(pdf)
-            keys_a = pdf["__ck"].to_numpy(dtype=object)
-            is_set_all = pdf["__cset"].to_numpy() == 1
-            ts_all = pdf["__cts"].to_numpy(dtype="int64")
-            idx_all = pdf["__cidx"].to_numpy(dtype="float64")
-            exp_all = pdf["__cexp"].to_numpy(dtype="float64")
-            val_all = pdf["__cv"].to_numpy(dtype=object)
-            cval = np.empty(n, dtype=object)
-            change = np.nonzero(keys_a[1:] != keys_a[:-1])[0] + 1
-            for s, e in zip(
-                np.concatenate(([0], change)), np.concatenate((change, [n]))
-            ):
-                mk = keys_a[s] if keys_a[s] is not None else _NULL_KEY
-                latest = smap.get(mk)
-                is_set = is_set_all[s:e]
-                ts = ts_all[s:e]
-                # position of the latest batch write at or before each
-                # row (writes sort before probes at equal ts — the
-                # zadd-then-read sequencing), fully columnar
-                last_w = np.maximum.accumulate(
-                    np.where(is_set, np.arange(e - s), -1)
-                )
-                pl = last_w[~is_set]
-                probe_ts = ts[~is_set]
-                safe = np.maximum(pl, 0)
-                w_ts = ts[safe]
-                w_idx = idx_all[s:e][safe]
-                w_exp = exp_all[s:e][safe]
-                w_val = val_all[s:e][safe]
-                if latest is not None:
-                    s_ts, s_idx, s_exp, s_val = latest
-                    # Redis overwrite: lexicographically newest
-                    # (ts, idx) write wins between carried state and
-                    # batch writes
-                    use_state = (
-                        (pl < 0) | (s_ts > w_ts) | ((s_ts == w_ts) & (s_idx > w_idx))
-                    )
-                    exp_sel = np.where(use_state, float(s_exp), w_exp)
-                    val_sel = np.where(
-                        use_state, np.array([s_val], dtype=object)[0], w_val
-                    )
-                else:
-                    use_none = pl < 0
-                    exp_sel = np.where(use_none, -1.0, w_exp)
-                    val_sel = np.where(use_none, None, w_val)
-                valid = exp_sel >= probe_ts
-                cval[s:e][~is_set] = np.where(valid, val_sel, None)
-                # fold this key's newest batch write into the map
-                if is_set.any():
-                    bi = int(np.flatnonzero(is_set)[-1])
-                    v = val_all[s:e][bi]
-                    cand = [
-                        int(ts[bi]),
-                        int(idx_all[s:e][bi]),
-                        int(exp_all[s:e][bi]),
-                        None if pd.isna(v) else (v.item() if hasattr(v, "item") else v),
-                    ]
-                    if latest is None or cand[:2] >= latest[:2]:
-                        smap[mk] = cand
-            probes = ~is_set_all
-            out = pdf[probes][passthrough_cols].copy()
-            out["__cval"] = cval[probes]
-            return out, smap
-
-        looked = run_keyed_state(
-            rel, fold, out_schema, "latest_json",
-            bucket=("__cbkt", [F.col("__ck")]),
-            layout=layout,
-        )
-        return looked.select(
-            "*", self._cache_result(F.col("__cval"), spec).alias(spec["name"])
-        ).drop("__cval")
+        return looked.filter(F.col("_cidx").isNull()).drop("_ck", "_cts", "_cidx", "_cv")
 
     def release_cache_state(self) -> None:
-        """Unpersist the pinned row-id frames cache lookups created —
-        call after materializing apply()'s result in long sessions."""
+        """Unpersist the pinned row-id frames cache and rate-limit
+        lookups created — call after materializing apply()'s result in
+        long sessions."""
         for d in self._cache_persists:
             d.unpersist()
         self._cache_persists.clear()
@@ -1792,15 +1153,12 @@ class CompiledRuleset:
         feature columns are pure expressions, so materialization order
         is semantics-free there.
         """
-        from .families import spec_columns
-
         # pure function of compile-time state — memoize so repeated
         # apply() calls skip the per-column py4j node().toString()
         # round trips (the compiled-ruleset session cache otherwise
         # pays them on every query build)
-        cached = getattr(self, "_hoisted_order_cache", None)
-        if cached is not None:
-            return cached
+        if self._hoisted_order is not None:
+            return self._hoisted_order
         entries = list(self.ctx.feature_exprs)
         pos = {name: i for i, (name, _) in enumerate(entries)}
         label_specs = {s["name"]: s for s in self.ctx.label_lookups}
@@ -1847,9 +1205,8 @@ class CompiledRuleset:
                 rank[n] = max((r(d) for d in refs_of[n]), default=-1.0) + 1e-6
             return rank[n]
 
-        out = sorted(entries, key=lambda e: (r(e[0]), pos[e[0]]))
-        self._hoisted_order_cache = out
-        return out
+        self._hoisted_order = sorted(entries, key=lambda e: (r(e[0]), pos[e[0]]))
+        return self._hoisted_order
 
     def apply(
         self,
@@ -1942,7 +1299,7 @@ class CompiledRuleset:
         # collapses single-use chains and keeps multi-use expressions
         # shared (collapseProjectAlwaysInline=false), so the optimized
         # plan stays linear in ruleset size.
-        from .families import FAMILIES, spec_columns, stable_node
+        sec = F.col(b.timestamp).cast("timestamp").cast("long")
 
         # STATE-OP FUSION (streaming only): a maximal run of
         # consecutive state ops sharing one key expression resolves
@@ -2010,7 +1367,7 @@ class CompiledRuleset:
                 return frame
             _register_pass([sp["name"] for _, sp in pending])
             frame = self._join_fused_state(
-                frame, list(pending), state_layout, _dead_envelope(pos)
+                frame, list(pending), state_layout, sec, _dead_envelope(pos)
             )
             pending.clear()
             return frame
@@ -2051,7 +1408,7 @@ class CompiledRuleset:
                 continue
             fam, sp = self.ctx.state_ops[mangled]
             if not streaming:
-                df = getattr(self, FAMILIES[fam].batch)(df, sp)
+                df = FAMILIES[fam].batch(df, sp, sec, self._pin_row_ids)
                 continue
             if fam == "cache" and any(
                 stable_node(s["key_col"]) != stable_node(sp["key_col"])
@@ -2061,7 +1418,7 @@ class CompiledRuleset:
                 # union resolver can route them — a pass of its own
                 df = _flush(df, pos)
                 _register_pass([mangled])
-                df = self._join_cache_streaming(df, sp, state_layout)
+                df = self._join_cache_streaming(df, sp, state_layout, sec)
                 continue
             if not _fusable(fam, sp):
                 df = _flush(df, pos)

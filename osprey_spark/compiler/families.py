@@ -1,4 +1,5 @@
-"""The stateful rule families: one table row and one streaming fold each.
+"""The stateful rule families: each one's batch resolver and streaming
+fold, side by side in one table row.
 
 Every stateful SML call (``IncrementWindow``, ``SequenceMatches``,
 ``GetUniqueCount``, ``CacheGet*`` ...) registers through
@@ -9,8 +10,12 @@ only place that knows the families:
 
 - ``prefix`` — the mangled-name prefix of the family's ops (``__wc_``
   for the window counter: ops are named ``__wc_0``, ``__wc_1`` ...);
-- ``batch`` — the ``CompiledRuleset`` method resolving one spec on a
-  batch frame (window functions, JVM-side);
+- ``batch`` — ``batch(df, sp, sec, pin)`` resolves one spec on a batch
+  frame and returns it with the op's column added. ``sec`` is the
+  event-second Column; ``pin(df)`` adds the pinned row-id column
+  ``ROW_ID`` that the cache and rate-limit resolvers join back by.
+  Most families are window functions (JVM-side); RateLimit has no
+  window form and folds each bucket through its own streaming fold;
 - ``inputs`` — the spec fields holding input Columns (dependency
   extraction for hoisting and fusion);
 - ``stream`` — the builder for the streaming side: the columns the
@@ -21,14 +26,20 @@ Streaming frames resolve every family through the fused state pass
 (``CompiledRuleset._join_fused_state``), which hands each op a whole
 bucket at once. A fold has the signature
 ``fold(smap, mks, starts, ends, sec, inp, out)``: the bucket's rows are
-sorted by (key, sec[, ord]); key ``mks[k]`` (its JSON map key) owns rows
-``[starts[k], ends[k])``; ``sec`` is every row's event second, ``inp``
-the op's input arrays and ``out`` its output array, all in that sorted
-order; ``smap`` is the op's ``{key: entry}`` map. The window counter and
-window sum share one numpy kernel over the bucket; every other family
-wraps its one-key body ``(smap, mk, seg_sec, s, e, inp, out)`` in
-``per_key``. Each fold is pinned to its batch resolver by the
-stream==batch suites.
+sorted by (key, sec[, ord]) (``segments``); key ``mks[k]`` (its JSON
+map key) owns rows ``[starts[k], ends[k])``; ``sec`` is every row's
+event second, ``inp`` the op's input arrays and ``out`` its output
+array, all in that sorted order; ``smap`` is the op's ``{key: entry}``
+map. The window counter and window sum share one numpy kernel over the
+bucket; every other family wraps its one-key body
+``(smap, mk, seg_sec, s, e, inp, out)`` in ``per_key``. Each fold is
+pinned to its batch resolver by the stream==batch suites.
+
+There is one cache-overwrite fold (``_cache``): a CacheGet whose Set
+statements write under another key streams through it too, as a fused
+pass of one over the union of probe and write rows. Writes of one
+statement to one key in one second tie-break like the batch struct
+max ``(ts, idx, exp, value)``: the larger value wins, NULL lowest.
 """
 
 from __future__ import annotations
@@ -42,16 +53,21 @@ from typing import Any, Callable, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .values import Value
 
+# the row-id column ``pin`` adds
+ROW_ID = "__rid"
+# the map key of a NULL state key
+NULL_KEY = "\x00"
+
 
 class Family(NamedTuple):
     prefix: str
-    batch: str
+    batch: Callable[[DataFrame, dict, Column, Callable], DataFrame]
     inputs: tuple
     stream: Callable[[dict], "Stream"]
 
@@ -66,6 +82,59 @@ class Stream(NamedTuple):
 def _gate(sp: dict) -> Column:
     g = sp["gate"]
     return F.coalesce(g, F.lit(False)) if g is not None else F.lit(True)
+
+
+def _gated(sp: dict) -> Column:
+    """The value, NULL where the gate is off."""
+    return sp["value_col"] if sp["gate"] is None else F.when(_gate(sp), sp["value_col"])
+
+
+def _amount(sp: dict) -> Column:
+    """The long amount, 0 where the gate is off."""
+    amt = sp["value_col"]
+    if sp["gate"] is not None:
+        amt = F.when(_gate(sp), amt).otherwise(F.lit(0))
+    return amt.cast("long")
+
+
+def _frame(sec: Column, win: Optional[int], *keys) -> WindowSpec:
+    """The RANGE frame over event seconds per ``keys``: the trailing
+    ``win`` seconds, or every earlier second when ``win`` is None —
+    equal-second rows included either way."""
+    lo = Window.unboundedPreceding if win is None else -(win - 1)
+    return Window.partitionBy(*keys).orderBy(sec).rangeBetween(lo, 0)
+
+
+def _ordered(sp: dict, sec: Column, *keys) -> WindowSpec:
+    """The key's (and ``keys``') rows in (event second, order) order."""
+    order = [sec] if sp["order_col"] is None else [sec, sp["order_col"]]
+    return Window.partitionBy(sp["key_col"], *keys).orderBy(*order)
+
+
+def _out(df: DataFrame, sp: dict, col: Column) -> DataFrame:
+    return df.select("*", col.alias(sp["name"]))
+
+
+def segments(pdf: pd.DataFrame, ordered: bool) -> tuple:
+    """Sort a bucket's rows by (``__fs_key``, ``__fs_sec``[,
+    ``__fs_ord``]) and cut them into key runs. Returns ``(order, mks,
+    starts, ends, sec)``: ``order`` is the sort permutation, key
+    ``mks[k]`` (``NULL_KEY`` for NULL, last) owns sorted rows
+    ``[starts[k], ends[k])`` and ``sec`` is the sorted event seconds.
+    Only these narrow columns sort; callers scatter outputs back
+    through ``order``."""
+    codes, names = pd.factorize(pdf["__fs_key"].to_numpy(dtype=object), sort=True)
+    codes[codes < 0] = len(names)  # NULL keys last
+    sec = pdf["__fs_sec"].to_numpy(dtype="int64")
+    by = [sec, codes]
+    if ordered:
+        by.insert(0, pdf["__fs_ord"].to_numpy(dtype="float64"))
+    order = np.lexsort(by)
+    codes = codes[order]
+    starts = np.flatnonzero(np.diff(codes, prepend=-1))
+    ends = np.append(starts[1:], len(codes))
+    mks = names.tolist() + [NULL_KEY] * (len(starts) - len(names))
+    return order, mks, starts, ends, sec[order]
 
 
 def _put(smap: dict, mk: str, entry: Any) -> None:
@@ -167,6 +236,17 @@ def _window(sp: dict) -> Stream:
     return Stream(cols, T.LongType(), "int64", fold)
 
 
+def _window_batch(df, sp, sec, pin):
+    count = F.sum(F.when(sp["incremented"], 1).otherwise(0)).over(
+        _frame(sec, int(sp["window_seconds"]), sp["key_col"])
+    )
+    if sp["cap"]:
+        count = F.least(count, F.lit(int(sp["cap"])))
+    if sp["gate"] is not None:
+        count = F.when(_gate(sp), count).otherwise(F.lit(0))
+    return _out(df, sp, F.coalesce(count, F.lit(0)).cast("long"))
+
+
 def _seq(sp: dict) -> Stream:
     k_len, rx = int(sp["last_k"]), re.compile(sp["pattern"])
 
@@ -181,6 +261,14 @@ def _seq(sp: dict) -> Stream:
         _put(smap, mk, suffix)
 
     return Stream({"sym": (sp["symbol_col"], "object")}, T.BooleanType(), "bool", per_key(fold))
+
+
+def _seq_batch(df, sp, sec, pin):
+    # the rolling last-K symbols; equals the streaming suffix whenever
+    # (event time, order) is a total order per key
+    w = _ordered(sp, sec).rowsBetween(-(int(sp["last_k"]) - 1), 0)
+    suffix = F.array_join(F.collect_list(sp["symbol_col"]).over(w), "")
+    return _out(df, sp, F.coalesce(suffix.rlike(sp["pattern"]), F.lit(False)))
 
 
 def _wdistinct(sp: dict) -> Stream:
@@ -224,6 +312,12 @@ def _wdistinct(sp: dict) -> Stream:
 
     cols = {"val": (sp["value_col"], "object"), "vg": (_gate(sp), "bool")}
     return Stream(cols, T.LongType(), "int64", per_key(fold))
+
+
+def _wdistinct_batch(df, sp, sec, pin):
+    # collect_set drops NULLs, so gated-off values never register
+    w = _frame(sec, int(sp["window_seconds"]), sp["key_col"])
+    return _out(df, sp, F.size(F.collect_set(_gated(sp)).over(w)).cast("long"))
 
 
 def _seen(sp: dict) -> Stream:
@@ -272,6 +366,16 @@ def _seen(sp: dict) -> Stream:
     return Stream(cols, T.BooleanType(), "bool", per_key(fold))
 
 
+def _seen_batch(df, sp, sec, pin):
+    # registrations of this (key, value) up to this second: a
+    # registering row needs 2 (itself included), a reader 1
+    val = sp["value_col"]
+    registers = val.isNotNull() & _gate(sp)
+    cnt = F.count(F.when(registers, F.lit(1))).over(_frame(sec, None, sp["key_col"], val))
+    thresh = F.when(registers, F.lit(2)).otherwise(F.lit(1))
+    return _out(df, sp, F.when(val.isNull(), F.lit(False)).otherwise(cnt >= thresh))
+
+
 def _wminmax(sp: dict) -> Stream:
     win, mode = int(sp["window_seconds"]), int(sp["mode"])
 
@@ -309,6 +413,13 @@ def _wminmax(sp: dict) -> Stream:
     # object dtype keeps NULL values visible
     cols = {"val": (sp["value_col"], "object"), "vg": (_gate(sp), "bool")}
     return Stream(cols, T.LongType(), "object", per_key(fold))
+
+
+def _wminmax_batch(df, sp, sec, pin):
+    # an empty window reads NULL, not 0
+    agg = F.max(_gated(sp)) if sp["mode"] > 0 else F.min(_gated(sp))
+    w = _frame(sec, int(sp["window_seconds"]), sp["key_col"])
+    return _out(df, sp, agg.over(w).cast("long"))
 
 
 def _unique(sp: dict) -> Stream:
@@ -362,6 +473,14 @@ def _unique(sp: dict) -> Stream:
     return Stream(cols, T.LongType(), "int64", per_key(fold))
 
 
+def _unique_batch(df, sp, sec, pin):
+    # the exact count, clamped after (the fold's stop-at-cap agrees)
+    count = F.size(F.collect_set(_gated(sp)).over(_frame(sec, None, sp["key_col"]))).cast("long")
+    if sp["cap"]:
+        count = F.least(count, F.lit(int(sp["cap"])).cast("long"))
+    return _out(df, sp, count)
+
+
 def _sess(sp: dict) -> Stream:
     gap = int(sp["gap_seconds"])
 
@@ -394,6 +513,25 @@ def _sess(sp: dict) -> Stream:
     return Stream({}, T.LongType(), "int64", per_key(fold))
 
 
+def _sess_batch(df, sp, sec, pin):
+    # lag-gap break -> running-sum session id -> RANGE count within
+    # (key, session id); both windows cluster by the key, so this is
+    # one shuffle and one sort
+    tmp = df.select(
+        "*", sp["key_col"].cast("string").alias("__ss_key"), sec.alias("__ss_sec")
+    )
+    w_ord = Window.partitionBy("__ss_key").orderBy("__ss_sec")
+    prev = F.lag("__ss_sec").over(w_ord)
+    brk = F.when(
+        prev.isNull() | ((F.col("__ss_sec") - prev) > F.lit(int(sp["gap_seconds"]))), F.lit(1)
+    ).otherwise(F.lit(0))
+    tmp = tmp.select("*", brk.alias("__ss_brk"))
+    sid = F.sum("__ss_brk").over(w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    tmp = tmp.select("*", sid.alias("__ss_id"))
+    count = F.count(F.lit(1)).over(_frame(F.col("__ss_sec"), None, "__ss_key", "__ss_id"))
+    return _out(tmp, sp, count.cast("long")).drop("__ss_key", "__ss_sec", "__ss_brk", "__ss_id")
+
+
 def _last(sp: dict) -> Stream:
     def fold(smap, mk, seg_sec, s, e, inp, out):
         # lag(value): the segment's first row sees the carried value (or
@@ -415,13 +553,17 @@ def _last(sp: dict) -> Stream:
     return Stream({"val": (sp["value_col"], "object")}, T.StringType(), "object", per_key(fold))
 
 
+def _last_batch(df, sp, sec, pin):
+    return _out(df, sp, F.lag(sp["value_col"]).over(_ordered(sp, sec)))
+
+
 def _rl(sp: dict) -> Stream:
     rate, cap, cost = int(sp["rate"]), int(sp["cap"]), int(sp["cost"])
 
     def fold(smap, mk, seg_sec, s, e, inp, out):
         # token bucket: state [tokens_units, last_sec]; a NEW key starts
-        # FULL. The exact recurrence the batch resolver runs — integer
-        # units throughout, denials consume nothing
+        # FULL. Integer units throughout, denials consume nothing; the
+        # batch resolver runs this same fold
         st = smap.get(mk)
         tokens, last = (cap, int(seg_sec[0])) if st is None else st
         seg_out = out[s:e]
@@ -438,6 +580,44 @@ def _rl(sp: dict) -> Stream:
     return Stream({}, T.BooleanType(), "bool", per_key(fold))
 
 
+def _rl_batch(df, sp, sec, pin):
+    # the recurrence (consumption depends on prior ALLOW decisions) has
+    # no window form: a narrow (row id, key, sec[, order]) relation
+    # groups by the key's hash bucket (identity labels: no checkpoint),
+    # each bucket runs the streaming fold from empty state, and the
+    # decisions join back by row id; the wide frame stays JVM-side.
+    # A lazy import: streaming/__init__ imports pipeline, which imports
+    # the compiler, so a top-level one would be circular
+    from ..streaming.keyed_state import bucket_column
+
+    df = pin(df)
+    key = sp["key_col"].cast("string")
+    ordered = sp["order_col"] is not None
+    narrow = df.select(
+        F.col(ROW_ID).alias("_rlid"),
+        key.alias("__fs_key"),
+        sec.alias("__fs_sec"),
+        *([sp["order_col"].cast("double").alias("__fs_ord")] if ordered else []),
+        bucket_column([key]).alias("_rlb"),
+    )
+    fold = _rl(sp).fold
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        order, mks, starts, ends, seg_sec = segments(pdf, ordered)
+        got = np.zeros(len(pdf), dtype=bool)
+        fold({}, mks, starts, ends, seg_sec, {}, got)
+        allowed = np.empty_like(got)
+        allowed[order] = got
+        return pd.DataFrame({"_rlid": pdf["_rlid"], "_rlv": allowed})
+
+    res = narrow.groupBy("_rlb").applyInPandas(run, "_rlid long, _rlv boolean")
+    return (
+        df.join(res, F.col(ROW_ID) == F.col("_rlid"), "left")
+        .drop("_rlid")
+        .withColumnRenamed("_rlv", sp["name"])
+    )
+
+
 def _age(sp: dict) -> Stream:
     def fold(smap, mk, seg_sec, s, e, inp, out):
         # seconds since the key's first-seen second; the min-fold lets a
@@ -449,6 +629,11 @@ def _age(sp: dict) -> Stream:
         smap[mk] = [first]
 
     return Stream({}, T.LongType(), "int64", per_key(fold))
+
+
+def _age_batch(df, sp, sec, pin):
+    # the min depends only on event times: tie-order independent
+    return _out(df, sp, (sec - F.min(sec).over(_frame(sec, None, sp["key_col"]))).cast("long"))
 
 
 def _round6(x: float) -> float:
@@ -497,11 +682,23 @@ def _burst(sp: dict) -> Stream:
     return Stream({}, T.DoubleType(), "float64", per_key(fold))
 
 
-def _amount(sp: dict) -> Column:
-    amt = sp["value_col"]
-    if sp["gate"] is not None:
-        amt = F.when(F.coalesce(sp["gate"], F.lit(False)), amt).otherwise(F.lit(0))
-    return amt.cast("long")
+def _burst_batch(df, sp, sec, pin):
+    # a tie group's gap multiset is tie-order invariant (first row
+    # carries sec - prev, the rest 0) and the RANGE aggregate sees the
+    # whole group, so every row's B is too; rounded to 6 like the fold
+    name = sp["name"]
+    g, sc, k = f"__bs_{name}_g", f"__bs_{name}_sec", f"__bs_{name}_key"
+    tmp = df.select("*", sec.alias(sc), sp["key_col"].cast("string").alias(k))
+    tmp = tmp.select("*", (F.col(sc) - F.lag(sc).over(Window.partitionBy(k).orderBy(sc))).alias(g))
+    w = _frame(F.col(sc), None, k)
+    n_run = F.count(F.col(g)).over(w)
+    nd = n_run.cast("double")
+    mu = F.sum(F.col(g)).over(w).cast("double") / nd
+    var = F.sum(F.col(g) * F.col(g)).over(w).cast("double") / nd - mu * mu
+    sig = F.sqrt(F.greatest(F.lit(0.0), var))
+    den = sig + mu
+    b = F.when((n_run >= 1) & (den > 0), F.round((sig - mu) / den, 6)).otherwise(F.lit(0.0))
+    return _out(tmp, sp, b).drop(g, sc, k)
 
 
 def _sorted_amounts(smap, mk, seg_sec, amt):
@@ -516,6 +713,11 @@ def _wsum(sp: dict) -> Stream:
     # carried state: the in-window non-zero [sec, amt] entries
     fold = trailing_sum_fold(int(sp["window_seconds"]), "amt", pairs=True)
     return Stream({"amt": (_amount(sp), "int64")}, T.LongType(), "int64", fold)
+
+
+def _wsum_batch(df, sp, sec, pin):
+    total = F.sum(_amount(sp)).over(_frame(sec, int(sp["window_seconds"]), sp["key_col"]))
+    return _out(df, sp, F.coalesce(total, F.lit(0)).cast("long"))
 
 
 def _decay(sp: dict) -> Stream:
@@ -551,6 +753,26 @@ def _decay(sp: dict) -> Stream:
     return Stream({"amt": (_amount(sp), "int64")}, T.LongType(), "int64", per_key(fold))
 
 
+def _decay_batch(df, sp, sec, pin):
+    # every same-key registration up to this second, folded JVM-side:
+    # weight 2^20 >> bucket age via a literal array lookup (no float)
+    bkt = F.floor(sec / F.lit(int(sp["halflife_s"]))).cast("long")
+    entries = F.collect_list(F.struct(bkt.alias("b"), _amount(sp).alias("a"))).over(
+        _frame(sec, None, sp["key_col"])
+    )
+    # weights[d+1] = 2^20 >> d for d in 0..21; entry 22 is the exact
+    # zero (2^20 >> 21), and the index clamp keeps every lookup in
+    # bounds under ANSI element_at
+    weights = F.array(*[F.lit((1 << 20) >> d) for d in range(22)])
+    score = F.aggregate(
+        entries,
+        F.lit(0).cast("long"),
+        lambda acc, e: acc
+        + e["a"] * F.element_at(weights, (F.least(F.lit(21), bkt - e["b"]) + 1).cast("int")),
+    )
+    return _out(df, sp, score.cast("long"))
+
+
 def _tent(sp: dict) -> Stream:
     def fold(smap, mk, seg_sec, s, e, inp, out):
         # running transition entropy: state [last_symbol, n, sq,
@@ -579,11 +801,46 @@ def _tent(sp: dict) -> Stream:
     return Stream({"sym": (sp["state_col"], "object")}, T.DoubleType(), "float64", per_key(fold))
 
 
+def _tent_batch(df, sp, sec, pin):
+    # TELESCOPED: the per-pair running count c turns each row into the
+    # quantized delta r(c ln c) - r((c-1) ln(c-1)), whose key-running
+    # sum is sum_pairs r(c ln c) at every row: two shuffles (key+pair,
+    # then key), no prefix scan, no map state. Rounded to 6 decimals
+    # by contract: JVM and libm log differ by 1 ulp on some inputs
+    qf = 1e9
+    name, sym = sp["name"], sp["state_col"]
+    p, d, v = f"{name}_p", f"{name}_d", f"{name}_v"
+    w_key = _ordered(sp, sec)
+    prev = F.lag(sym).over(w_key)
+    df1 = df.select("*", F.when(prev.isNotNull(), F.concat_ws("\x01", prev, sym)).alias(p))
+    c = F.count(F.col(p)).over(_ordered(sp, sec, F.col(p)).rowsBetween(Window.unboundedPreceding, 0))
+    cd, c0d = c.cast("double"), (c - 1).cast("double")
+    r1 = F.round(cd * F.log(cd) * F.lit(qf), 0).cast("long")
+    r0 = F.when(c >= 2, F.round(c0d * F.log(c0d) * F.lit(qf), 0).cast("long")).otherwise(
+        F.lit(0).cast("long")
+    )
+    delta = F.when(F.col(p).isNotNull(), r1 - r0).otherwise(F.lit(0).cast("long"))
+    df2 = df1.select("*", delta.alias(d), F.col(p).isNotNull().cast("long").alias(v))
+    w_run = w_key.rowsBetween(Window.unboundedPreceding, 0)
+    s_run, n_run = F.sum(F.col(d)).over(w_run), F.sum(F.col(v)).over(w_run)
+    nd = n_run.cast("double")
+    ent = F.when(
+        n_run >= 1, F.round(F.log(nd) - s_run.cast("double") / (F.lit(qf) * nd), 6)
+    ).otherwise(F.lit(0.0))
+    return _out(df2, sp, ent).drop(p, d, v)
+
+
+def _write_rank(w: list) -> tuple:
+    """Order of a write ``[ts, idx, exp, val]``: the batch struct max,
+    NULL values lowest."""
+    return (w[:3], w[3] is not None, w[3])
+
+
 def _cache(sp: dict) -> Stream:
     sets = [(j, int(st["idx"]), round(st["ttl"])) for j, st in enumerate(sp["sets"])]
 
     def fold(smap, mk, seg_sec, s, e, inp, out):
-        # rebuild the union resolver's event stream for this segment —
+        # rebuild the batch resolver's event stream for this segment —
         # per row, its gated Set writes then its probe, sorted (sec,
         # writes-first, stmt idx) — and fold the Redis overwrite state
         # through it. events: (sec, kind 0=write/1=probe, idx, payload, exp)
@@ -600,51 +857,95 @@ def _cache(sp: dict) -> Stream:
         latest = smap.get(mk)  # [ts, idx, exp, val]
         for t, kind, idx, payload, exp in events:
             if kind == 0:
-                if latest is None or [t, idx] >= latest[:2]:
-                    latest = [t, idx, exp, payload]
+                w = [t, idx, exp, payload]
+                if latest is None or _write_rank(w) > _write_rank(latest):
+                    latest = w
             elif latest is not None and latest[2] >= t:
                 out[payload] = latest[3]
         _put(smap, mk, latest)
 
     cols = {}
     for j, st in enumerate(sp["sets"]):
-        # a NULL key never writes (the union resolver filters it)
-        g = st["key_col"].isNotNull()
-        if st["gate"] is not None:
-            g = g & F.coalesce(st["gate"], F.lit(False))
-        cols[f"g{j}"] = (g, "bool")
+        # a NULL key never writes (the batch resolver filters it)
+        cols[f"g{j}"] = (st["key_col"].isNotNull() & _gate(st), "bool")
         cols[f"v{j}"] = (st["value_col"].cast(sp["cast"]), "object")
     return Stream(cols, T._parse_datatype_string(sp["cast"]), "object", per_key(fold))
 
 
+def cache_union(probes: DataFrame, df: DataFrame, sp: dict, sec: Column) -> DataFrame:
+    """``probes`` (rows carrying the Get's key as ``_ck`` and their
+    event second as ``_cts``) unioned with one narrow row per gated Set
+    write of ``df`` with a non-NULL key: ``_ck`` the Set's key,
+    ``_cts`` the write's second, ``_cidx`` the statement index,
+    ``_cexp`` the last second the write is readable and ``_cv`` the
+    value. Probe rows read NULL in the last three; write rows read NULL
+    in every other probe column."""
+    rel = probes
+    for st in sp["sets"]:
+        writes = df.filter(_gate(st) & st["key_col"].isNotNull()).select(
+            st["key_col"].cast("string").alias("_ck"),
+            sec.alias("_cts"),
+            F.lit(int(st["idx"])).cast("long").alias("_cidx"),
+            (sec + F.lit(round(st["ttl"]) - 1)).alias("_cexp"),
+            st["value_col"].cast(sp["cast"]).alias("_cv"),
+        )
+        rel = rel.unionByName(writes, allowMissingColumns=True)
+    return rel
+
+
+def cache_result(looked_up: Column, sp: dict) -> Column:
+    """A CacheGet's value from its raw lookup: the default when nothing
+    live was found or the Get's gate is off."""
+    result = F.coalesce(looked_up, sp["default_col"])
+    if sp["gate"] is not None:
+        result = F.when(_gate(sp), result).otherwise(sp["default_col"])
+    return result
+
+
+def _cache_batch(df, sp, sec, pin):
+    # a key-VALUE lookup (Redis pairing, see functions/cache.py): one
+    # shuffle on the key value over the union of probes and writes, the
+    # latest write in the max-TTL frame, expiry-checked against the
+    # probe's second (an expired latest write hides older ones), and
+    # the values join back by row id
+    df = pin(df)
+    probes = df.select(
+        F.col(ROW_ID).alias("_crid"), sp["key_col"].cast("string").alias("_ck"), sec.alias("_cts")
+    )
+    rel = cache_union(probes, df, sp, sec)
+    max_ttl = max([1] + [round(st["ttl"]) for st in sp["sets"]])
+    is_write = F.col("_cidx").isNotNull()
+    best = F.max(
+        F.when(is_write, F.struct(
+            F.col("_cts").alias("ts"), F.col("_cidx").alias("i"),
+            F.col("_cexp").alias("exp"), F.col("_cv").alias("v"),
+        ))
+    ).over(_frame(F.col("_cts"), max_ttl, "_ck"))
+    looked_up = (
+        rel.withColumn("_cbest", best)
+        .filter(~is_write)
+        .select("_crid", F.when(F.col("_cbest.exp") >= F.col("_cts"), F.col("_cbest.v")).alias("_cval"))
+    )
+    df = df.join(looked_up, df[ROW_ID] == looked_up["_crid"], "left").drop("_crid")
+    return _out(df, sp, cache_result(F.col("_cval"), sp)).drop("_cval")
+
+
 FAMILIES: dict[str, Family] = {
-    "window": Family("__wc_", "_join_window_count",
-                     ("key_col", "incremented", "gate"), _window),
-    "seq": Family("__sq_", "_join_seq_match",
-                  ("key_col", "symbol_col", "order_col"), _seq),
-    "wdistinct": Family("__wd_", "_join_window_distinct",
-                        ("key_col", "value_col", "gate"), _wdistinct),
-    "sess": Family("__sc_", "_join_session_count", ("key_col",), _sess),
-    "last": Family("__lv_", "_join_last_value",
-                   ("key_col", "value_col", "order_col"), _last),
-    "wsum": Family("__ws_", "_join_window_sum",
-                   ("key_col", "value_col", "gate"), _wsum),
-    "age": Family("__ka_", "_join_key_age", ("key_col",), _age),
-    "rl": Family("__rl_", "_join_rate_limit",
-                 ("key_col", "order_col"), _rl),
-    "unique": Family("__uc_", "_join_unique_count",
-                     ("key_col", "value_col", "gate"), _unique),
-    "wminmax": Family("__wm_", "_join_window_minmax",
-                      ("key_col", "value_col", "gate"), _wminmax),
-    "seen": Family("__sb_", "_join_seen_before",
-                   ("key_col", "value_col", "gate"), _seen),
-    "decay": Family("__dy_", "_join_decay_score",
-                    ("key_col", "value_col", "gate"), _decay),
-    "tent": Family("__te_", "_join_transition_entropy",
-                   ("key_col", "state_col", "order_col"), _tent),
-    "burst": Family("__bs_", "_join_burstiness", ("key_col",), _burst),
-    "cache": Family("__cache_", "_join_cache",
-                    ("key_col", "default_col", "gate", "sets"), _cache),
+    "window": Family("__wc_", _window_batch, ("key_col", "incremented", "gate"), _window),
+    "seq": Family("__sq_", _seq_batch, ("key_col", "symbol_col", "order_col"), _seq),
+    "wdistinct": Family("__wd_", _wdistinct_batch, ("key_col", "value_col", "gate"), _wdistinct),
+    "sess": Family("__sc_", _sess_batch, ("key_col",), _sess),
+    "last": Family("__lv_", _last_batch, ("key_col", "value_col", "order_col"), _last),
+    "wsum": Family("__ws_", _wsum_batch, ("key_col", "value_col", "gate"), _wsum),
+    "age": Family("__ka_", _age_batch, ("key_col",), _age),
+    "rl": Family("__rl_", _rl_batch, ("key_col", "order_col"), _rl),
+    "unique": Family("__uc_", _unique_batch, ("key_col", "value_col", "gate"), _unique),
+    "wminmax": Family("__wm_", _wminmax_batch, ("key_col", "value_col", "gate"), _wminmax),
+    "seen": Family("__sb_", _seen_batch, ("key_col", "value_col", "gate"), _seen),
+    "decay": Family("__dy_", _decay_batch, ("key_col", "value_col", "gate"), _decay),
+    "tent": Family("__te_", _tent_batch, ("key_col", "state_col", "order_col"), _tent),
+    "burst": Family("__bs_", _burst_batch, ("key_col",), _burst),
+    "cache": Family("__cache_", _cache_batch, ("key_col", "default_col", "gate", "sets"), _cache),
 }
 
 

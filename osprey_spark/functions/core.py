@@ -598,10 +598,11 @@ def rate_limit(ctx, call, args):
 
     Ninth stateful family — and the first whose recurrence has no
     window-function form (consumption depends on prior ALLOW
-    decisions, a min-clamped conditional fold): batch resolves via a
-    narrow (rid, key, sec, order) applyInPandas pass joined back by
-    row id (the cache resolver's shape); streaming rides the fused
-    state pass carrying [tokens_units, last_sec] per key.
+    decisions, a min-clamped conditional fold): streaming rides the
+    fused state pass carrying [tokens_units, last_sec] per key, and
+    batch runs the same fold from empty state over each key bucket of
+    a narrow (rid, key, sec, order) applyInPandas pass joined back by
+    row id.
     """
     key_v = arg(ctx, call, args, "key")
     order_v = arg(ctx, call, args, "order", required=False)

@@ -48,16 +48,16 @@ int ``label[b]``.
 - ``identity``: ``label[b] = b``.  Checkpoints recorded before the
   field existed (a sidecar without it, or a checkpoint that ran before
   there was a sidecar) keep it, and so do direct ``apply()`` callers
-  that pass no layout.  Only the compiler's two streaming state passes
-  (``_join_fused_state``, ``_join_cache_streaming``) take the engine's
-  layout; everything else stays on identity labels: the other
+  that pass no layout.  Only the compiler's streaming state pass
+  (``_join_fused_state``, which cross-keyed CacheGets take too) takes
+  the engine's layout; everything else stays on identity labels: the other
   ``run_keyed_state`` callers (conversation state, streaming as-of,
   CEP sequence match, the transcript repetition fold; the label store
   groups by entity, not by bucket), CEP response-absence (its own
   bucket column), the four ops that default to 1024 buckets
   (``stream_transition_counts``, ``stream_near_dup_bands``,
   ``stream_latest_snapshot``, ``stream_decay_counters``) and the batch
-  ``_join_rate_limit`` (no checkpoint).
+  RateLimit resolver (no checkpoint).
 - ``balanced`` (every checkpoint recorded since): ``label[b]`` is the
   first int ``c >= 0`` with ``pmod(murmur3_x86_32(c, seed 42), n) ==
   b``.  Spark places a group on state partition ``pmod(hash(label),
@@ -213,13 +213,3 @@ def recorded_layout(checkpoint_dir: str) -> Optional[BucketLayout]:
     with open(path) as f:
         rec = json.load(f)
     return BucketLayout(int(rec["state_buckets"]), rec.get("bucket_labels", IDENTITY))
-
-
-def record_bucket_count(checkpoint_dir: str, n: Optional[int] = None) -> int:
-    """``record_layout``'s bucket count."""
-    return record_layout(checkpoint_dir, n).n
-
-
-def recorded_bucket_count(checkpoint_dir: str) -> Optional[int]:
-    layout = recorded_layout(checkpoint_dir)
-    return None if layout is None else layout.n

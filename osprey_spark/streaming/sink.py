@@ -630,22 +630,14 @@ class MultiSink:
                     os.path.join(root, "tables", name), **sink_spec
                 )
             self.tables[name] = (transform, sink)
-        os.makedirs(self._commits_dir, exist_ok=True)
-
-    @property
-    def _commits_dir(self) -> str:
-        return os.path.join(self.root, "_commits")
-
-    def _commit_path(self, batch_id: int) -> str:
-        return os.path.join(self._commits_dir, f"{batch_id}.json")
+        # the shared commit log: one marker per batch that every target wrote
+        self.log = ParquetDirFormat(root)
 
     def is_committed(self, batch_id: int) -> bool:
-        return os.path.exists(self._commit_path(batch_id))
+        return self.log.is_committed(batch_id)
 
     def committed_batches(self) -> list[int]:
-        return sorted(
-            int(f[:-5]) for f in os.listdir(self._commits_dir) if f.endswith(".json")
-        )
+        return self.log.committed_batches()
 
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
         df = df.persist()
@@ -663,16 +655,12 @@ class MultiSink:
                 print(f"[multi-sink] batch={batch_id} rows={summary} errors={list(errors)}")
             if errors:
                 raise PartialSinkFailure(errors)
-            commit = {
+            self.log.commit(int(batch_id), {
                 "batch_id": int(batch_id),
                 "committed_at_unix": time.time(),
                 "writer": str(uuid.uuid4()),
                 "tables": stats,
-            }
-            tmp = self._commit_path(batch_id) + f".tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(commit, f)
-            os.replace(tmp, self._commit_path(batch_id))
+            })
         finally:
             df.unpersist()
 
@@ -681,7 +669,7 @@ class MultiSink:
         SHARED commit log (a batch where another target failed is
         invisible everywhere — cross-table consistency)."""
         _, sink = self.tables[table]
-        if not hasattr(sink, "data_dir"):
+        if not hasattr(sink, "format"):
             raise TypeError(
                 f"tee target {table!r} is not a readable table sink "
                 "(e.g. a KafkaSink produces to a topic — consume it there)"
@@ -689,5 +677,4 @@ class MultiSink:
         batches = self.committed_batches()
         if not batches:
             raise FileNotFoundError(f"no committed batches under {self.root}")
-        paths = [os.path.join(sink.data_dir, f"_batch_id={b}") for b in batches]
-        return spark.read.option("basePath", sink.data_dir).parquet(*paths)
+        return sink.format.scan(spark, batches)

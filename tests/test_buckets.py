@@ -19,9 +19,7 @@ from osprey_spark.streaming.buckets import (
     BucketLayout,
     bucket_labels,
     murmur3_int,
-    record_bucket_count,
     record_layout,
-    recorded_bucket_count,
     recorded_layout,
     state_bucket_count,
 )
@@ -49,12 +47,12 @@ def test_key_cardinality_raises_floor(spark, monkeypatch):
 
 def test_sidecar_records_once(tmp_path):
     ck = str(tmp_path / "ckpt")
-    assert recorded_bucket_count(ck) is None
-    first = record_bucket_count(ck, 512)
+    assert recorded_layout(ck) is None
+    first = record_layout(ck, 512).n
     assert first == 512
     # later calls (even with a different resolution) return the record
-    assert record_bucket_count(ck, 2048) == 512
-    assert recorded_bucket_count(ck) == 512
+    assert record_layout(ck, 2048).n == 512
+    assert recorded_layout(ck).n == 512
 
 
 def test_pre_sidecar_checkpoint_records_historical_count(spark, tmp_path, monkeypatch):
@@ -66,10 +64,10 @@ def test_pre_sidecar_checkpoint_records_historical_count(spark, tmp_path, monkey
     for marker in ("offsets", "commits"):
         ck = tmp_path / marker
         (ck / marker).mkdir(parents=True)
-        assert record_bucket_count(str(ck)) == 1024
-        assert recorded_bucket_count(str(ck)) == 1024
+        assert record_layout(str(ck)).n == 1024
+        assert recorded_layout(str(ck)).n == 1024
     # a fresh checkpoint dir records the current resolution
-    assert record_bucket_count(str(tmp_path / "fresh")) == state_bucket_count()
+    assert record_layout(str(tmp_path / "fresh")).n == state_bucket_count()
 
 
 def test_engine_refuses_resized_restart(spark, tmp_path, monkeypatch):
@@ -88,7 +86,7 @@ def test_engine_refuses_resized_restart(spark, tmp_path, monkeypatch):
     rs = compile_ruleset({"main.sml": sml}, bindings=TURN_BINDINGS)
     out = str(tmp_path / "out")
     eng = StreamingRuleEngine(spark, rs, input_dir="unused", output_dir=out)
-    assert recorded_bucket_count(eng.checkpoint_dir) == 64
+    assert recorded_layout(eng.checkpoint_dir).n == 64
     monkeypatch.setenv("OSPREY_WC_STATE_BUCKETS", "128")
     with pytest.raises(ValueError, match="64"):
         StreamingRuleEngine(spark, rs, input_dir="unused", output_dir=out)
@@ -246,7 +244,7 @@ def test_engine_layout_outlives_a_pin_change_before_planning(spark, tmp_path, mo
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     t = _turns(spark)
     eng = _era_engine(spark, t, in_dir, out_dir, 0)
-    assert recorded_bucket_count(eng.checkpoint_dir) == 64
+    assert recorded_layout(eng.checkpoint_dir).n == 64
     monkeypatch.setenv("OSPREY_WC_STATE_BUCKETS", "32")
     plan = eng.transform(eng.source())._jdf.queryExecution().analyzed().toString()
     counts = re.findall(r"pmod\(xxhash64\(__fs_key#\d+, 42\), cast\((\d+) as bigint\)\)", plan)

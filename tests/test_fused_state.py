@@ -596,6 +596,141 @@ def test_legacy_singleton_window_checkpoint_resumes_exactly(spark, tmp_path, mon
 
 
 # --------------------------------------------------------------------------
+# Cache* ops: same-second ties, and a Set keyed differently from its Get
+# --------------------------------------------------------------------------
+
+_TIE_SET = """
+K: str = JsonData(path='$.conv_id')
+Text: str = JsonData(path='$.text')
+IsUser = JsonData(path='$.role') == 'user'
+CacheSetStr(key=K, value=Text, when_all=[IsUser])
+"""
+
+TIE_ROWS = [
+    ("c1", 0, "user", "zzz", None, "2024-01-01 10:00:00"),
+    ("c1", 1, "user", "aaa", None, "2024-01-01 10:00:00"),
+    ("c1", 2, "assistant", "b", None, "2024-01-01 10:00:05"),
+]
+
+
+@pytest.mark.parametrize(
+    "get", ["Got = CacheGetStr(key=K)", "Got = CacheGetStr(key='c1')"],
+    ids=["same_key", "cross_key"],
+)
+def test_cache_same_second_writes_tie_like_batch(spark, tmp_path, get):
+    """Two writes of one Set statement to one key in one second: the
+    batch struct max (ts, idx, exp, value) keeps the larger value, and
+    the streaming fold must keep the same one, whatever order the rows
+    arrive in."""
+    sml = _TIE_SET + get
+    in_dir = str(tmp_path / "in")
+    _write_rows(spark, in_dir, TIE_ROWS)
+    eng = StreamingRuleEngine(
+        spark, compile_ruleset({"main.sml": sml}, bindings=TURN_BINDINGS),
+        in_dir, str(tmp_path / "out"), passthrough=("conv_id", "turn_idx"),
+    )
+    eng.run_to_completion()
+    got = {(r["conv_id"], r["turn_idx"]): r["Got"] for r in eng.results().collect()}
+    batch = compile_ruleset({"main.sml": sml}, bindings=TURN_BINDINGS).apply(
+        with_envelope(spark.read.parquet(in_dir)), passthrough=["conv_id", "turn_idx"]
+    )
+    want = {(r["conv_id"], r["turn_idx"]): r["Got"] for r in batch.collect()}
+    assert want == {("c1", 0): "zzz", ("c1", 1): "zzz", ("c1", 2): "zzz"}
+    assert got == want
+
+
+# every role writes its text under the role; every row reads the latest
+# live 'tool' write, whichever conversation made it
+CROSS_KEY_SML = """
+R: str = JsonData(path='$.role')
+Text: str = JsonData(path='$.text')
+CacheSetStr(key=R, value=Text, ttl_seconds=600.0)
+LastTool = CacheGetStr(key='tool', default='none')
+"""
+
+
+def test_cross_key_cache_stream_equals_batch(spark, tmp_path):
+    """The cross-keyed CacheGet streams as one state pass and equals
+    batch over a two-batch split."""
+    rs, in_dir = _stream_vs_batch(spark, tmp_path, CROSS_KEY_SML, ["LastTool"])
+    stream = spark.readStream.schema(spark.read.parquet(in_dir).schema).parquet(in_dir)
+    out = rs().apply(with_envelope(stream), passthrough=["conv_id", "turn_idx"])
+    assert _n_fused_passes(out) == 1
+
+
+def test_cross_key_cache_survives_restart(spark, tmp_path):
+    """Kill after batch 1, restart a new engine on the same checkpoint:
+    the writes keyed by role resume and the post-restart reads equal
+    batch."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    t = generate_turns(spark, n_convs=6, turns_per_conv=8, hot_convs=0, late_fraction=0.0)
+
+    def run():
+        eng = StreamingRuleEngine(
+            spark,
+            compile_ruleset({"main.sml": CROSS_KEY_SML}, bindings=TURN_BINDINGS),
+            in_dir, out_dir, passthrough=("conv_id", "turn_idx"),
+        )
+        eng.run_to_completion()
+        return eng
+
+    t.filter(F.col("turn_idx") < 4).coalesce(1).write.mode("append").parquet(in_dir)
+    run()
+    t.filter(F.col("turn_idx") >= 4).coalesce(1).write.mode("append").parquet(in_dir)
+    got = {(r["conv_id"], r["turn_idx"]): r["LastTool"] for r in run().results().collect()}
+    batch = compile_ruleset({"main.sml": CROSS_KEY_SML}, bindings=TURN_BINDINGS).apply(
+        with_envelope(spark.read.parquet(in_dir)), passthrough=["conv_id", "turn_idx"]
+    )
+    want = {(r["conv_id"], r["turn_idx"]): r["LastTool"] for r in batch.collect()}
+    assert got == want and len(want) == 48
+    assert len(set(want.values())) > 2
+
+
+# tests/fixtures/cross_key_cache_ckpt: a checkpoint (``ckpt/``) written
+# by the former standalone cross-keyed cache resolver — state grouped by
+# ``__cbkt`` in ``latest_json`` as a {key: [ts, idx, exp, val]} map —
+# with CROSS_KEY_SML, 8 state buckets (balanced labels) and 4 shuffle
+# partitions over one batch (``in/``: c1 tool 't1' at 10:00, c1 user
+# 'u1' at 10:05, c2 tool 't2' at 10:06). Its source log names the input
+# as file:///fixture/in/...; the test points that at its own copy.
+LEGACY_CROSS_KEY_CACHE_CKPT = os.path.join(
+    os.path.dirname(__file__), "fixtures", "cross_key_cache_ckpt"
+)
+
+
+def test_legacy_cross_key_cache_checkpoint_resumes_exactly(spark, tmp_path, monkeypatch):
+    """Upgrade safety: the standalone cross-keyed resolver's checkpoint
+    resumes on the fused pass: a read after the restart sees the write
+    made before it, and the write still expires on time."""
+    import json
+
+    monkeypatch.setenv("OSPREY_WC_STATE_BUCKETS", "8")
+    shutil.copytree(LEGACY_CROSS_KEY_CACHE_CKPT, tmp_path, dirs_exist_ok=True)
+    log = tmp_path / "ckpt" / "sources" / "0" / "0"
+    log.write_text(log.read_text().replace("file:///fixture/", f"file://{tmp_path}/"))
+    entry = json.loads(log.read_text().splitlines()[1])
+    seen = entry["path"][len("file://"):]
+    os.utime(seen, (entry["timestamp"] / 1000, entry["timestamp"] / 1000))
+    in_dir = str(tmp_path / "in")
+    _write_rows(spark, in_dir, [
+        ("c1", 2, "assistant", "a1", None, "2024-01-01 10:10:00"),
+        ("c2", 1, "user", "u2", None, "2024-01-01 10:20:00"),
+        ("c3", 0, "tool", "t3", "exec", "2024-01-01 10:21:00"),
+    ])
+    eng = StreamingRuleEngine(
+        spark,
+        compile_ruleset({"main.sml": CROSS_KEY_SML}, bindings=TURN_BINDINGS),
+        in_dir,
+        str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        passthrough=("conv_id", "turn_idx"),
+    )
+    eng.run_to_completion()
+    got = {(r["conv_id"], r["turn_idx"]): r["LastTool"] for r in eng.results().collect()}
+    assert got == {("c1", 2): "t2", ("c2", 1): "none", ("c3", 0): "t3"}
+
+
+# --------------------------------------------------------------------------
 # ruleset hot-swap: the composite state is keyed by op identity
 # --------------------------------------------------------------------------
 
